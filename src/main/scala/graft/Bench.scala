@@ -255,8 +255,9 @@ object Bench {
         // round forever (the same poison as the regressed map; the
         // window is consumed by parsePriorWindow, median-not-min)
         .replaceAll("\"prior_window\":\\{[^}]*\\}?", "")
-        // suppressed_in_band pairs carry the same [current, prior] shape
-        // as regressed — same poison, same strip
+        // suppressed_in_band pairs (published by artifacts from before
+        // the adjudicated bands were removed) carry the same [current,
+        // prior] shape as regressed — same poison, same strip
         .replaceAll("\"suppressed_in_band\":\\{[^}]*\\}?", "")
       // accept both shapes: `"q_x":0.12` (queries map) and
       // `"q_x":[0.12,0.3]` (iterations map) — min per name wins. The
@@ -319,77 +320,14 @@ object Bench {
   private[graft] def rollWindow(prior: Seq[Double], v: Option[Double]): Seq[Double] =
     v.fold(prior)(x => (prior :+ x).takeRight(3))
 
-  /** Adjudicated steady-band ceilings (seconds). A query lands here only
-    * after the interleaved A/B (HEAD vs the prior round's commit, same
-    * box, pairs interleaved) has ruled old == new on the SAME swing in
-    * at least two separate rounds — i.e. the measurement itself is
-    * bimodal (JIT/page-cache floor vs steady figure), not the code. The
-    * guard suppresses a flag whose current min sits at or under the
-    * ceiling: re-flagging inside an adjudicated band re-litigates a
-    * closed question every time two fast rounds poison the window
-    * median. A min ABOVE the ceiling still trips normally, so a real
-    * regression on these paths is caught — the band is finite.
-    * Ledger: PLANS.md rounds 14, 15, 16, 18. */
-  private[graft] val adjudicatedCeiling: Map[String, Double] = Map(
-    // r14/r15/r16/r18 A/Bs: steady 1.3-1.6 s; the 0.86-0.92 s window
-    // entries are the outlier-fast mode
-    "q_neardup_jaccard" -> 1.70,
-    // r18 A/B (shares the exactJaccardPairs stage with the above):
-    // HEAD 1.17/1.36 vs r17 1.33/1.10 — same bimodal floor. r20: two
-    // more same-box A/Bs (HEAD vs r18 close, HEAD vs the pre-deque
-    // snapshot) measure old == new with QuickTime mins 1.11-1.25, yet
-    // two quiet r20 sweeps read 1.77/1.85 — the slow mode's observed
-    // ambient high moved; ceiling follows it with the usual ~5% slack
-    // (the q_semdedup precedent)
-    "q_dup_sources" -> 1.90,
-    // r19 A/B (the third sharer of the exactJaccardPairs stage; the r18
-    // verdict's family-floor watch item): interleaved QuickTime pairs
-    // at cores=32, HEAD 1.73/1.82 vs the r17 close (97e4982) 1.80/2.16
-    // — old == new, the FIFTH adjudication of the same swing; the r17
-    // round's 1.40 was that box-state's fast mode (jaccard's 0.87
-    // analog). Steady band 1.7-2.2, same ~5% slack as the others
-    "q_neardup_keep_best" -> 2.30,
-    // r15 A/B: HEAD 2.11 vs r14 2.01; steady ≈ 2.1 s, observed ambient
-    // highs to 2.37 (r18) — same ~5% slack over the band as the others
-    "q_semdedup" -> 2.45)
-
-  /** The ceilings the RUNNING bench applies: [[adjudicatedCeiling]],
-    * unless SPARK_GRAFT_BENCH_BANDS=off disables suppression for the
-    * run (r18 advisor finding: a hard-coded band could mask a genuine
-    * regression whose min lands at or under the ceiling, with no way
-    * to re-arm the guard short of a source edit). */
-  private[graft] def effectiveCeilings: Map[String, Double] =
-    if (sys.env.get("SPARK_GRAFT_BENCH_BANDS").exists(_.equalsIgnoreCase("off")))
-      Map.empty
-    else adjudicatedCeiling
-
   /** The cross-round guard's trip condition, shared by the re-run
     * trigger and the final `regressed` field: a prior exists, clears
     * the 0.1 s floor (sub-100 ms priors double on codegen-cache jitter
-    * alone), the current min exceeds it by the factor, and the min is
-    * not inside the query's adjudicated steady band (see
-    * [[adjudicatedCeiling]]; the ceilings default to
-    * [[effectiveCeilings]] so a call site that omits the param still
-    * honors SPARK_GRAFT_BENCH_BANDS=off — r19 advisor finding: the old
-    * adjudicatedCeiling default silently ignored the override). */
+    * alone), and the current min exceeds it by the factor. */
   private[graft] def crossRoundRegressed(
       name: String, prior: Option[Double], currentMin: Double,
-      factor: Double,
-      ceilings: Map[String, Double] = effectiveCeilings): Boolean =
-    prior.exists(p => p > 0.1 && currentMin > p * factor &&
-      currentMin > ceilings.getOrElse(name, 0.0))
-
-  /** A flag the band SUPPRESSED: would trip the raw guard (no ceiling)
-    * but sits at or under the adjudicated ceiling. Published in the
-    * artifact's `suppressed_in_band` field (and as a stderr notice) so
-    * a masked flag stays visible to the round reader instead of
-    * silently vanishing into the band (r18 advisor finding). */
-  private[graft] def suppressedInBand(
-      name: String, prior: Option[Double], currentMin: Double,
-      factor: Double,
-      ceilings: Map[String, Double] = effectiveCeilings): Boolean =
-    crossRoundRegressed(name, prior, currentMin, factor, Map.empty) &&
-      !crossRoundRegressed(name, prior, currentMin, factor, ceilings)
+      factor: Double): Boolean =
+    prior.exists(p => p > 0.1 && currentMin > p * factor)
 
   /** Run replay in its own JVM; None if the fork cannot run or its
     * output cannot be parsed (the caller then measures in-process). */
@@ -598,10 +536,9 @@ object Bench {
     // the >0.1 s floor below
     val crossFactor =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_CROSS_FACTOR", "1.5").toDouble
-    val ceilings = effectiveCeilings
     val results = spreadAdjusted.map {
       case (name, Right(ts), _)
-          if crossRoundRegressed(name, effectivePrior(name), ts.min, crossFactor, ceilings) =>
+          if crossRoundRegressed(name, effectivePrior(name), ts.min, crossFactor) =>
         val p = effectivePrior(name).get
         System.err.println(
           f"bench: $name min ${ts.min}%.2fs is ${ts.min / p}%.1fx its prior-round $p%.2fs — re-running once")
@@ -639,18 +576,7 @@ object Bench {
     // diff artifacts by hand (the r12 q_ingest adjudication).
     val regressed = results.collect {
       case (k, Right(ts), _)
-          if crossRoundRegressed(k, effectivePrior(k), ts.min, crossFactor, ceilings) =>
-        s"${jstr(k)}:[${fmt(ts.min)},${fmt(effectivePrior(k).get)}]"
-    }.mkString("{", ",", "}")
-    // flags the adjudicated bands masked this round ([current, prior]
-    // pairs, same shape as regressed): visible in the artifact and on
-    // stderr, never silently swallowed by the band
-    val suppressed = results.collect {
-      case (k, Right(ts), _)
-          if suppressedInBand(k, effectivePrior(k), ts.min, crossFactor, ceilings) =>
-        System.err.println(
-          f"bench: $k min ${ts.min}%.2fs exceeds prior ${effectivePrior(k).get}%.2fs ×$crossFactor%.1f " +
-            f"but sits inside its adjudicated band (ceiling ${ceilings(k)}%.2fs) — flag suppressed")
+          if crossRoundRegressed(k, effectivePrior(k), ts.min, crossFactor) =>
         s"${jstr(k)}:[${fmt(ts.min)},${fmt(effectivePrior(k).get)}]"
     }.mkString("{", ",", "}")
     // roll each query's window forward ([[rollWindow]]): prior rounds'
@@ -683,7 +609,7 @@ object Bench {
       if (r1Results.exists(_._3.isDefined)) -1.0 else r1Results.map(_._2).sum
     val replayIters = replaySecs.map(fmt).mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs,"iterations":$iters,"reran":$reran,"regressed":$regressed,"suppressed_in_band":$suppressed,"baseline_subset_total":${fmt(r1Subset)},"replay_events":$replayEvents,"replay_sec":$replaySec,"replay_iterations":$replayIters,"replay_msgs_per_sec":$replayRate,"replay_mode":"$replayMode","replay_reran":$replayReran,"prior_window":$priorWindow,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs,"iterations":$iters,"reran":$reran,"regressed":$regressed,"baseline_subset_total":${fmt(r1Subset)},"replay_events":$replayEvents,"replay_sec":$replaySec,"replay_iterations":$replayIters,"replay_msgs_per_sec":$replayRate,"replay_mode":"$replayMode","replay_reran":$replayReran,"prior_window":$priorWindow,"sf":"$sfDir"}"""
     println(line)
     // persist the full line: the driver's BENCH_r*.json keeps only an
     // output tail, and the cross-round guard needs last round's mins.

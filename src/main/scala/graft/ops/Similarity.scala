@@ -18,21 +18,23 @@ import org.apache.spark.sql.functions._
   *
   * == Choosing a rung of the persisted-index payload ladder ==
   *
-  * Four IVF layouts persist under the same generation-pointer root
-  * discipline, trading index bytes (and probe arithmetic) for score
-  * fidelity — all bucket-routed on the ORIGINAL float vector, so
-  * routing recall is identical across rungs and the ladder only moves
-  * the re-rank:
+  * Every persisted index is an [[IndexLayout]] value driven through one
+  * seam: [[writeIndex]], [[ingestIndexStream]], [[probeIndex]] and
+  * [[compactIndex]], all under the same generation-pointer root
+  * discipline. Four IVF layouts trade index bytes (and probe
+  * arithmetic) for score fidelity — all bucket-routed on the ORIGINAL
+  * float vector, so routing recall is identical across rungs and the
+  * ladder only moves the re-rank:
   *
-  *  1. FLOAT ([[writeIvfIndex]]) — 4·dim bytes/vector, exact cosine
+  *  1. FLOAT ([[IvfFloat]]) — 4·dim bytes/vector, exact cosine
   *     re-rank: recall at a given nProbe is the IVF routing itself.
   *     Build this when the index fits your page-cache budget.
-  *  2. INT8 ([[writeIvfIndexQuantized]]) — dim bytes (~4× smaller,
+  *  2. INT8 ([[IvfInt8]]) — dim bytes (~4× smaller,
   *     spec-pinned < 0.6× float on disk), ≤ half-step/dimension error.
   *     The default rung: on the near-random fixture its recall curve
   *     tracks float EXACTLY through nProbe=8 and gives up 0.012 at
   *     nProbe=16 (RecallProbe r16) for ~3× fewer bytes on disk.
-  *  3. PQ ([[writeIvfIndexPq]]) — m bytes (32× vs float at dim=64,
+  *  3. PQ ([[IvfPq]]) — m bytes (32× vs float at dim=64,
   *     m=8; spec-pinned < 0.6× int8 on disk) and the first rung whose
   *     PROBE cost drops too: O(m) ADC table reads per row instead of
   *     dim multiplies. Costs real recall on near-random corpora
@@ -44,7 +46,7 @@ import org.apache.spark.sql.functions._
   *     0.13-0.21 at EVERY nProbe while float reaches 1.0) — PQ cannot
   *     rank WITHIN near-dup neighborhoods; keep float/int8 there, or
   *     semantic-dedup first so the neighborhoods collapse.
-  *  4. RESIDUAL PQ ([[writeIvfIndexPqResidual]], the FAISS IVF-PQ
+  *  4. RESIDUAL PQ ([[IvfPqResidual]], the FAISS IVF-PQ
   *     construction) — same bytes as raw PQ, codebooks trained on
   *     v̂ − centroid: on CLUSTERED corpora (residual ball ≪ unit
   *     shell) the same m/ksub budget cut mean |adc − cosine| 6.7×
@@ -59,9 +61,9 @@ import org.apache.spark.sql.functions._
   * their only loss) but saturates the PQ rungs almost immediately —
   * their loss is quantization, which probed volume cannot recover. At
   * corpus-proportional bucket counts use the hierarchical build
-  * ([[writeIvfIndexHier]]) so assignment stays ~√k per row.
+  * ([[IvfFloatHier]]) so assignment stays ~√k per row.
   *
-  * The LSH index ([[writeLshIndex]]) sits BESIDE the IVF ladder, not
+  * The LSH index ([[Lsh]]) sits BESIDE the IVF ladder, not
   * on it: its loss is CANDIDATE-SET (a true neighbor must collide with
   * the query in ≥1 band; the re-rank is exact cosine on the stored
   * float vector) where IVF's is routing, so recall moves with banding
@@ -111,8 +113,8 @@ object Similarity {
     * queries×k rows. The union-of-heaps form is right for a bounded
     * query batch (each branch stays whole-stage-codegen'd with its own
     * pushed filter); a HIGH-volume query stream instead probes the
-    * persisted LSH/IVF indexes ([[probeLshIndex]] /
-    * [[probeIvfIndexQuantized]], optionally predicate-filtered) where
+    * persisted LSH/IVF indexes ([[probeIndex]] over an [[Lsh]] or
+    * [[IvfInt8]] layout, optionally predicate-filtered) where
     * per-query cost is corpus-independent — this operator is the exact
     * baseline those paths are verified against.
     *
@@ -472,7 +474,7 @@ object Similarity {
   /** The `nProbe` bucket ids nearest to `queryVec` by centroid dot
     * product (centroids are unit-norm, so the query's norm is a constant
     * factor across buckets) — the single probe-selection used by BOTH
-    * [[ivfTopK]] and [[probeIvfIndex]], so their documented equivalence
+    * [[ivfTopK]] and the IVF layouts' [[probeIndex]], so their documented equivalence
     * cannot drift. */
   private def nearestBuckets(
       queryVec: Array[Float],
@@ -515,8 +517,9 @@ object Similarity {
     * O(rows·k·dim); this is O(rows·(coarse + probes·fine/coarse)·dim) —
     * ~√k per row at coarse ≈ √k. Bucket ids are GLOBAL fine-table
     * indices, the same id space flat assignment over `model.fine` would
-    * produce, so [[probeIvfIndex]] probes the resulting index unchanged
-    * (pass `model.fine` as its centroid table); with
+    * produce, so [[probeIndex]] probes the resulting index unchanged
+    * (as an [[IvfFloat]] over `model.fine`, or the [[IvfFloatHier]]
+    * layout itself); with
     * `probes >= model.coarse.length` the assignment — and therefore the
     * whole index layout — EQUALS the flat build bit-for-bit
     * (spec-pinned, the kernel's exact anchor). Fewer probes trade
@@ -535,26 +538,6 @@ object Similarity {
           col(vecCol), model.coarse, model.fine, model.fineCell, probes, 1),
         1))
   }
-
-  /** [[writeIvfIndex]] with hierarchical assignment — same
-    * [[Generations]] layout, same probe path (probe with `model.fine`
-    * as the centroid table), √k build cost per row instead of k. See
-    * [[assignBucketsHier]] for the equality anchor and the recall
-    * trade. */
-  def writeIvfIndexHier(
-      emb: DataFrame,
-      vecCol: String,
-      model: HierCentroids,
-      path: String,
-      probes: Int = 2): Unit =
-    newGeneration(emb.sparkSession, path, "ivf-float") { gen =>
-      spreadForWrite(assignBucketsHier(emb, vecCol, model, probes),
-          model.fine.length, col("bucket")) // files ∝ buckets — see writeIvfIndex
-        .write
-        .partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(s"$gen/base")
-    }
 
   /** IVF approximate top-k: score the query against the centroids
     * driver-side, scan only the `nProbe` nearest buckets, exact re-rank
@@ -643,7 +626,7 @@ object Similarity {
       // columns feed the salt (hash expressions reject MapType), with
       // backtick-quoted names (a dotted column name would otherwise
       // parse as a nested-field access): payload columns ride into
-      // every index (compressedKeep, writeLshIndex's col("*")) and a
+      // every index (compressedKeep, the Lsh layout's col("*")) and a
       // legal map/dotted payload must not fail the build. Degenerate
       // all-map schema → salt on the partition cols alone (no spread,
       // but the write still succeeds — such a payload dwarfs the index
@@ -851,14 +834,14 @@ object Similarity {
     * The flavor marker exists because two layouts can share a SCHEMA
     * while their bytes mean different things (raw-PQ vs residual-PQ
     * codes): [[requireLayoutMatch]] cannot see tensor provenance, so
-    * ingesters and the ambiguous probes check the marker — a
+    * ingesters, probes and compactions check the marker — a
     * wrong-flavor append would decode as plausible-looking garbage
     * forever, silently. Written INSIDE the generation before its done
     * flip, so it is exactly as atomic as the data. */
   /** Shared batch-producer front: run `body` as a locked
     * [[Generations.rebuild]] and stamp the generation's flavor marker
     * inside the same pre-flip window. FS CONTRACT (applies to every
-    * `writeIvfIndex*`/`writeLshIndex` caller): producer mutual
+    * [[writeIndex]] call): producer mutual
     * exclusion needs atomic create-exclusive on the index root's
     * filesystem — [[Generations.acquireLock]] refuses object-store
     * roots unless producers are serialized externally and
@@ -1034,7 +1017,7 @@ object Similarity {
   /** Shared streaming-producer front: acquire the root's `_GEN_LOCK`
     * for the STREAM'S LIFETIME, resolve + layout-check + flavor-check
     * the live generation under it, start the query, release on
-    * termination. FS CONTRACT (applies to every `ingest*Stream` caller):
+    * termination. FS CONTRACT (applies to every [[ingestIndexStream]]):
     * the lifetime lock needs atomic create-exclusive on the index
     * root's filesystem — [[Generations.acquireLock]] refuses
     * object-store roots unless producers are serialized externally and
@@ -1098,178 +1081,311 @@ object Similarity {
     new LockedIngestQuery(query, () => release())
   }
 
-  /** Persist the corpus as an on-disk IVF index: one directory partition
-    * per centroid bucket (`.partitionBy("bucket")`), so a probe becomes a
-    * PARTITION-PRUNED scan — the nProbe/k read fraction is enforced by
-    * the file layout, not a post-scan filter. This is the materialized
-    * form of the [[ivfTopK]] pipeline for corpora queried repeatedly. */
-  /** Index layout under `path`: [[Generations]] directories, the live
-    * one holding `base/bucket=N` (this batch build) and optionally
-    * `streamed/bucket=N` ([[ingestIvfIndexStream]]'s continuous
-    * appends). `base` and `streamed` are sibling roots inside the
-    * generation because they cannot share one: the streaming parquet
-    * sink's `_spark_metadata` log would make batch reads ignore every
-    * file it didn't commit, and a foreign subdirectory under one
-    * partitioned root breaks partition discovery. [[probeIvfIndex]]
-    * unions both, bucket-pruned on each. A REBUILD over an existing
-    * index writes the next generation and flips atomically — probes in
-    * flight keep their generation.
+
+  // ---- persisted ANN indexes: one layout-driven seam ---------------------
+
+  /** How one persisted ANN index lays out its rows — the only thing that
+    * differs between the index flavors. They all run one scheme
+    * (REPOSE, ICDE 2021; streaming similarity search, EDBT 2019):
+    * partition the corpus, persist each partition, prune a probe to the
+    * query's partitions, re-rank the survivors. A layout holds:
+    *  - `flavor`: the tag [[newGeneration]] stamps into every generation
+    *    the layout writes, checked by every ingest, probe and compaction
+    *    — two layouts can share a schema while their bytes mean
+    *    different things (raw vs residual PQ codes), and a wrong-flavor
+    *    reader would decode plausible-looking garbage;
+    *  - `partitionCols` and `partValues`: the directory partitioning and
+    *    its value count ([[spreadForWrite]]'s file-count target,
+    *    [[prunedPartitionRead]]'s dense-probe threshold);
+    *  - `rows`: the ONE map-side projection both [[writeIndex]] and
+    *    [[ingestIndexStream]] run, so base and streamed rows are the same
+    *    computation by construction;
+    *  - `probe`: the partition subpaths one query reads, their partition
+    *    predicate (the semantic guard, which also prunes the `streamed/`
+    *    union) and the score column;
+    *  - `dedupe`: whether a candidate id can repeat across the probed
+    *    partitions (LSH stores each vector once per band).
+    * One value writes, ingests, probes and compacts its index. */
+  sealed abstract class IndexLayout(
+      val flavor: String, val partitionCols: Seq[String], val partValues: Int) {
+    def idCol: String
+    def rows(emb: DataFrame): DataFrame
+    private[ops] def probe(queryVec: Array[Float], nProbe: Int): IndexProbe
+    private[ops] def dedupe: Boolean = false
+  }
+
+  /** One query's pruned read: partition subpaths, their predicate, the score. */
+  private[ops] final case class IndexProbe(parts: Seq[String], filter: Column, score: Column)
+
+  /** The IVF rungs: one `bucket=` partition per centroid, and every rung
+    * routes on the ORIGINAL float vector — routing recall is identical
+    * across rungs, only the stored payload and the score change. A probe
+    * reads the `nProbe` buckets nearest the query ([[nearestBuckets]],
+    * the same selection [[ivfTopK]] makes). */
+  sealed abstract class IvfLayout(flavor: String, centroids: Array[Array[Float]])
+      extends IndexLayout(flavor, Seq("bucket"), centroids.length) {
+    protected def score(queryVec: Array[Float], buckets: Array[Int]): Column
+    private[ops] def probe(queryVec: Array[Float], nProbe: Int): IndexProbe = {
+      val buckets = nearestBuckets(queryVec, centroids, nProbe)
+      IndexProbe(buckets.toSeq.map(b => s"bucket=$b"), col("bucket").isin(buckets.toSeq: _*),
+        score(queryVec, buckets))
+    }
+  }
+
+  /** FLOAT rung: every input column plus `bucket`, exact cosine re-rank —
+    * recall at a given nProbe is the routing itself. Probed with the
+    * centroids [[ivfTopK]] trains and `excludeId`, it answers exactly as
+    * [[ivfTopK]] does. Rows with NULL/ragged vectors keep a NULL score
+    * and sort last, as in [[ivfTopK]]. */
+  final case class IvfFloat(idCol: String, vecCol: String, centroids: Array[Array[Float]])
+      extends IvfLayout("ivf-float", centroids) {
+    def rows(emb: DataFrame): DataFrame = assignBuckets(emb, vecCol, centroids)
+    protected def score(q: Array[Float], buckets: Array[Int]): Column = exactCosine(vecCol, q)
+  }
+
+  /** [[IvfFloat]] built through a two-level model: √k assignment cost per
+    * row instead of k ([[assignBucketsHier]] holds the equality anchor
+    * and the recall trade). Bucket ids index `model.fine`, so the index
+    * probes exactly like an [[IvfFloat]] over `model.fine`, flavor
+    * included. */
+  final case class IvfFloatHier(
+      idCol: String, vecCol: String, model: HierCentroids, probes: Int = 2)
+      extends IvfLayout("ivf-float", model.fine) {
+    def rows(emb: DataFrame): DataFrame = assignBucketsHier(emb, vecCol, model, probes)
+    protected def score(q: Array[Float], buckets: Array[Int]): Column = exactCosine(vecCol, q)
+  }
+
+  /** INT8 rung: `(id[, payloadCols], bucket, scale, codes)`, about 4×
+    * smaller on disk than float with ≤ half a step of error per
+    * dimension. The score dequantizes inside the compiled cosine kernel
+    * (`code·scale/127`, [[graft.functions.VectorKernels.int8Cosine]]);
+    * an empty query scores NULL, the cosine posture. `payloadCols` are
+    * opt-in so a filtered probe evaluates against the index alone
+    * without a wide payload eating the compression. */
+  final case class IvfInt8(
+      idCol: String, vecCol: String, centroids: Array[Array[Float]],
+      payloadCols: Seq[String] = Nil)
+      extends IvfLayout("ivf-int8", centroids) {
+    def rows(emb: DataFrame): DataFrame = {
+      val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("scale", "codes", "_graft_q"))
+      // the quantize struct lands in its own projection first, so the
+      // kernel runs once per row even without subexpression elimination
+      assignBuckets(emb, vecCol, centroids)
+        .select(keep.map(col) :+
+          graft.functions.native.quantizeInt8(col(vecCol)).as("_graft_q"): _*)
+        .select(keep.map(col) :+
+          col("_graft_q.scale").as("scale") :+ col("_graft_q.codes").as("codes"): _*)
+    }
+    protected def score(q: Array[Float], buckets: Array[Int]): Column =
+      if (q.isEmpty) lit(null).cast("double")
+      else graft.functions.native.int8Cosine(col("codes"), col("scale"), q)
+  }
+
+  /** PQ rung: `(id[, payloadCols], bucket, codes: m bytes)` — the first
+    * rung whose probe cost drops too: asymmetric distance computation
+    * tabulates the query's per-(subspace, code) partials once
+    * driver-side ([[adcTables]]), then each row costs `m` table reads
+    * ([[graft.functions.native.pqAdcScore]]). `cos_sim` is the cosine
+    * between the query and the reconstruction the codes name. Codebooks
+    * are frozen at build time: streamed rows encode against exactly the
+    * tensor the probe's tables come from; retrain and rebuild when drift
+    * costs recall. Rows whose vector cannot encode (NULL, ragged,
+    * zero-norm) and zero/ragged queries score NULL. */
+  final case class IvfPq(
+      idCol: String, vecCol: String, centroids: Array[Array[Float]], pq: PqCodebooks,
+      payloadCols: Seq[String] = Nil)
+      extends IvfLayout("pq-raw", centroids) {
+    require(!pq.isEmpty, "a PQ index layout needs trained (non-empty) codebooks")
+    def rows(emb: DataFrame): DataFrame = {
+      val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("codes"))
+      assignBuckets(emb, vecCol, centroids).select(keep.map(col) :+
+        graft.functions.native.pqEncode(col(vecCol), pq.books).as("codes"): _*)
+    }
+    protected def score(q: Array[Float], buckets: Array[Int]): Column =
+      adcTables(q, pq).fold(lit(null).cast("double"))(
+        graft.functions.native.pqAdcScore(col("codes"), _, pq.m, pq.ksub))
+  }
+
+  /** RESIDUAL-PQ rung (the FAISS IVF-PQ construction): the same on-disk
+    * columns as [[IvfPq]], but the codes name the row's offset from its
+    * OWN centroid, with bucket and codes from one compiled pass
+    * ([[graft.functions.native.pqEncodeResidual]]) so they cannot
+    * disagree. Train its codebooks with [[trainPqResidual]]. The score
+    * is the ADC cosine against `cent_b + recon(codes)`, with per-probe
+    * tables ([[adcTablesResidual]]) keeping the per-row cost at `m`
+    * reads. Same schema as raw PQ, so only the flavor marker tells the
+    * two roots apart. */
+  final case class IvfPqResidual(
+      idCol: String, vecCol: String, centroids: Array[Array[Float]], pq: PqCodebooks,
+      payloadCols: Seq[String] = Nil)
+      extends IvfLayout("pq-residual", centroids) {
+    require(!pq.isEmpty, "a PQ index layout needs trained (non-empty) codebooks")
+    require(centroids.forall(_.length == pq.m * pq.dsub),
+      s"centroids must be ${pq.m * pq.dsub}-dimensional to match the codebooks")
+    def rows(emb: DataFrame): DataFrame = {
+      val payload = compressedKeep(emb, idCol, vecCol, payloadCols, Set("codes", "_graft_pqr"))
+        .filterNot(_ == "bucket")
+      val enc = graft.functions.native.pqEncodeResidual(col(vecCol), centroids, pq.books)
+      emb.select(payload.map(col) :+ enc.as("_graft_pqr"): _*)
+        .select(payload.map(col) :+
+          col("_graft_pqr.bucket").as("bucket") :+ col("_graft_pqr.codes").as("codes"): _*)
+    }
+    protected def score(q: Array[Float], buckets: Array[Int]): Column =
+      adcTablesResidual(q, centroids, buckets, pq).fold(lit(null).cast("double"))(
+        graft.functions.native.pqAdcScoreResidual(
+          col("codes"), col("bucket").cast("int"), buckets, _, pq.m, pq.ksub))
+  }
+
+  /** The LSH index, beside the IVF ladder rather than on it: one row per
+    * (vector, band), partitioned by `(band, sig)` with every input
+    * column riding along — bands× the corpus on disk. A probe reads
+    * exactly its own signature's leaf in each band (driver-side
+    * signatures through the executors' kernel, [[driverSignatures]]),
+    * dedupes ids that collide in several bands, and re-ranks by exact
+    * cosine; with `excludeId` it answers exactly as [[lshTopK]] at the
+    * same (bands, bitsPerBand, seed). Its loss is candidate-set
+    * collision, fixed by the banding at build time, so `nProbe` is not
+    * consulted. `dim` is the corpus dimension: 0 detects it from a batch
+    * input; a stream ingest must pass it, and dim and the banding must
+    * repeat the base build's or stream and base signatures diverge. */
+  final case class Lsh(
+      idCol: String, vecCol: String, bands: Int = 16, bitsPerBand: Int = 8,
+      seed: Int = 1000, dim: Int = 0)
+      extends IndexLayout("lsh", Seq("band", "sig"),
+        // long math capped at Int.MaxValue: an Int `1 << bits` wraps at
+        // bits ≥ 31; the count only matters when it is small
+        math.min(bands.toLong * (1L << math.min(bitsPerBand, 30)), Int.MaxValue.toLong).toInt) {
+    def rows(emb: DataFrame): DataFrame = {
+      require(dim > 0 || !emb.isStreaming, "an LSH stream ingest needs the corpus `dim`")
+      val d = if (dim > 0) dim else detectDim(emb, vecCol)
+      require(d > 0, "cannot LSH-index an empty / all-null corpus")
+      emb.select(col("*"), posexplode(graft.functions.native
+        .hyperplaneSignatures(col(vecCol), bands, bitsPerBand, d, seed)).as(Seq("band", "sig")))
+    }
+    private[ops] def probe(queryVec: Array[Float], nProbe: Int): IndexProbe = {
+      val sigs = driverSignatures(queryVec, bands, bitsPerBand, seed)
+      IndexProbe((0 until bands).map(b => s"band=$b/sig=${sigs(b)}"),
+        (0 until bands).map(b => col("band") === b && col("sig") === sigs(b)).reduce(_ || _),
+        exactCosine(vecCol, queryVec))
+    }
+    override private[ops] def dedupe: Boolean = true
+  }
+
+  private def exactCosine(vecCol: String, q: Array[Float]): Column =
+    graft.functions.native.cosineSim(col(vecCol), typedLit(q.toSeq))
+
+  /** Persist `emb` as a `layout` index under `path`: [[Generations]]
+    * directories, the live one holding `base/` (this build) and
+    * optionally `streamed/` ([[ingestIndexStream]]'s appends). They are
+    * sibling roots because they cannot share one: the streaming sink's
+    * `_spark_metadata` log would make batch reads ignore every file it
+    * did not commit, and a foreign subdirectory under one partitioned
+    * root breaks partition discovery. The write is one pass grouped by
+    * the partition columns, so files grow with partitions, not
+    * tasks×partitions (probe-time listing otherwise grows with the
+    * partition count — the r16 hier-ivf-probe 4.05× flag in ScaleProbe
+    * 2f); [[spreadForWrite]] keeps it parallel at small counts.
     *
-    * REBUILD CONTRACT: the new generation indexes exactly `emb` —
-    * nothing is carried over from the old one, INCLUDING its
-    * `streamed/` appends (under retrained centroids their old bucket
-    * assignments would be wrong anyway; verbatim carry-over would make
-    * probes silently miss them). Stop the ingest stream first — a live
-    * one holds the root's `_GEN_LOCK`, so this rebuild fails fast
-    * rather than stranding its appends — and if
-    * the streamed rows are not re-derivable from the upstream source
-    * (their offsets are committed in the ingest checkpoint), fold them
-    * in by including the CURRENT index's vectors in `emb` — otherwise
-    * they retire with the old generation at the next sweep. */
-  def writeIvfIndex(
-      emb: DataFrame,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      path: String): Unit =
-    newGeneration(emb.sparkSession, path, "ivf-float") { gen =>
-      // one writer pass grouped by the partition column — files ∝
-      // buckets, not tasks×buckets (the compacted layout compactIndex
-      // restores after streaming appends; without it a 32-task build at
-      // 512 buckets emits ~16K KB-sized files, and PROBE-time file
-      // listing then grows with bucket count instead of probed volume —
-      // measured as the r16 hier-ivf-probe 4.05× flag in ScaleProbe 2f);
-      // spreadForWrite keeps the write parallel at small bucket counts
-      spreadForWrite(assignBuckets(emb, vecCol, centroids),
-          centroids.length, col("bucket"))
+    * REBUILD CONTRACT: a write over an existing index opens the next
+    * generation and flips atomically — probes in flight keep theirs.
+    * The new generation indexes exactly `emb`, INCLUDING dropping the
+    * old `streamed/` appends (retrained centroids would route them
+    * elsewhere anyway). Stop the ingest first — a live one holds the
+    * root's `_GEN_LOCK`, so this write fails fast rather than stranding
+    * its appends — and fold appends the source cannot re-derive back in
+    * by including the current index's rows in `emb`. FS CONTRACT:
+    * producer exclusion needs atomic create-exclusive on the root's
+    * filesystem; [[Generations.acquireLock]] refuses object-store roots
+    * unless producers are serialized externally and
+    * `-Dgraft.generations.allowNonAtomicFs=true` says so. */
+  def writeIndex(emb: DataFrame, layout: IndexLayout, path: String): Unit = {
+    val rows = layout.rows(emb) // validates payloadCols before a generation opens
+    newGeneration(emb.sparkSession, path, layout.flavor) { gen =>
+      spreadForWrite(rows, layout.partValues, layout.partitionCols.map(col): _*)
         .write
-        .partitionBy("bucket")
+        .partitionBy(layout.partitionCols: _*)
         .mode("overwrite")
         .parquet(s"$gen/base")
     }
+  }
 
-  /** Continuous index ingestion: arriving embeddings are assigned to
-    * their IVF bucket (same `nearest_centroid` kernel as the batch
-    * build — map-side, no shuffle) and appended bucket-partitioned under
-    * the live generation's `streamed/` directory, exactly-once via the
-    * streaming parquet sink's commit log. Probes see new vectors as
-    * soon as their batch commits — the index stays fresh without
-    * rebuilds; re-train centroids and rebuild only when drift degrades
-    * recall (the standard IVF operational trade-off; see
-    * [[writeIvfIndex]]'s rebuild contract for the streamed rows' fate).
-    * PRECONDITION: the base build must exist — resolving the live
-    * generation fails fast on an empty root (the old layout accepted a
-    * stream-first boot whose probes then failed on the missing base;
-    * failing at stream start is the honest version of that error).
-    * FS CONTRACT: the stream holds the root's `_GEN_LOCK` for its
-    * LIFETIME, and that lock's mutual exclusion needs atomic
-    * create-exclusive on the index root's filesystem —
-    * [[graft.ops.Generations.acquireLock]] refuses object-store roots
-    * unless producers are serialized externally (a scheduler or lock
-    * service) and `-Dgraft.generations.allowNonAtomicFs=true` says so.
-    * This contract is shared verbatim by every other `ingest*Stream`. */
-  def ingestIvfIndexStream(
+  /** Continuous ingestion into a `layout` index: arriving rows go through
+    * the same map-side `layout.rows` pass as the batch build and append
+    * partitioned under the live generation's `streamed/`, exactly-once
+    * via the parquet sink's commit log. Probes see them as soon as their
+    * batch commits. The generation is resolved ONCE, at start, under the
+    * root's `_GEN_LOCK`, which the stream holds for its lifetime
+    * ([[lockedIngest]]): a rebuild or compaction fails fast instead of
+    * flipping the generation under it, and a restarted stream lands in
+    * whatever generation is live then. Refused at START, before any
+    * offset commits: an empty root (build the base first), a row layout
+    * that does not match the base ([[requireLayoutMatch]]: wrong layout,
+    * or `payloadCols` that differ from the build's), a wrong flavor
+    * marker, and a checkpoint that does not belong to the live
+    * generation ([[bindIngestIdentity]]). The FS contract is
+    * [[writeIndex]]'s. */
+  def ingestIndexStream(
       emb: DataFrame,
-      vecCol: String,
-      centroids: Array[Array[Float]],
+      layout: IndexLayout,
       path: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    // the ingest generation is resolved ONCE, at stream start, UNDER the
-    // producer lock the stream then holds for its lifetime (lockedIngest):
-    // appends land in the generation that was live then, and a compaction
-    // (which requires this stream stopped — enforced by the lock) closes
-    // it — the restarted stream re-resolves and lands in the new one
     val (fs, root) = Generations.fsRoot(emb.sparkSession, path)
-    val out = assignBuckets(emb, vecCol, centroids)
-    lockedIngest(emb.sparkSession, fs, root, checkpointDir, "ingestIvfIndexStream",
-      out.schema, Set("bucket"), "ivf-float") { gen =>
+    val out = layout.rows(emb)
+    lockedIngest(emb.sparkSession, fs, root, checkpointDir, "ingestIndexStream",
+      out.schema, layout.partitionCols.toSet, layout.flavor) { gen =>
       out
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", checkpointDir)
-        .partitionBy("bucket")
+        .partitionBy(layout.partitionCols: _*)
         .format("parquet")
         .option("path", s"$gen/streamed")
         .start()
     }
   }
 
-  /** Probe a persisted IVF index: score the query against the centroids
-    * driver-side, scan ONLY the nProbe nearest bucket partitions
-    * (directory-level pruning — verified by plan/file counts in
-    * SimilaritySpec), exact re-rank within. For a query vector taken
-    * from the INDEXED corpus, pass `excludeId = Some(queryId)` — then
-    * the result equals [[ivfTopK]] with the same centroids; without it
-    * the query row ranks itself first (the right default for external
-    * query vectors, which have no id to exclude). */
-  /** `predicate` is the filtered-search parameter real vector queries
-    * almost always carry ("top-k WHERE lang = 'en'"): a Column over the
-    * index's PAYLOAD columns, applied BEFORE the re-rank and the top-k —
-    * so k counts filter survivors (re-ranking k unfiltered hits and then
-    * filtering would silently return fewer than k). Bucket pruning is
-    * unaffected (the predicate composes with, never replaces, the
-    * partition filter), and a simple column predicate additionally
-    * pushes into the parquet scan.
+  /** Top-k probe of a `layout` index: read ONLY the query's partitions of
+    * one committed generation ([[readIndex]]: directory-level pruning of
+    * `base/`, the partition predicate on the `streamed/` union), refuse a
+    * root whose flavor marker is not the layout's, then score and keep
+    * the k best as `(idCol, cos_sim)`, ordered by score descending, id
+    * ascending. `nProbe` is the IVF bucket count to read.
     *
-    * Measured (ScaleProbe, sf0.1 embeddings ×8 = 256K vectors):
-    * bucket-pruned probe wall-ratios land 0.82–1.2 at ×8 corpus across
-    * rounds — per-query cost tracks the probed buckets' volume, not
-    * the corpus, which is the IVF contract. */
-  def probeIvfIndex(
+    * `excludeId`: for a query vector taken from the INDEXED corpus pass
+    * `Some(queryId)`; without it the query row ranks itself first, the
+    * right default for external query vectors.
+    *
+    * `predicate` is the filtered-search parameter ("top-k WHERE lang =
+    * 'en'"): a Column over the index's own columns, applied BEFORE the
+    * re-rank and the top-k, so k counts filter survivors. It composes
+    * with the partition pruning and pushes into the parquet scan when
+    * simple.
+    *
+    * A mismatched `streamed/` that exists anyway (hand-written, legacy)
+    * fails the union loudly — the backstop behind the ingest's start
+    * guard. Measured (ScaleProbe, sf0.1 embeddings ×8 = 256K vectors):
+    * bucket-pruned IVF probe wall-ratios land 0.82–1.2 at ×8 corpus —
+    * per-query cost tracks the probed volume, not the corpus. */
+  def probeIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      idCol: String,
-      vecCol: String,
+      layout: IndexLayout,
       queryVec: Array[Float],
-      centroids: Array[Array[Float]],
       k: Int,
       nProbe: Int,
       excludeId: Option[Long] = None,
       predicate: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.functions.typedLit
-    val probes = nearestBuckets(queryVec, centroids, nProbe)
-    // NULL cos_sim rows (ragged vectors) are KEPT, sorted last — the same
-    // behavior as ivfTopK, so the documented result equivalence holds
-    // even on corpora with corrupt rows.
-    val pruned = readIndex(spark, path,
-      probedParts = Some(probes.toSeq.map(b => s"bucket=$b")),
-      probedTotal = Some(centroids.length))
-      .filter(col("bucket").isin(probes.toSeq: _*))
-      .filter(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
-    predicate.fold(pruned)(pruned.filter)
-      .select(
-        col(idCol),
-        graft.functions.native.cosineSim(col(vecCol), typedLit(queryVec.toSeq)).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
+    val p = layout.probe(queryVec, nProbe)
+    val id = col(layout.idCol)
+    val pruned = readIndex(spark, path, Some((layout.flavor, "probeIndex")),
+      probedParts = Some(p.parts), probedTotal = Some(layout.partValues))
+      .filter(p.filter)
+      .filter(excludeId.map(id =!= _).getOrElse(lit(true)))
+    val kept = predicate.fold(pruned)(pruned.filter)
+    (if (layout.dedupe) kept.dropDuplicates(layout.idCol) else kept)
+      .select(id, p.score.as("cos_sim"))
+      .orderBy(col("cos_sim").desc, id.asc)
       .limit(k)
-  }
-
-  /** [[writeIvfIndex]] with int8-QUANTIZED vectors: the index stores
-    * `(id, scale, codes, bucket)` instead of the float vector — a ~4×
-    * smaller on-disk index (at 100 TB the vector store dominates index
-    * bytes). Bucket assignment runs on the ORIGINAL float vector (full
-    * fidelity routing); only the stored payload is compressed. Probe
-    * with [[probeIvfIndexQuantized]]. */
-  def writeIvfIndexQuantized(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      path: String,
-      payloadCols: Seq[String] = Nil): Unit = {
-    // `payloadCols` ride along so the filtered-probe predicate evaluates
-    // against the index alone (no corpus join on the query path) — but
-    // OPT-IN, not every column: a wide payload (document text) would
-    // dwarf the int8 codes and negate the 4× compression that is this
-    // index's point. Default is the bare (id, scale, codes, bucket).
-    val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("scale", "codes", "_graft_q"))
-    newGeneration(emb.sparkSession, path, "ivf-int8") { gen =>
-      spreadForWrite(quantizedLayout(emb, vecCol, centroids, keep),
-          centroids.length, col("bucket")) // files ∝ buckets — see writeIvfIndex
-        .write
-        .partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(s"$gen/base")
-    }
   }
 
   /** Shared payload validation for the compressed index writers and
@@ -1291,227 +1407,6 @@ object Similarity {
     require(reserved.isEmpty,
       s"payloadCols collide with index or staging columns: $reserved")
     (idCol +: payloadCols.filterNot(_ == idCol)) :+ "bucket"
-  }
-
-  /** The quantized index layout `(id[, payload], bucket, scale, codes)`
-    * as ONE map-side pass over the corpus — bucket assignment and the
-    * int8 kernel are both plain expressions, so no second scan / id
-    * self-join. The quantize struct lands in its own projection first so
-    * the kernel runs once per row even without codegen subexpression
-    * elimination (CollapseProject keeps non-cheap aliases staged).
-    * Shared verbatim by [[writeIvfIndexQuantized]] and
-    * [[ingestIvfIndexStreamQuantized]] — base and streamed rows are the
-    * same computation by construction. */
-  private def quantizedLayout(
-      emb: DataFrame,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      keep: Seq[String]): DataFrame = {
-    val q = graft.functions.native.quantizeInt8(col(vecCol))
-    assignBuckets(emb, vecCol, centroids)
-      .select(keep.map(col) :+ q.as("_graft_q"): _*)
-      .select(keep.map(col) :+
-        col("_graft_q.scale").as("scale") :+ col("_graft_q.codes").as("codes"): _*)
-  }
-
-  /** [[ingestIvfIndexStream]] for a QUANTIZED index root: arriving
-    * vectors are bucket-assigned and int8-quantized in the SAME map-side
-    * pass the batch writer runs, so `streamed/` carries exactly the base
-    * layout and [[probeIvfIndexQuantized]] unions it the way the float
-    * probe always has. `payloadCols` must repeat the base build's —
-    * [[requireLayoutMatch]] refuses a mismatched stream at START, before
-    * any offset commits. Lock, checkpoint-identity and compaction
-    * discipline are [[ingestIvfIndexStream]]'s, verbatim. */
-  def ingestIvfIndexStreamQuantized(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      path: String,
-      checkpointDir: String,
-      payloadCols: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery = {
-    val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("scale", "codes", "_graft_q"))
-    val (fs, root) = Generations.fsRoot(emb.sparkSession, path)
-    val out = quantizedLayout(emb, vecCol, centroids, keep)
-    lockedIngest(emb.sparkSession, fs, root, checkpointDir,
-      "ingestIvfIndexStreamQuantized", out.schema, Set("bucket"), "ivf-int8") { gen =>
-      out
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .partitionBy("bucket")
-        .format("parquet")
-        .option("path", s"$gen/streamed")
-        .start()
-    }
-  }
-
-  /** Probe a quantized IVF index: same bucket-pruned scan as
-    * [[probeIvfIndex]] (base plus any [[ingestIvfIndexStreamQuantized]]
-    * appends), vectors dequantized INSIDE the compiled cosine kernel
-    * (`code·scale/127` — [[graft.functions.VectorKernels.int8Cosine]],
-    * bit-equal to the interpreted `transform` formulation it replaced,
-    * which SimilaritySpec keeps as the independent model) before the
-    * exact re-rank. Results are approximate relative to the float index
-    * by the quantization error (≤ half a step per dimension) —
-    * SimilaritySpec pins the top-k overlap on the fixture. A wrong-
-    * flavor ingester is refused at stream START
-    * ([[requireLayoutMatch]]); a mismatched streamed/ that exists
-    * anyway (hand-written, legacy) fails this probe's union loudly —
-    * the backstop, never a silent poison. */
-  def probeIvfIndexQuantized(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      idCol: String,
-      queryVec: Array[Float],
-      centroids: Array[Array[Float]],
-      k: Int,
-      nProbe: Int,
-      excludeId: Option[Long] = None,
-      predicate: Option[Column] = None): DataFrame = {
-    val probes = nearestBuckets(queryVec, centroids, nProbe)
-    // an empty query scores NULL everywhere — the posture the replaced
-    // HOF formulation had (length-mismatch cosine) and probeIvfIndexPq
-    // keeps for its degenerate queries; the kernel itself rejects an
-    // empty reference vector
-    val score =
-      if (queryVec.isEmpty) lit(null).cast("double")
-      else graft.functions.native.int8Cosine(col("codes"), col("scale"), queryVec)
-    val pruned = readIndex(spark, path,
-      probedParts = Some(probes.toSeq.map(b => s"bucket=$b")),
-      probedTotal = Some(centroids.length))
-      .filter(col("bucket").isin(probes.toSeq: _*))
-      .filter(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
-    // filter-before-re-rank on the index's own payload columns (see
-    // probeIvfIndex — the quantized build carries payload for this)
-    predicate.fold(pruned)(pruned.filter)
-      .select(col(idCol), score.as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** [[writeIvfIndex]] with PRODUCT-QUANTIZED vectors: the index stores
-    * `(id, codes: m bytes, bucket)` — the third rung of the payload
-    * ladder (float 4·dim → int8 dim → PQ m bytes; 32× vs float at
-    * dim=64, m=8) and the first one whose PROBE cost also drops: ADC
-    * scores each row with `m` table lookups instead of `dim` multiplies
-    * ([[probeIvfIndexPq]]). Bucket assignment runs on the ORIGINAL
-    * float vector (full-fidelity routing, same as the int8 build); only
-    * the stored payload is compressed. Rows whose vector cannot encode
-    * (NULL/ragged/zero-norm) carry NULL codes and score NULL at probe
-    * time — the NULL-not-garbage posture throughout. Same `Generations`
-    * layout and payload-column opt-in as [[writeIvfIndexQuantized]]. */
-  def writeIvfIndexPq(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      pq: PqCodebooks,
-      path: String,
-      payloadCols: Seq[String] = Nil): Unit = {
-    require(!pq.isEmpty, "cannot write a PQ index from empty codebooks")
-    val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("codes"))
-    newGeneration(emb.sparkSession, path, "pq-raw") { gen =>
-      spreadForWrite(pqLayout(emb, vecCol, centroids, pq, keep),
-          centroids.length, col("bucket")) // files ∝ buckets — see writeIvfIndex
-        .write
-        .partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(s"$gen/base")
-    }
-  }
-
-  /** The PQ index layout `(id[, payload], bucket, codes: m bytes)` as ONE
-    * map-side pass — bucket AND codes are plain expressions, so no second
-    * scan / id self-join. Shared verbatim by [[writeIvfIndexPq]] and
-    * [[ingestIvfIndexStreamPq]] — base and streamed rows are the same
-    * computation by construction. */
-  private def pqLayout(
-      emb: DataFrame,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      pq: PqCodebooks,
-      keep: Seq[String]): DataFrame =
-    assignBuckets(emb, vecCol, centroids)
-      .select(keep.map(col) :+
-        graft.functions.native.pqEncode(col(vecCol), pq.books).as("codes"): _*)
-
-  /** [[ingestIvfIndexStream]] for a PQ index root: arriving vectors are
-    * bucket-assigned and PQ-encoded in the SAME map-side pass the batch
-    * writer runs — the codebooks are frozen at build time (the standard
-    * PQ operational contract: retrain + rebuild when drift degrades
-    * recall), so streamed rows encode against exactly the tensor the
-    * probes' ADC tables are built from. `payloadCols` must repeat the
-    * base build's ([[requireLayoutMatch]] refuses at START otherwise).
-    * Lock, checkpoint-identity and compaction discipline are
-    * [[ingestIvfIndexStream]]'s, verbatim. */
-  def ingestIvfIndexStreamPq(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      pq: PqCodebooks,
-      path: String,
-      checkpointDir: String,
-      payloadCols: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(!pq.isEmpty, "cannot ingest into a PQ index with empty codebooks")
-    val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("codes"))
-    val (fs, root) = Generations.fsRoot(emb.sparkSession, path)
-    val out = pqLayout(emb, vecCol, centroids, pq, keep)
-    lockedIngest(emb.sparkSession, fs, root, checkpointDir,
-      "ingestIvfIndexStreamPq", out.schema, Set("bucket"), "pq-raw") { gen =>
-      out
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .partitionBy("bucket")
-        .format("parquet")
-        .option("path", s"$gen/streamed")
-        .start()
-    }
-  }
-
-  /** Probe a PQ IVF index: the same bucket-pruned scan as
-    * [[probeIvfIndex]] (base plus any [[ingestIvfIndexStreamPq]]
-    * appends; wrong-flavor ingests are refused at stream start, and a
-    * mismatched streamed/ that exists anyway fails this union loudly —
-    * the backstop), scored by asymmetric distance computation — the
-    * query's per-(subspace, code) partial dots and reconstruction
-    * norms² are tabulated ONCE driver-side (m·ksub·dsub work), then
-    * every scanned row costs `m` array reads
-    * ([[graft.functions.native.pqAdcScore]]). `cos_sim` is the cosine
-    * between the query and the RECONSTRUCTION the row's codes name —
-    * approximate relative to the float index by the codebook
-    * quantization error; SimilaritySpec pins the fixture top-k overlap
-    * and the score error band. A zero/ragged query yields NULL scores
-    * (same contract as [[bruteForceTopK]]'s cosine). */
-  def probeIvfIndexPq(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      idCol: String,
-      queryVec: Array[Float],
-      centroids: Array[Array[Float]],
-      pq: PqCodebooks,
-      k: Int,
-      nProbe: Int,
-      excludeId: Option[Long] = None,
-      predicate: Option[Column] = None): DataFrame = {
-    require(!pq.isEmpty, "cannot probe with empty codebooks")
-    val probes = nearestBuckets(queryVec, centroids, nProbe)
-    val score = adcTables(queryVec, pq) match {
-      case Some(tables) =>
-        graft.functions.native.pqAdcScore(col("codes"), tables, pq.m, pq.ksub)
-      case None => lit(null).cast("double") // zero/ragged query: NULL, as cosine would
-    }
-    val pruned = readIndex(spark, path, Some(("pq-raw", "probeIvfIndexPq")),
-      probedParts = Some(probes.toSeq.map(b => s"bucket=$b")),
-      probedTotal = Some(centroids.length))
-      .filter(col("bucket").isin(probes.toSeq: _*))
-      .filter(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
-    predicate.fold(pruned)(pruned.filter)
-      .select(col(idCol), score.as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
   }
 
   /** The ADC lookup tables of ONE query against the codebooks — the
@@ -1616,124 +1511,6 @@ object Similarity {
     })
   }
 
-  /** [[writeIvfIndexPq]] with RESIDUAL codes: the stored bytes name the
-    * row's offset from its OWN coarse centroid instead of the raw
-    * vector — bucket and codes come from one compiled pass
-    * ([[graft.functions.native.pqEncodeResidual]]), so they can never
-    * disagree. The on-disk layout is IDENTICAL to the raw-PQ index
-    * (id[, payload], bucket, codes: m bytes); pairing an index with the
-    * right (centroids, codebooks, prober flavor) is the caller's
-    * contract, exactly as probing any PQ index with foreign codebooks
-    * would be — the layout guard can only police columns, not tensor
-    * provenance. Probe with [[probeIvfIndexPqResidual]]. */
-  def writeIvfIndexPqResidual(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      pq: PqCodebooks,
-      path: String,
-      payloadCols: Seq[String] = Nil): Unit = {
-    require(!pq.isEmpty, "cannot write a PQ index from empty codebooks")
-    val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("codes", "_graft_pqr"))
-    newGeneration(emb.sparkSession, path, "pq-residual") { gen =>
-      spreadForWrite(pqResidualLayout(emb, vecCol, centroids, pq, keep),
-          centroids.length, col("bucket")) // files ∝ buckets — see writeIvfIndex
-        .write
-        .partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(s"$gen/base")
-    }
-  }
-
-  /** The residual-PQ index layout as ONE map-side pass: the
-    * struct(bucket, codes) kernel output lands in a staging projection
-    * (single evaluation, the house pattern) and is split into the
-    * layout columns. Shared verbatim by [[writeIvfIndexPqResidual]] and
-    * [[ingestIvfIndexStreamPqResidual]]. */
-  private def pqResidualLayout(
-      emb: DataFrame,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      pq: PqCodebooks,
-      keep: Seq[String]): DataFrame = {
-    val payload = keep.filterNot(_ == "bucket")
-    val enc = graft.functions.native.pqEncodeResidual(col(vecCol), centroids, pq.books)
-    emb.select(payload.map(col) :+ enc.as("_graft_pqr"): _*)
-      .select(payload.map(col) :+
-        col("_graft_pqr.bucket").as("bucket") :+ col("_graft_pqr.codes").as("codes"): _*)
-  }
-
-  /** [[ingestIvfIndexStreamPq]] for a RESIDUAL-PQ root: same one-pass
-    * layout as the batch writer, same frozen-codebook operational
-    * contract, same lock/identity/layout-guard discipline. */
-  def ingestIvfIndexStreamPqResidual(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      pq: PqCodebooks,
-      path: String,
-      checkpointDir: String,
-      payloadCols: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(!pq.isEmpty, "cannot ingest into a PQ index with empty codebooks")
-    val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("codes", "_graft_pqr"))
-    val (fs, root) = Generations.fsRoot(emb.sparkSession, path)
-    val out = pqResidualLayout(emb, vecCol, centroids, pq, keep)
-    lockedIngest(emb.sparkSession, fs, root, checkpointDir,
-      "ingestIvfIndexStreamPqResidual", out.schema, Set("bucket"), "pq-residual") { gen =>
-      out
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .partitionBy("bucket")
-        .format("parquet")
-        .option("path", s"$gen/streamed")
-        .start()
-    }
-  }
-
-  /** Probe a residual-PQ IVF index: bucket-pruned scan, ADC-scored
-    * against `cent_b + recon(codes)` — numerator and denominator both
-    * come from driver-built per-probe tables
-    * ([[adcTablesResidual]]; q̂·cent and the cent·book cross terms are
-    * what raw-PQ ADC doesn't need), so the per-row cost stays O(m)
-    * table reads. `cos_sim` is the cosine between the query and the
-    * row's reconstruction; SimilaritySpec pins the clustered-fixture
-    * recall against raw PQ and a driver reconstruction model bit-for-bit.
-    * NULL-scoring contract matches [[probeIvfIndexPq]]. */
-  def probeIvfIndexPqResidual(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      idCol: String,
-      queryVec: Array[Float],
-      centroids: Array[Array[Float]],
-      pq: PqCodebooks,
-      k: Int,
-      nProbe: Int,
-      excludeId: Option[Long] = None,
-      predicate: Option[Column] = None): DataFrame = {
-    require(!pq.isEmpty, "cannot probe with empty codebooks")
-    require(centroids.forall(_.length == pq.m * pq.dsub),
-      s"centroids must be ${pq.m * pq.dsub}-dimensional to match the codebooks")
-    val probes = nearestBuckets(queryVec, centroids, nProbe)
-    val score = adcTablesResidual(queryVec, centroids, probes, pq) match {
-      case Some(tables) =>
-        graft.functions.native.pqAdcScoreResidual(
-          col("codes"), col("bucket").cast("int"), probes, tables, pq.m, pq.ksub)
-      case None => lit(null).cast("double") // zero/ragged query: NULL, as cosine would
-    }
-    val pruned = readIndex(spark, path, Some(("pq-residual", "probeIvfIndexPqResidual")),
-      probedParts = Some(probes.toSeq.map(b => s"bucket=$b")),
-      probedTotal = Some(centroids.length))
-      .filter(col("bucket").isin(probes.toSeq: _*))
-      .filter(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
-    predicate.fold(pruned)(pruned.filter)
-      .select(col(idCol), score.as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
-  }
-
   /** The residual-ADC lookup tables of ONE query: the shared
     * [dot | norm²] blocks of [[adcTables]] followed by one per-probe
     * block (|cent_b|², q̂·cent_b, then cent_b·book cross terms in
@@ -1801,103 +1578,9 @@ object Similarity {
     (0 until bands).map(arr.getLong).toArray
   }
 
-  /** Persist the corpus as an on-disk LSH signature index: one row per
-    * (vector, band), directory-partitioned by `(band, sig)` so a probe
-    * reads EXACTLY `bands` leaf directories — its own signature in each
-    * band — via partition pruning. This is the materialized form of
-    * [[lshTopK]] for corpora probed repeatedly: the corpus signatures are
-    * computed once at write time instead of once per probe.
-    *
-    * Storage is `bands`× the corpus (each row carries its payload into
-    * every band partition) — the classic LSH space-for-time trade;
-    * [[writeIvfIndex]] is the 1×-storage alternative. At 100 TB, prefer
-    * indexing only (id, vec) and joining wide payloads back by id. */
-  /** Same generationed `base/` + `streamed/` layout split as the IVF
-    * index (see [[writeIvfIndex]] for why the two roots cannot share a
-    * directory); [[probeLshIndex]] unions both, (band,sig)-pruned on
-    * each. */
-  def writeLshIndex(
-      emb: DataFrame,
-      vecCol: String,
-      path: String,
-      bands: Int = 16,
-      bitsPerBand: Int = 8,
-      seed: Int = 1000,
-      knownDim: Int = 0): Unit = {
-    // knownDim: the trainers' detect-once convention — a pipeline that
-    // already ran detectDim (or knows its model's dim) skips the
-    // corpus-modal aggregate pass here
-    val dim = if (knownDim > 0) knownDim else detectDim(emb, vecCol)
-    require(dim > 0, "cannot LSH-index an empty / all-null corpus")
-    newGeneration(emb.sparkSession, path, "lsh") { gen =>
-      // files ∝ (band, sig) partitions, not tasks× — see writeIvfIndex
-      spreadForWrite(
-        emb.select(
-          col("*"),
-          posexplode(
-            graft.functions.native
-              .hyperplaneSignatures(col(vecCol), bands, bitsPerBand, dim, seed))
-            .as(Seq("band", "sig"))),
-        // long math capped at Int.MaxValue: an Int `1 << bits` wraps at
-        // bits ≥ 31 and would re-enable the salt on an astronomically
-        // large value space; spread only matters when the count is SMALL
-        math.min(bands.toLong * (1L << math.min(bitsPerBand, 30)),
-          Int.MaxValue.toLong).toInt,
-        col("band"), col("sig"))
-        .write
-        .partitionBy("band", "sig")
-        .mode("overwrite")
-        .parquet(s"$gen/base")
-    }
-  }
-
-  /** Continuous LSH-index ingestion, the [[ingestIvfIndexStream]] analog:
-    * arriving vectors are signed with the same hyperplane kernel
-    * (map-side, no shuffle) and appended (band,sig)-partitioned under
-    * the live generation's `streamed/` directory, exactly-once via the
-    * streaming sink's commit log. `dim` must be passed explicitly (a
-    * streaming source cannot be sampled for it) and MUST match the base
-    * build's dimension — as must bands/bitsPerBand/seed, or stream and
-    * base signatures diverge. Same base-build-first precondition,
-    * rebuild contract, and lifetime-lock FS CONTRACT (atomic
-    * create-exclusive, object-store roots refused) as
-    * [[ingestIvfIndexStream]]. */
-  def ingestLshIndexStream(
-      emb: DataFrame,
-      vecCol: String,
-      dim: Int,
-      path: String,
-      checkpointDir: String,
-      bands: Int = 16,
-      bitsPerBand: Int = 8,
-      seed: Int = 1000): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(dim > 0, "dim must be the indexed corpus' vector dimension")
-    // generation resolved once at stream start, under the producer lock
-    // the stream holds for its lifetime — see ingestIvfIndexStream
-    val (fs, root) = Generations.fsRoot(emb.sparkSession, path)
-    val out = emb
-      .select(
-        col("*"),
-        posexplode(
-          graft.functions.native
-            .hyperplaneSignatures(col(vecCol), bands, bitsPerBand, dim, seed))
-          .as(Seq("band", "sig")))
-    lockedIngest(emb.sparkSession, fs, root, checkpointDir, "ingestLshIndexStream",
-      out.schema, Set("band", "sig"), "lsh") { gen =>
-      out
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .partitionBy("band", "sig")
-        .format("parquet")
-        .option("path", s"$gen/streamed")
-        .start()
-    }
-  }
-
-  /** Compact a streamed index (IVF or LSH — any `base/` + `streamed/`
-    * layout): fold the streaming appends into one fresh bucket-
-    * partitioned `base/` and clear `streamed/`. THE lakehouse
+  /** Compact a streamed `layout` index: fold the streaming appends into
+    * one fresh `base/`, partitioned by `layout.partitionCols`, and clear
+    * `streamed/`. THE lakehouse
     * maintenance op: every ingest micro-batch appends one small file
     * per touched partition, so an index that streams for a day scans
     * thousands of KB-sized files — compaction restores the
@@ -1950,13 +1633,12 @@ object Similarity {
     * `-Dgraft.generations.allowNonAtomicFs=true` says so.
     *
     * Returns false (and compacts nothing) when the live generation has
-    * no `streamed/` appends. `partitionCols`: `Seq("bucket")` for IVF,
-    * `Seq("band", "sig")` for LSH. */
+    * no `streamed/` appends. Refuses a root whose flavor marker is not
+    * the layout's, like every ingest and probe. */
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      partitionCols: Seq[String]): Boolean = {
-    require(partitionCols.nonEmpty, "partitionCols must name the index layout")
+      layout: IndexLayout): Boolean = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = Generations.fsRoot(spark, path)
     if (Generations.resolve(fs, root).isEmpty) return false
@@ -1966,6 +1648,12 @@ object Similarity {
     // producer that slipped between the resolve and the rebuild
     Generations.withLock(fs, root, "compactIndex") {
       val cur = Generations.currentDir(fs, root)
+      // the flavor marker travels with the data it describes — a
+      // compacted generation must refuse the same wrong-flavor
+      // ingests/probes the original did
+      val flavor = Generations.readFlavorMarker(fs, cur)
+      flavor.foreach(f => require(f == layout.flavor,
+        s"compactIndex: index root flavor '$f' does not match this layout's '${layout.flavor}'"))
       // the no-op path must stay non-destructive for COMMITTED
       // generations (a cron polling "compact if appends exist" would
       // otherwise kill probes pinned to the grace copy) — but a crashed
@@ -1982,14 +1670,10 @@ object Similarity {
           // the streaming sink's partition dirs surface band/sig/bucket as
           // read columns; re-partitioning by the same cols rebuilds the
           // pruned layout with one writer pass
-          .repartition(partitionCols.map(col): _*)
-        // the flavor marker travels with the data it describes — a
-        // compacted generation must refuse the same wrong-flavor
-        // ingests/probes the original did
-        val flavor = Generations.readFlavorMarker(fs, cur)
+          .repartition(layout.partitionCols.map(col): _*)
         Generations.rebuildLocked(fs, root) { gen =>
           union.write
-            .partitionBy(partitionCols: _*)
+            .partitionBy(layout.partitionCols: _*)
             .mode("overwrite")
             .parquet(s"$gen/base")
           flavor.foreach(
@@ -2000,57 +1684,12 @@ object Similarity {
     }
   }
 
-  /** Probe a persisted LSH index: compute the query's `bands` signatures
-    * driver-side (same kernel, same planes), scan ONLY the matching
-    * (band, sig) partitions, dedupe candidate ids (a candidate may
-    * collide in several bands), exact cosine re-rank. For a query vector
-    * taken from the INDEXED corpus, pass `excludeId = Some(queryId)` —
-    * then the result equals [[lshTopK]] with the same
-    * (bands, bitsPerBand, seed); without it the query row matches itself
-    * in every band and occupies the top slot at cos_sim 1.0 (the right
-    * default for external query vectors, which have no id to exclude). */
-  def probeLshIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      idCol: String,
-      vecCol: String,
-      queryVec: Array[Float],
-      k: Int,
-      bands: Int = 16,
-      bitsPerBand: Int = 8,
-      seed: Int = 1000,
-      excludeId: Option[Long] = None,
-      predicate: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.functions.typedLit
-    val sigs = driverSignatures(queryVec, bands, bitsPerBand, seed)
-    val pred = (0 until bands)
-      .map(b => col("band") === b && col("sig") === sigs(b))
-      .reduce(_ || _)
-    // the probe knows its exact (band, sig) pairs, so the base read
-    // names those `bands` directories instead of listing the full
-    // bands×2^bits partition space (4096 dirs at the defaults) — the
-    // LSH flavor of the IVF probedParts pruning; `pred` stays as the
-    // semantic guard and prunes the streamed union's scan
-    val pruned = readIndex(spark, path,
-      probedParts = Some((0 until bands).map(b => s"band=$b/sig=${sigs(b)}")))
-      .filter(pred)
-      .filter(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
-    // filter-before-re-rank (see probeIvfIndex's predicate note): k
-    // counts filter survivors; (band, sig) pruning is untouched
-    predicate.fold(pruned)(pruned.filter)
-      .dropDuplicates(idCol)
-      .select(
-        col(idCol),
-        graft.functions.native.cosineSim(col(vecCol), typedLit(queryVec.toSeq)).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
-  }
-
   /** LSH-bucketed approximate top-k: probe vectors join candidate vectors
     * sharing at least one band signature, then exact cosine re-rank within
     * candidates. `emb` is scanned once to build (id, vec, band, sig);
     * for repeated probes over a stable corpus, persist the signatures
-    * once with [[writeLshIndex]] and probe with [[probeLshIndex]]. */
+    * once with [[writeIndex]] over an [[Lsh]] layout and probe with
+    * [[probeIndex]]. */
   def lshTopK(
       emb: DataFrame,
       idCol: String,
@@ -2208,7 +1847,7 @@ object Similarity {
   }
 }
 
-/** The handle [[Similarity.ingestIvfIndexStream]]/[[Similarity.ingestLshIndexStream]]
+/** The handle [[Similarity.ingestIndexStream]]
   * return: a pure delegate whose one behavior is releasing the index
   * root's producer lock the moment a successful `stop()` returns —
   * synchronous, so the operational stop-ingest-then-compact sequence

@@ -2,7 +2,7 @@ package graft.sink
 
 import java.sql.{Connection, PreparedStatement}
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,7 +32,7 @@ object JdbcMerge {
   /** Knobs, defaulted to the reference's sink connector config.
     * `table` may be schema-qualified with dots (`cso.movies_sink`); dots
     * are ALWAYS qualifier separators, so identifiers that themselves
-    * contain a dot cannot be expressed — see [[quoteTable]].
+    * contain a dot cannot be expressed — see [[Dialect.quoteTable]].
     * `dialect` picks the SQL surface: [[TSql]] (the reference's MSSQL
     * target) by default, [[Derby]] for the embedded engine the
     * integration spec executes against for real. */
@@ -59,6 +59,13 @@ object JdbcMerge {
     * proxy. */
   sealed trait Dialect extends Serializable {
     def quoteId(name: String): String
+    /** Quote each dot-separated segment of a (possibly schema-qualified)
+      * table name, e.g. `cso.movies_sink` → `[cso].[movies_sink]` in
+      * T-SQL. EVERY dot is a qualifier separator: an identifier that
+      * legitimately contains a dot (or is already quoted) cannot be
+      * expressed through `Config.table`. The reference sink has the
+      * same surface (`table.name.format` is a plain dotted name,
+      * start-sink-connector.sh:72). */
     def quoteTable(name: String): String =
       name.split('.').map(quoteId).mkString(".")
     def sqlType(dt: DataType): String
@@ -240,25 +247,7 @@ object JdbcMerge {
         s"${quoteId(f.name)} ${sqlType(f.dataType)}"
   }
 
-  // ---- SQL generation (dispatches to the Config's dialect; the
-  // ---- T-SQL default preserves the original static surface) ------------
-
-  /** T-SQL bracket-quoted identifier (see [[TSql.quoteId]]) — kept as a
-    * top-level function because the sink's default target is MSSQL. */
-  def quoteId(name: String): String = TSql.quoteId(name)
-
-  /** Quote each dot-separated segment of a (possibly schema-qualified)
-    * table name, e.g. `cso.movies_sink` → `[cso].[movies_sink]`.
-    * Restriction: EVERY dot is treated as a qualifier separator — a
-    * schema or table identifier that legitimately contains a dot (or is
-    * already bracket-quoted) cannot be expressed through `Config.table`
-    * (it would be split/double-quoted). The reference sink has the same
-    * surface (`table.name.format` is a plain dotted name,
-    * start-sink-connector.sh:72). */
-  def quoteTable(name: String): String = TSql.quoteTable(name)
-
-  /** Spark → T-SQL column type (the sink side of the §1.2 type table). */
-  def sqlType(dt: DataType): String = TSql.sqlType(dt)
+  // ---- SQL generation (dispatches to the Config's dialect) --------------
 
   /** `auto.create`-style idempotent DDL derived from the value schema
     * (reference: start-sink-connector.sh:67, auto-created `movies_sink`).
@@ -407,13 +396,6 @@ object JdbcMerge {
   def deleteSql(cfg: Config): String = cfg.dialect.deleteSql(cfg)
 
   // ---- batch mechanics --------------------------------------------------
-
-  /** Split a micro-batch into (upserts, deletes) on the tombstone
-    * predicate — the C2/C3 routing step. */
-  def splitBatch(df: DataFrame, isTombstone: Column): (DataFrame, DataFrame) = {
-    val t = coalesce(isTombstone, lit(false))
-    (df.filter(!t), df.filter(t))
-  }
 
   /** Reference retry policy: `op` attempted 1 + maxRetries times with a
     * fixed backoff (start-sink-connector.sh:79-80); rethrows the last

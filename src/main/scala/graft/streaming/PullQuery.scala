@@ -169,7 +169,8 @@ object PullQuery {
 
   /** Highest batch id with a commit-log entry — the state version pull
     * queries serve (the statestore source's own default). */
-  private def lastCommittedBatch(spark: SparkSession, checkpointDir: String): Option[Long] = {
+  private[graft] def lastCommittedBatch(
+      spark: SparkSession, checkpointDir: String): Option[Long] = {
     val commits = new org.apache.hadoop.fs.Path(s"$checkpointDir/commits")
     val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(commits)) None

@@ -160,13 +160,21 @@ object ReplicationPipeline {
   /** Pruned-or-full state lookup shared by both pull-query shapes: one
     * store when a snapshot is uploaded (routing by the state's string
     * key form — the same [[stateKey]] encoding the pipeline groups by),
-    * distributed full scan before the first upload. */
-  private def snapshotFor(spark: SparkSession, cfg: Config, keys: Seq[Any]): DataFrame = {
+    * distributed full scan before the first upload. Before the FIRST
+    * commit the state source has no version to read and throws; a
+    * caller that knows the state row shape passes it as `stateShape`
+    * and gets an empty snapshot instead — a serving layer answers
+    * regardless ([[PullQuery.pointLookupPruned]]). */
+  private def snapshotFor(
+      spark: SparkSession, cfg: Config, keys: Seq[Any],
+      stateShape: Option[StructType] = None): DataFrame = {
     require(keys.size == cfg.keyFields.size,
       s"pull query needs one value per key field ${cfg.keyFields}, got $keys")
-    PullQuery
-      .prunedStateSnapshot(spark, cfg.checkpointDir, stateKey(keys.map(String.valueOf)))
-      .getOrElse(PullQuery.stateSnapshot(spark, cfg.checkpointDir))
+    stateShape.filter(_ => PullQuery.lastCommittedBatch(spark, cfg.checkpointDir).isEmpty)
+      .map(st => spark.createDataFrame(java.util.Collections.emptyList[Row](), st))
+      .getOrElse(PullQuery
+        .prunedStateSnapshot(spark, cfg.checkpointDir, stateKey(keys.map(String.valueOf)))
+        .getOrElse(PullQuery.stateSnapshot(spark, cfg.checkpointDir)))
   }
 
   /** [[pullQuery]] against a [[startFromFrame]]/[[startFromKafka]]
@@ -174,7 +182,9 @@ object ReplicationPipeline {
     * BYTES (the evolution-stable state shape that facade is built on):
     * id-dispatch decode the snapshot through the same registry, then
     * answer identically. The registry is consulted at CALL time, so a
-    * pull query sees schemas registered after the pipeline started. */
+    * pull query sees schemas registered after the pipeline started.
+    * Before the first batch commits the answer is empty, with the same
+    * columns a later answer has. */
   def pullQueryFromFrame(
       spark: SparkSession, wire: WireConfig, cfg: Config, key: Any): DataFrame =
     pullQueryFromFrame(spark, wire, cfg, Seq(key))
@@ -183,7 +193,12 @@ object ReplicationPipeline {
     * `Config.keyFields` entry, in the same order. */
   def pullQueryFromFrame(
       spark: SparkSession, wire: WireConfig, cfg: Config, keys: Seq[Any]): DataFrame = {
-    val snap = snapshotFor(spark, cfg, keys)
+    // the state row startFromFrame keeps: (decoded key, framed value, offset)
+    val stateRow = StructType(Seq(
+      StructField("kafka_key", normalized(wire.keySchema)),
+      StructField("value", BinaryType),
+      StructField("offset", LongType)))
+    val snap = snapshotFor(spark, cfg, keys, Some(stateRow))
     val (valueRegistry, latestId) = SchemaRegistry.resolveSubject(wire.registry, wire.subject)
     val envelope = snap.select(
       col("kafka_key"),

@@ -139,63 +139,6 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.rollWindow(Nil, None).isEmpty)
   }
 
-  test("an adjudicated steady band suppresses in-band flags but still trips above its ceiling") {
-    // the four-round q_neardup_jaccard pattern: TWO consecutive
-    // outlier-fast rounds (0.866, 0.869) poison even the window median,
-    // so the steady 1.48 s flags again despite r14/r15/r16/r18 A/Bs all
-    // ruling old == new. The ceiling encodes those adjudications: an
-    // in-band min must not flag...
-    val prior = Some(Bench.windowPrior(Seq(0.8657, 0.8687, 1.6527)))
-    assert(prior.get < 1.0, "two fast rounds poison the median (the setup)")
-    // band assertions pass adjudicatedCeiling explicitly so the spec
-    // holds even under SPARK_GRAFT_BENCH_BANDS=off in the test env
-    assert(!Bench.crossRoundRegressed("q_neardup_jaccard", prior, 1.48, 1.5,
-      Bench.adjudicatedCeiling))
-    // ...while a min ABOVE the ceiling (a genuine plan regression on the
-    // same path) still trips — the band is finite, not a mute button
-    assert(Bench.crossRoundRegressed("q_neardup_jaccard", prior, 2.5, 1.5,
-      Bench.adjudicatedCeiling))
-    // an un-banded query with the same numbers keeps the plain behavior
-    assert(Bench.crossRoundRegressed("q_unbanded", prior, 1.48, 1.5))
-    // every ceiling names a declared query (a typo'd key would silently
-    // never suppress)
-    Bench.adjudicatedCeiling.keys.foreach { k =>
-      assert(SparkEntry.queries.contains(k), s"ceiling names unknown query $k")
-    }
-  }
-
-  test("a band-masked flag is REPORTED as suppressed, and the bands are disableable") {
-    val prior = Some(Bench.windowPrior(Seq(0.8657, 0.8687, 1.6527)))
-    // the in-band min the previous test showed not flagging: it must
-    // surface in suppressed_in_band instead of vanishing (r18 advisor
-    // finding — a masked flag stays visible in the artifact)
-    assert(Bench.suppressedInBand("q_neardup_jaccard", prior, 1.48, 1.5,
-      Bench.adjudicatedCeiling))
-    // above the ceiling it flags normally, so it is NOT "suppressed"
-    assert(!Bench.suppressedInBand("q_neardup_jaccard", prior, 2.5, 1.5,
-      Bench.adjudicatedCeiling))
-    // below the raw trip condition nothing was masked
-    assert(!Bench.suppressedInBand("q_neardup_jaccard", prior, 1.0, 1.5,
-      Bench.adjudicatedCeiling))
-    // un-banded queries never report suppression
-    assert(!Bench.suppressedInBand("q_unbanded", prior, 1.48, 1.5))
-    // with the bands disabled (SPARK_GRAFT_BENCH_BANDS=off semantics:
-    // effectiveCeilings empty), the same min TRIPS — the env override
-    // re-arms the guard without a source edit
-    assert(Bench.crossRoundRegressed("q_neardup_jaccard", prior, 1.48, 1.5, Map.empty))
-    assert(!Bench.suppressedInBand("q_neardup_jaccard", prior, 1.48, 1.5, Map.empty))
-    // the PARAM DEFAULT is effectiveCeilings (r19 advisor finding: an
-    // adjudicatedCeiling default let an omitted param silently ignore
-    // the env override) — with the env unset the two maps coincide, so
-    // the omitted-param calls above already exercise the default path
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_BANDS"))
-      assert(!Bench.crossRoundRegressed("q_neardup_jaccard", prior, 1.48, 1.5),
-        "default ceilings must be the effective (env-resolved) map")
-    // and the env parse itself: unset here, so the default is the map
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_BANDS"))
-      assert(Bench.effectiveCeilings == Bench.adjudicatedCeiling)
-  }
-
   test("suppressed_in_band pairs never poison the next round's prior min-fold") {
     val line = """{"metric":"total","value":1.0,"unit":"sec",""" +
       """"queries":{"q_a":1.4800},"errors":{},"iterations":{"q_a":[1.4800,1.5000]},""" +

@@ -131,7 +131,7 @@ class IndexLayoutSpec extends SparkTestBase {
   test("spreadForWrite: map and dotted-name payload columns survive the salt") {
     // the salt hashes ROWS, but hash expressions reject MapType and a
     // raw col("a.b") parses as nested-field access — payloads ride into
-    // every index (compressedKeep, writeLshIndex's col("*")), so a
+    // every index (compressedKeep, the Lsh layout's col("*")), so a
     // legal map/dotted payload must not fail the build when spread > 1
     val dir = tmp()
     val df = spark.range(0, 1000, 1, 8)

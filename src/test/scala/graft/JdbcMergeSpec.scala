@@ -92,8 +92,8 @@ class JdbcMergeSpec extends SparkTestBase {
       StructField("movie title", StringType),              // space
       StructField("x]; DROP TABLE t; --", StringType)))    // bracket escape
     val hcfg = Config(table = "cso.movies_sink", keyCols = Seq("ORDER"))
-    assert(JdbcMerge.quoteId("x]; DROP TABLE t; --") == "[x]]; DROP TABLE t; --]")
-    assert(JdbcMerge.quoteTable("cso.movies_sink") == "[cso].[movies_sink]")
+    assert(JdbcMerge.TSql.quoteId("x]; DROP TABLE t; --") == "[x]]; DROP TABLE t; --]")
+    assert(JdbcMerge.TSql.quoteTable("cso.movies_sink") == "[cso].[movies_sink]")
     val ddl = JdbcMerge.createTableSql(hcfg, hostile)
     assert(ddl.startsWith("IF OBJECT_ID(N'[cso].[movies_sink]', N'U') IS NULL "))
     assert(ddl.contains("CREATE TABLE [cso].[movies_sink] ([ORDER] INT NOT NULL, " +
@@ -105,11 +105,11 @@ class JdbcMergeSpec extends SparkTestBase {
   }
 
   test("sqlType covers the reference's type surface") {
-    assert(JdbcMerge.sqlType(DecimalType(3, 1)) == "DECIMAL(3,1)") // movies.rating
-    assert(JdbcMerge.sqlType(LongType) == "BIGINT")                // budget/box_office
-    assert(JdbcMerge.sqlType(TimestampType) == "DATETIME2")        // created_at
-    assert(JdbcMerge.sqlType(StringType) == "NVARCHAR(MAX)")       // description
-    intercept[IllegalArgumentException](JdbcMerge.sqlType(ArrayType(IntegerType)))
+    assert(JdbcMerge.TSql.sqlType(DecimalType(3, 1)) == "DECIMAL(3,1)") // movies.rating
+    assert(JdbcMerge.TSql.sqlType(LongType) == "BIGINT")                // budget/box_office
+    assert(JdbcMerge.TSql.sqlType(TimestampType) == "DATETIME2")        // created_at
+    assert(JdbcMerge.TSql.sqlType(StringType) == "NVARCHAR(MAX)")       // description
+    intercept[IllegalArgumentException](JdbcMerge.TSql.sqlType(ArrayType(IntegerType)))
   }
 
   // ---- auto.evolve (reference: start-sink-connector.sh:68) --------------
@@ -236,15 +236,6 @@ class JdbcMergeSpec extends SparkTestBase {
 
     // the widening produced exactly ONE ALTER across the whole run
     assert(ddlLog.count(_.contains("ALTER")) == 1)
-  }
-
-  test("splitBatch routes tombstones out, treating NULL predicate as live") {
-    val df = Seq(
-      (1, Some("a")), (2, None), (3, Some("c"))
-    ).toDF("ID", "TITLE")
-    val (up, del) = JdbcMerge.splitBatch(df, col("TITLE").isNull)
-    assert(up.collect().map(_.getInt(0)).toSet == Set(1, 3))
-    assert(del.collect().map(_.getInt(0)).toSet == Set(2))
   }
 
   test("withRetries retries with backoff then succeeds") {

@@ -139,35 +139,22 @@ object RecallProbe {
       val pqr16 = Similarity.trainPqResidual(df, "vec_id", "embedding", cents, m = 16,
         knownDim = dim)
 
-      type Probe = (Long, Int) => DataFrame
-      def layouts: Seq[(String, String => Unit, String => Probe)] = Seq(
-        ("float", p => Similarity.writeIvfIndex(df, "embedding", cents, p),
-          p => (qid, nProbe) => Similarity.probeIvfIndex(
-            spark, p, "vec_id", "embedding", byId(qid), cents, K, nProbe, Some(qid))),
-        ("int8", p => Similarity.writeIvfIndexQuantized(df, "vec_id", "embedding", cents, p),
-          p => (qid, nProbe) => Similarity.probeIvfIndexQuantized(
-            spark, p, "vec_id", byId(qid), cents, K, nProbe, Some(qid))),
-        ("pq-m8", p => Similarity.writeIvfIndexPq(df, "vec_id", "embedding", cents, pq8, p),
-          p => (qid, nProbe) => Similarity.probeIvfIndexPq(
-            spark, p, "vec_id", byId(qid), cents, pq8, K, nProbe, Some(qid))),
-        ("pq-m16", p => Similarity.writeIvfIndexPq(df, "vec_id", "embedding", cents, pq16, p),
-          p => (qid, nProbe) => Similarity.probeIvfIndexPq(
-            spark, p, "vec_id", byId(qid), cents, pq16, K, nProbe, Some(qid))),
-        ("pqr-m8", p => Similarity.writeIvfIndexPqResidual(df, "vec_id", "embedding", cents, pqr8, p),
-          p => (qid, nProbe) => Similarity.probeIvfIndexPqResidual(
-            spark, p, "vec_id", byId(qid), cents, pqr8, K, nProbe, Some(qid))),
-        ("pqr-m16", p => Similarity.writeIvfIndexPqResidual(df, "vec_id", "embedding", cents, pqr16, p),
-          p => (qid, nProbe) => Similarity.probeIvfIndexPqResidual(
-            spark, p, "vec_id", byId(qid), cents, pqr16, K, nProbe, Some(qid))))
+      val layouts: Seq[(String, Similarity.IndexLayout)] = Seq(
+        "float" -> Similarity.IvfFloat("vec_id", "embedding", cents),
+        "int8" -> Similarity.IvfInt8("vec_id", "embedding", cents),
+        "pq-m8" -> Similarity.IvfPq("vec_id", "embedding", cents, pq8),
+        "pq-m16" -> Similarity.IvfPq("vec_id", "embedding", cents, pq16),
+        "pqr-m8" -> Similarity.IvfPqResidual("vec_id", "embedding", cents, pqr8),
+        "pqr-m16" -> Similarity.IvfPqResidual("vec_id", "embedding", cents, pqr16))
 
-      layouts.foreach { case (lname, write, mkProbe) =>
+      layouts.foreach { case (lname, layout) =>
         val path = s"$outRoot/$fname/$lname"
-        write(path)
+        Similarity.writeIndex(df, layout, path)
         val bytes = genBytes(spark, path)
-        val probe = mkProbe(path)
         val nProbes = Seq(1, 2, 4, 8, nCells).distinct.filter(_ <= nCells)
         nProbes.foreach { nProbe =>
-          measureRow(fname, lname, bytes, nProbe, qids, truth, probe(_, nProbe))
+          measureRow(fname, lname, bytes, nProbe, qids, truth, qid => Similarity.probeIndex(
+            spark, path, layout, byId(qid), K, nProbe, excludeId = Some(qid)))
         }
       }
 
@@ -180,16 +167,16 @@ object RecallProbe {
       // baked in at write time). The nProbe column carries `bands`,
       // the probed partition-dir count (the listing-cost analog of
       // IVF's nProbe). bytes shows the bands× payload duplication —
-      // the space-for-time trade writeLshIndex documents.
+      // the space-for-time trade the Lsh layout documents.
       val lshConfigs = Seq((8, 8), (16, 8), (24, 3), (32, 6))
       lshConfigs.foreach { case (bands, bits) =>
         val lname = s"lsh-${bands}x$bits"
         val path = s"$outRoot/$fname/$lname"
-        Similarity.writeLshIndex(df, "embedding", path, bands, bits, knownDim = dim)
+        val layout = Similarity.Lsh("vec_id", "embedding", bands, bits, dim = dim)
+        Similarity.writeIndex(df, layout, path)
         measureRow(fname, lname, genBytes(spark, path), bands, qids, truth,
-          qid => Similarity.probeLshIndex(
-            spark, path, "vec_id", "embedding", byId(qid), K, bands, bits,
-            excludeId = Some(qid)))
+          qid => Similarity.probeIndex(
+            spark, path, layout, byId(qid), K, nProbe = bands, excludeId = Some(qid)))
       }
     }
     spark.stop()

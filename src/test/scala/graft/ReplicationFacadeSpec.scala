@@ -76,6 +76,43 @@ class ReplicationFacadeSpec extends SparkTestBase {
       ReplicationPipeline.Config(Seq("id", "ID"), s, "/chk"))
   }
 
+  test("a pull before the first committed batch answers empty, with the usual columns") {
+    import spark.implicits._
+    val srv = new TestRegistryServer
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-repl-prefirst").toString
+    try {
+      val registry = new RestSchemaRegistry(srv.url)
+      val keySt = StructType(Seq(StructField("id", IntegerType, nullable = false)))
+      val kid = registry.register("movies.first-key", keySt)
+      val vid = registry.register("movies.first-value", envSt)
+      val wire = ReplicationPipeline.WireConfig(
+        kafka = KafkaWire.Config(brokers = "unused:9092", topic = "movies.first"),
+        registry = registry,
+        keySchema = keySt)
+      val cfg = ReplicationPipeline.Config(
+        keyField = "id",
+        sink = JdbcMerge.Config("movies_first", keyCols = Nil, dialect = JdbcMerge.Derby),
+        checkpointDir = ckpt)
+      val input = MemoryStream[(Array[Byte], Array[Byte], Long)](spark)
+      val q = ReplicationPipeline.startFromFrame(
+        input.toDF().toDF("key", "value", "offset"), wire, cfg,
+        () => DerbyDb.connect("d_repl_first"))
+      try {
+        val commits = new java.io.File(s"$ckpt/commits")
+        assert(Option(commits.list()).forall(_.isEmpty), "the premise: nothing committed yet")
+        val before = ReplicationPipeline.pullQueryFromFrame(spark, wire, cfg, 1)
+        assert(before.count() == 0)
+        input.addData(Seq((AvroSerde.toBytesWithId(Row(1), keySt, AvroSerde.avroSchema(keySt), kid),
+          valueBytes(insert("a", 0L), vid), 0L)))
+        q.processAllAvailable()
+        val after = ReplicationPipeline.pullQueryFromFrame(spark, wire, cfg, 1)
+        assert(after.count() == 1)
+        assert(before.columns.toSeq == after.columns.toSeq)
+        assert(after.columns.toSeq == Seq("ID", "TITLE", "__DELETED"))
+      } finally q.stop()
+    } finally srv.stop()
+  }
+
   test("composite two-column PK: upsert, tombstone delete, re-insert, composite pull query") {
     import spark.implicits._
     val srv = new TestRegistryServer

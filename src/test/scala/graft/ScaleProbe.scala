@@ -558,15 +558,15 @@ object ScaleProbe {
           emb, "vec_id", "embedding", k = kBuckets)
         val pq = graft.ops.Similarity.trainPq(emb, "vec_id", "embedding", m = 8)
         val root = s"$work/pq_$tag"
-        graft.ops.Similarity.writeIvfIndexPq(
-          emb, "vec_id", "embedding", cents, pq, root)
+        graft.ops.Similarity.writeIndex(
+          emb, graft.ops.Similarity.IvfPq("vec_id", "embedding", cents, pq), root)
         val qv = emb.filter(col("vec_id") === 0L)
           .select(col("embedding")).head.getSeq[Float](0).toArray
         def once(): Double = {
           val t0 = System.nanoTime()
-          graft.ops.Similarity.probeIvfIndexPq(
-            spark, root, "vec_id", qv, cents, pq, 10, nProbe = 6,
-            excludeId = Some(0L))
+          graft.ops.Similarity.probeIndex(
+            spark, root, graft.ops.Similarity.IvfPq("vec_id", "embedding", cents, pq), qv, 10,
+            nProbe = 6, excludeId = Some(0L))
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }
@@ -609,7 +609,8 @@ object ScaleProbe {
         val root = s"$work/hier_$tag"
         def buildOnce(): Double = {
           val t0 = System.nanoTime()
-          graft.ops.Similarity.writeIvfIndexHier(emb, "embedding", model, root)
+          graft.ops.Similarity.writeIndex(
+            emb, graft.ops.Similarity.IvfFloatHier("vec_id", "embedding", model), root)
           (System.nanoTime() - t0) / 1e9
         }
         buildOnce() // warm
@@ -618,9 +619,9 @@ object ScaleProbe {
           .select(col("embedding")).head.getSeq[Float](0).toArray
         def probeOnce(): Double = {
           val t0 = System.nanoTime()
-          graft.ops.Similarity.probeIvfIndex(
-            spark, root, "vec_id", "embedding", qv, model.fine, 10, nProbe = 6,
-            excludeId = Some(0L))
+          graft.ops.Similarity.probeIndex(
+            spark, root, graft.ops.Similarity.IvfFloat("vec_id", "embedding", model.fine), qv, 10,
+            nProbe = 6, excludeId = Some(0L))
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }

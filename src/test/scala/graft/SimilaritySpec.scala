@@ -192,8 +192,9 @@ class SimilaritySpec extends SparkTestBase {
   test("persisted IVF index: probe is partition-pruned and equals the in-memory ivfTopK") {
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val floatIvf = Similarity.IvfFloat("vec_id", "embedding", centroids)
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-index").toString
-    Similarity.writeIvfIndex(emb, "embedding", centroids, path)
+    Similarity.writeIndex(emb, floatIvf, path)
     // bucket-partitioned directories on disk (≤ k; a trained centroid may
     // legitimately attract no fixture vectors)
     val bucketDirs =
@@ -201,9 +202,8 @@ class SimilaritySpec extends SparkTestBase {
         .filter(_.getName.startsWith("bucket="))
     assert(bucketDirs.nonEmpty && bucketDirs.length <= 8)
     val qVec = vecs.find(_._1 == queryId).get._2
-    val probed = Similarity.probeIvfIndex(
-      spark, path, "vec_id", "embedding", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId))
+    val probed = Similarity.probeIndex(
+      spark, path, floatIvf, qVec, k, nProbe = 6, excludeId = Some(queryId))
     // the scan carries a partition filter on bucket — directory-level
     // pruning, not a post-scan filter
     val plan = probed.queryExecution.executedPlan.toString
@@ -218,9 +218,9 @@ class SimilaritySpec extends SparkTestBase {
     // keeps the PartitionFilters assertion and the answer equality.)
     // nProbe == nlist, the fully-dense corner: one root read, answers
     // equal the brute-force scan over the whole index
-    val all = Similarity.probeIvfIndex(
-      spark, path, "vec_id", "embedding", qVec, centroids, k,
-      nProbe = centroids.length, excludeId = Some(queryId))
+    val all = Similarity.probeIndex(
+      spark, path, floatIvf, qVec, k, nProbe = centroids.length,
+      excludeId = Some(queryId))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val brute = Similarity
       .bruteForceTopK(emb, "vec_id", "embedding", queryId, k)
@@ -232,10 +232,12 @@ class SimilaritySpec extends SparkTestBase {
   test("quantized IVF index: smaller on disk, pruned probe, high top-k overlap") {
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val floatIvf = Similarity.IvfFloat("vec_id", "embedding", centroids)
+    val int8Ivf = Similarity.IvfInt8("vec_id", "embedding", centroids)
     val fDir = java.nio.file.Files.createTempDirectory("graft-ivf-f").toString
     val qDir = java.nio.file.Files.createTempDirectory("graft-ivf-q").toString
-    Similarity.writeIvfIndex(emb, "embedding", centroids, fDir)
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", centroids, qDir)
+    Similarity.writeIndex(emb, floatIvf, fDir)
+    Similarity.writeIndex(emb, int8Ivf, qDir)
     def bytes(dir: String): Long = {
       def walk(f: java.io.File): Long =
         if (f.isDirectory) f.listFiles().map(walk).sum
@@ -248,14 +250,13 @@ class SimilaritySpec extends SparkTestBase {
     assert(bytes(qDir) < bytes(fDir) * 0.6,
       s"quantized ${bytes(qDir)} vs float ${bytes(fDir)}")
     val qVec = vecs.find(_._1 == queryId).get._2
-    val probed = Similarity.probeIvfIndexQuantized(
-      spark, qDir, "vec_id", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId))
+    val probed = Similarity.probeIndex(
+      spark, qDir, int8Ivf, qVec, k, nProbe = 6, excludeId = Some(queryId))
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
     val approx = probed.collect().map(_.getLong(0)).toSet
-    val exact = Similarity.probeIvfIndex(
-      spark, fDir, "vec_id", "embedding", qVec, centroids, k, nProbe = 6,
+    val exact = Similarity.probeIndex(
+      spark, fDir, floatIvf, qVec, k, nProbe = 6,
       excludeId = Some(queryId)).collect().map(_.getLong(0)).toSet
     assert((approx & exact).size >= k - 2,
       s"overlap ${(approx & exact).size}/$k too low")
@@ -269,19 +270,19 @@ class SimilaritySpec extends SparkTestBase {
       .MemoryStream[(Long, Array[Float])](spark)
     stray.addData(Seq((888888L, qVec)))
     val refusal = intercept[IllegalArgumentException] {
-      Similarity.ingestIvfIndexStream(
-        stray.toDF().toDF("vec_id", "embedding"), "embedding", centroids, qDir, strayCkpt)
+      Similarity.ingestIndexStream(
+        stray.toDF().toDF("vec_id", "embedding"), floatIvf, qDir, strayCkpt)
     }
     assert(refusal.getMessage.contains("does not match"), refusal.getMessage)
     // nothing was written: the probe keeps serving the base unchanged
-    val afterRefusal = Similarity.probeIvfIndexQuantized(
-      spark, qDir, "vec_id", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId)).collect().map(_.getLong(0)).toSet
+    val afterRefusal = Similarity.probeIndex(
+      spark, qDir, int8Ivf, qVec, k,
+      nProbe = 6, excludeId = Some(queryId)).collect().map(_.getLong(0)).toSet
     assert(afterRefusal == approx)
     // and an EMPTY query degrades to NULL scores, the cosine posture —
     // not an exception out of the kernel's non-empty-reference require
-    val emptyQ = Similarity.probeIvfIndexQuantized(
-      spark, qDir, "vec_id", Array.empty[Float], centroids, k, nProbe = 6).collect()
+    val emptyQ = Similarity.probeIndex(
+      spark, qDir, int8Ivf, Array.empty[Float], k, nProbe = 6).collect()
     assert(emptyQ.nonEmpty && emptyQ.forall(_.isNullAt(1)))
     // BACKSTOP: a mismatched streamed/ that exists anyway (hand-written,
     // or from a build predating the start-time guard) must fail the
@@ -292,9 +293,8 @@ class SimilaritySpec extends SparkTestBase {
       .write.partitionBy("bucket").mode("overwrite")
       .parquet(genDir(qDir) + "/streamed")
     intercept[org.apache.spark.sql.AnalysisException] {
-      Similarity.probeIvfIndexQuantized(
-        spark, qDir, "vec_id", qVec, centroids, k, nProbe = 6,
-        excludeId = Some(queryId)).collect()
+      Similarity.probeIndex(
+        spark, qDir, int8Ivf, qVec, k, nProbe = 6, excludeId = Some(queryId)).collect()
     }
   }
 
@@ -330,14 +330,13 @@ class SimilaritySpec extends SparkTestBase {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val int8Ivf = Similarity.IvfInt8("vec_id", "embedding", centroids)
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-qi").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-qi-ck").toString
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", centroids, dir)
+    Similarity.writeIndex(emb, int8Ivf, dir)
     val qVec = vecs.find(_._1 == queryId).get._2
     def probe(d: String): Seq[(Long, Double)] =
-      Similarity.probeIvfIndexQuantized(
-        spark, d, "vec_id", qVec, centroids, k, nProbe = 8,
-        excludeId = Some(queryId))
+      Similarity.probeIndex(spark, d, int8Ivf, qVec, k, nProbe = 8, excludeId = Some(queryId))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // append an exact copy of the query vector under a fresh id: the
     // quantized ingester must encode it through the SAME layout pass as
@@ -345,24 +344,23 @@ class SimilaritySpec extends SparkTestBase {
     val s = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
     s.addData(Seq((888888L, qVec)))
-    val q = Similarity.ingestIvfIndexStreamQuantized(
-      s.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", centroids, dir, ckpt)
+    val q = Similarity.ingestIndexStream(s.toDF().toDF("vec_id", "embedding"), int8Ivf, dir, ckpt)
     try q.processAllAvailable() finally q.stop()
     val after = probe(dir)
     assert(after.head._1 == 888888L, s"appended near-dup must rank first: $after")
     // streamed rows equal the batch writer's computation: an index
     // REBUILT over corpus + appended row probes identically
     val dir2 = java.nio.file.Files.createTempDirectory("graft-ivf-qi2").toString
-    Similarity.writeIvfIndexQuantized(
+    Similarity.writeIndex(
       emb.select(col("vec_id"), col("embedding"))
         .union(Seq((888888L, qVec)).toDF("vec_id", "embedding")),
-      "vec_id", "embedding", centroids, dir2)
+      int8Ivf, dir2)
     assert(probe(dir2) == after, "append == rebuild for the quantized layout")
     // compaction folds streamed/ into the next generation's base: answers
     // unchanged, and a second compaction finds nothing to fold
-    assert(Similarity.compactIndex(spark, dir, Seq("bucket")))
+    assert(Similarity.compactIndex(spark, dir, int8Ivf))
     assert(probe(dir) == after, "compaction must preserve probe answers")
-    assert(!Similarity.compactIndex(spark, dir, Seq("bucket")),
+    assert(!Similarity.compactIndex(spark, dir, int8Ivf),
       "second compaction must be a no-op (streamed/ was folded)")
   }
 
@@ -370,13 +368,14 @@ class SimilaritySpec extends SparkTestBase {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val int8Ivf = Similarity.IvfInt8("vec_id", "embedding", centroids)
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-qr").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-qr-ck").toString
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", centroids, dir)
+    Similarity.writeIndex(emb, int8Ivf, dir)
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
-    def start() = Similarity.ingestIvfIndexStreamQuantized(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", centroids, dir, ckpt)
+    def start() = Similarity.ingestIndexStream(
+      input.toDF().toDF("vec_id", "embedding"), int8Ivf, dir, ckpt)
     val v = vecs.find(_._1 == queryId).get._2
     val q1 = start()
     try { input.addData(Seq((777777L, v))); q1.processAllAvailable() } finally q1.stop()
@@ -393,8 +392,8 @@ class SimilaritySpec extends SparkTestBase {
       == Seq(777777L, 777778L), "exactly-once: one row per appended id, none dropped")
     // and the probe serves base + both resumed appends (same direction ⇒
     // identical codes ⇒ both rank at the top, above every corpus row)
-    val top = Similarity.probeIvfIndexQuantized(
-      spark, dir, "vec_id", v, centroids, k, nProbe = 8, excludeId = Some(queryId))
+    val top = Similarity.probeIndex(
+      spark, dir, int8Ivf, v, k, nProbe = 8, excludeId = Some(queryId))
       .collect().map(_.getLong(0)).take(2).toSet
     assert(top == Set(777777L, 777778L), s"resumed appends must serve: $top")
   }
@@ -404,35 +403,32 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
     val pq = Similarity.trainPq(emb, "vec_id", "embedding", m = 8)
+    val pqIvf = Similarity.IvfPq("vec_id", "embedding", centroids, pq)
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-pqi").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-pqi-ck").toString
-    Similarity.writeIvfIndexPq(emb, "vec_id", "embedding", centroids, pq, dir)
+    Similarity.writeIndex(emb, pqIvf, dir)
     val qVec = vecs.find(_._1 == queryId).get._2
     def probe(d: String): Seq[(Long, Double)] =
-      Similarity.probeIvfIndexPq(
-        spark, d, "vec_id", qVec, centroids, pq, k, nProbe = 8,
-        excludeId = Some(queryId))
+      Similarity.probeIndex(spark, d, pqIvf, qVec, k, nProbe = 8, excludeId = Some(queryId))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val s = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
     s.addData(Seq((888888L, qVec)))
-    val q = Similarity.ingestIvfIndexStreamPq(
-      s.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      centroids, pq, dir, ckpt)
+    val q = Similarity.ingestIndexStream(s.toDF().toDF("vec_id", "embedding"), pqIvf, dir, ckpt)
     try q.processAllAvailable() finally q.stop()
     val after = probe(dir)
     // the appended row carries the query's own codes, so ADC scores it at
     // the reconstruction's self-cosine — the maximum any row can reach
     assert(after.head._1 == 888888L, s"appended near-dup must rank first: $after")
     val dir2 = java.nio.file.Files.createTempDirectory("graft-ivf-pqi2").toString
-    Similarity.writeIvfIndexPq(
+    Similarity.writeIndex(
       emb.select(col("vec_id"), col("embedding"))
         .union(Seq((888888L, qVec)).toDF("vec_id", "embedding")),
-      "vec_id", "embedding", centroids, pq, dir2)
+      pqIvf, dir2)
     assert(probe(dir2) == after, "append == rebuild for the PQ layout")
-    assert(Similarity.compactIndex(spark, dir, Seq("bucket")))
+    assert(Similarity.compactIndex(spark, dir, pqIvf))
     assert(probe(dir) == after, "compaction must preserve probe answers")
-    assert(!Similarity.compactIndex(spark, dir, Seq("bucket")),
+    assert(!Similarity.compactIndex(spark, dir, pqIvf),
       "second compaction must be a no-op (streamed/ was folded)")
   }
 
@@ -447,9 +443,9 @@ class SimilaritySpec extends SparkTestBase {
     val fDir = java.nio.file.Files.createTempDirectory("graft-ivf-pq-f").toString
     val qDir = java.nio.file.Files.createTempDirectory("graft-ivf-pq-q").toString
     val pDir = java.nio.file.Files.createTempDirectory("graft-ivf-pq-p").toString
-    Similarity.writeIvfIndex(emb, "embedding", centroids, fDir)
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", centroids, qDir)
-    Similarity.writeIvfIndexPq(emb, "vec_id", "embedding", centroids, pq, pDir)
+    Similarity.writeIndex(emb, Similarity.IvfFloat("vec_id", "embedding", centroids), fDir)
+    Similarity.writeIndex(emb, Similarity.IvfInt8("vec_id", "embedding", centroids), qDir)
+    Similarity.writeIndex(emb, Similarity.IvfPq("vec_id", "embedding", centroids, pq), pDir)
     def bytes(dir: String): Long = {
       def walk(f: java.io.File): Long =
         if (f.isDirectory) f.listFiles().map(walk).sum
@@ -463,15 +459,15 @@ class SimilaritySpec extends SparkTestBase {
     assert(bytes(qDir) < bytes(fDir) * 0.6,
       s"int8 ${bytes(qDir)} vs float ${bytes(fDir)}")
     val qVec = vecs.find(_._1 == queryId).get._2
-    val probed = Similarity.probeIvfIndexPq(
-      spark, pDir, "vec_id", qVec, centroids, pq, k, nProbe = 6,
-      excludeId = Some(queryId))
+    val probed = Similarity.probeIndex(
+      spark, pDir, Similarity.IvfPq("vec_id", "embedding", centroids, pq), qVec, k,
+      nProbe = 6, excludeId = Some(queryId))
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
     val approx = probed.collect().map(_.getLong(0)).toSet
-    val exact = Similarity.probeIvfIndex(
-      spark, fDir, "vec_id", "embedding", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId)).collect().map(_.getLong(0)).toSet
+    val exact = Similarity.probeIndex(
+      spark, fDir, Similarity.IvfFloat("vec_id", "embedding", centroids), qVec, k,
+      nProbe = 6, excludeId = Some(queryId)).collect().map(_.getLong(0)).toSet
     // k-3 (measured: exactly 7 — training is deterministic, so this is
     // a stable figure, not flake): one notch below the int8 probe's k-2
     // at 4× fewer payload bytes, on a fixture whose neighbor gaps
@@ -481,9 +477,10 @@ class SimilaritySpec extends SparkTestBase {
     assert((approx & exact).size >= k - 3,
       s"overlap ${(approx & exact).size}/$k too low")
     // reserved index-column names refuse, same contract as the int8 writer
-    intercept[IllegalArgumentException](Similarity.writeIvfIndexPq(
-      emb.withColumn("codes", col("vec_id")), "vec_id", "embedding",
-      centroids, pq, pDir, payloadCols = Seq("codes")))
+    intercept[IllegalArgumentException](Similarity.writeIndex(
+      emb.withColumn("codes", col("vec_id")),
+      Similarity.IvfPq("vec_id", "embedding", centroids, pq, payloadCols = Seq("codes")),
+      pDir))
   }
 
   test("residual PQ: tighter reconstructions beat raw PQ on clustered data") {
@@ -510,8 +507,9 @@ class SimilaritySpec extends SparkTestBase {
     val res = Similarity.trainPqResidual(df, "vec_id", "embedding", centroids, m = 8, ksub = 16)
     val rawDir = java.nio.file.Files.createTempDirectory("graft-pq-raw").toString
     val resDir = java.nio.file.Files.createTempDirectory("graft-pq-res").toString
-    Similarity.writeIvfIndexPq(df, "vec_id", "embedding", centroids, raw, rawDir)
-    Similarity.writeIvfIndexPqResidual(df, "vec_id", "embedding", centroids, res, resDir)
+    Similarity.writeIndex(df, Similarity.IvfPq("vec_id", "embedding", centroids, raw), rawDir)
+    Similarity.writeIndex(
+      df, Similarity.IvfPqResidual("vec_id", "embedding", centroids, res), resDir)
     def recall(ids: Set[Long]): Double = truth.count(ids.contains).toDouble / k
     // score ERROR is the honest measurement here: the true within-cluster
     // ranking is noise-vs-noise (every member sits the same distance from
@@ -522,11 +520,14 @@ class SimilaritySpec extends SparkTestBase {
       .map { case (id, v) => id -> cosine(v, q) }.toMap
     def meanErr(rows: Array[(Long, Double)]): Double =
       rows.map { case (id, s) => math.abs(s - trueCos(id)) }.sum / rows.length
-    val rawRows = Similarity.probeIvfIndexPq(
-      spark, rawDir, "vec_id", q, centroids, raw, 399, nProbe = 8, excludeId = Some(0L))
+    val rawRows = Similarity.probeIndex(
+      spark, rawDir, Similarity.IvfPq("vec_id", "embedding", centroids, raw), q,
+      399, nProbe = 8, excludeId = Some(0L))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val resProbed = Similarity.probeIvfIndexPqResidual(
-      spark, resDir, "vec_id", q, centroids, res, 399, nProbe = 8, excludeId = Some(0L))
+    val resProbed = Similarity.probeIndex(
+      spark, resDir,
+      Similarity.IvfPqResidual("vec_id", "embedding", centroids, res), q, 399,
+      nProbe = 8, excludeId = Some(0L))
     val plan = resProbed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
     val resRows = resProbed.collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -609,12 +610,13 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
     val pq = Similarity.trainPqResidual(emb, "vec_id", "embedding", centroids, m = 8)
+    val residualIvf = Similarity.IvfPqResidual("vec_id", "embedding", centroids, pq)
+    val pqIvf = Similarity.IvfPq("vec_id", "embedding", centroids, pq)
     val dir = java.nio.file.Files.createTempDirectory("graft-pq-res-model").toString
-    Similarity.writeIvfIndexPqResidual(emb, "vec_id", "embedding", centroids, pq, dir)
+    Similarity.writeIndex(emb, residualIvf, dir)
     val qVec = vecs.find(_._1 == queryId).get._2
-    val got = Similarity.probeIvfIndexPqResidual(
-      spark, dir, "vec_id", qVec, centroids, pq, k, nProbe = 8,
-      excludeId = Some(queryId))
+    val got = Similarity.probeIndex(
+      spark, dir, residualIvf, qVec, k, nProbe = 8, excludeId = Some(queryId))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     val qn = math.sqrt(qVec.foldLeft(0.0)((a, x) => a + x.toDouble * x))
     val byId = vecs.toMap
@@ -666,17 +668,14 @@ class SimilaritySpec extends SparkTestBase {
     // generation's flavor marker is what refuses the cross-flavor
     // probe and ingester — plausible-looking garbage scores otherwise
     val crossProbe = intercept[IllegalArgumentException] {
-      Similarity.probeIvfIndexPq(
-        spark, dir, "vec_id", qVec, centroids, pq, k, nProbe = 2)
+      Similarity.probeIndex(spark, dir, pqIvf, qVec, k, nProbe = 2)
     }
     assert(crossProbe.getMessage.contains("flavor"), crossProbe.getMessage)
     val ck = java.nio.file.Files.createTempDirectory("graft-pq-flavor-ck").toString
     val stray = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
     val crossIngest = intercept[IllegalArgumentException] {
-      Similarity.ingestIvfIndexStreamPq(
-        stray.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        centroids, pq, dir, ck)
+      Similarity.ingestIndexStream(stray.toDF().toDF("vec_id", "embedding"), pqIvf, dir, ck)
     }
     assert(crossIngest.getMessage.contains("flavor"), crossIngest.getMessage)
     // ...and compaction carries the marker: after folding a legitimate
@@ -685,14 +684,36 @@ class SimilaritySpec extends SparkTestBase {
     val in2 = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
     in2.addData(Seq((888888L, qVec)))
-    val rq = Similarity.ingestIvfIndexStreamPqResidual(
-      in2.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      centroids, pq, dir, rck)
+    val rq = Similarity.ingestIndexStream(
+      in2.toDF().toDF("vec_id", "embedding"), residualIvf, dir, rck)
     try rq.processAllAvailable() finally rq.stop()
-    assert(Similarity.compactIndex(spark, dir, Seq("bucket")))
+    assert(Similarity.compactIndex(spark, dir, residualIvf))
     intercept[IllegalArgumentException] {
-      Similarity.probeIvfIndexPq(
-        spark, dir, "vec_id", qVec, centroids, pq, k, nProbe = 2)
+      Similarity.probeIndex(spark, dir, pqIvf, qVec, k, nProbe = 2)
+    }
+  }
+
+  test("every probe refuses a wrong-flavor root with the flavor message") {
+    val emb = Tables.embeddings(spark, sf001)
+    val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val pq = Similarity.trainPqResidual(emb, "vec_id", "embedding", centroids, m = 8)
+    val qVec = vecs.find(_._1 == queryId).get._2
+    def root(layout: Similarity.IndexLayout): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-flavor").toString
+      Similarity.writeIndex(emb, layout, dir)
+      dir
+    }
+    val float = Similarity.IvfFloat("vec_id", "embedding", centroids)
+    // (root written by one layout, probe layout of another flavor)
+    val mismatches = Seq(
+      root(Similarity.IvfInt8("vec_id", "embedding", centroids)) -> float,
+      root(float) -> Similarity.Lsh("vec_id", "embedding", 24, 3),
+      root(Similarity.IvfPqResidual("vec_id", "embedding", centroids, pq)) ->
+        Similarity.IvfPq("vec_id", "embedding", centroids, pq))
+    mismatches.foreach { case (dir, wrong) =>
+      val e = intercept[IllegalArgumentException](
+        Similarity.probeIndex(spark, dir, wrong, qVec, k, nProbe = 2).collect())
+      assert(e.getMessage.contains("flavor"), e.getMessage)
     }
   }
 
@@ -704,11 +725,11 @@ class SimilaritySpec extends SparkTestBase {
     val pq2 = Similarity.trainPq(emb, "vec_id", "embedding", m = 8)
     assert(pq.books.flatten.flatten.toSeq == pq2.books.flatten.flatten.toSeq)
     val pDir = java.nio.file.Files.createTempDirectory("graft-pq-model").toString
-    Similarity.writeIvfIndexPq(emb, "vec_id", "embedding", centroids, pq, pDir)
+    Similarity.writeIndex(emb, Similarity.IvfPq("vec_id", "embedding", centroids, pq), pDir)
     val qVec = vecs.find(_._1 == queryId).get._2
-    val got = Similarity.probeIvfIndexPq(
-      spark, pDir, "vec_id", qVec, centroids, pq, k, nProbe = 8,
-      excludeId = Some(queryId))
+    val got = Similarity.probeIndex(
+      spark, pDir, Similarity.IvfPq("vec_id", "embedding", centroids, pq), qVec, k,
+      nProbe = 8, excludeId = Some(queryId))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     // independent driver model: encode through the kernel entry point
     // (the same one the executors compile against), then replicate the
@@ -777,27 +798,26 @@ class SimilaritySpec extends SparkTestBase {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val floatIvf = Similarity.IvfFloat("vec_id", "embedding", centroids)
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-stream-ck").toString
     // base index from the first half of the corpus…
     val half = vecs.length / 2
     val (baseVecs, lateVecs) = vecs.sortBy(_._1).splitAt(half)
-    Similarity.writeIvfIndex(
-      baseVecs.toSeq.toDF("vec_id", "embedding"), "embedding", centroids, path)
+    Similarity.writeIndex(baseVecs.toSeq.toDF("vec_id", "embedding"), floatIvf, path)
     // …the second half ARRIVES over two streamed batches
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
-    val q = Similarity.ingestIvfIndexStream(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt)
+    val q = Similarity.ingestIndexStream(
+      input.toDF().toDF("vec_id", "embedding"), floatIvf, path, ckpt)
     try {
       val (b1, b2) = lateVecs.splitAt(lateVecs.length / 2)
       input.addData(b1.toSeq); q.processAllAvailable()
       input.addData(b2.toSeq); q.processAllAvailable()
     } finally q.stop()
     val qVec = vecs.find(_._1 == queryId).get._2
-    val probed = Similarity.probeIvfIndex(
-      spark, path, "vec_id", "embedding", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId))
+    val probed = Similarity.probeIndex(
+      spark, path, floatIvf, qVec, k, nProbe = 6, excludeId = Some(queryId))
     // both index roots are scanned bucket-pruned
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
@@ -813,15 +833,15 @@ class SimilaritySpec extends SparkTestBase {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val floatIvf = Similarity.IvfFloat("vec_id", "embedding", centroids)
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-compact").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-compact-ck").toString
     val (baseVecs, lateVecs) = vecs.sortBy(_._1).splitAt(vecs.length / 2)
-    Similarity.writeIvfIndex(
-      baseVecs.toSeq.toDF("vec_id", "embedding"), "embedding", centroids, path)
+    Similarity.writeIndex(baseVecs.toSeq.toDF("vec_id", "embedding"), floatIvf, path)
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
-    val q = Similarity.ingestIvfIndexStream(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt)
+    val q = Similarity.ingestIndexStream(
+      input.toDF().toDF("vec_id", "embedding"), floatIvf, path, ckpt)
     try {
       // several small batches -> several small files per touched bucket
       lateVecs.grouped(math.max(1, lateVecs.length / 4)).foreach { b =>
@@ -829,13 +849,13 @@ class SimilaritySpec extends SparkTestBase {
       }
     } finally q.stop()
     val qVec = vecs.find(_._1 == queryId).get._2
-    def probe() = Similarity.probeIvfIndex(
-      spark, path, "vec_id", "embedding", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId)).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def probe() = Similarity.probeIndex(
+      spark, path, floatIvf, qVec, k, nProbe = 6, excludeId = Some(queryId))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val before = probe()
     val gen1 = genDir(path)
     assert(new java.io.File(s"$gen1/streamed").exists())
-    assert(Similarity.compactIndex(spark, path, Seq("bucket")))
+    assert(Similarity.compactIndex(spark, path, floatIvf))
     val gen2 = genDir(path)
     assert(gen2 != gen1, "compaction must flip to a new generation")
     assert(!new java.io.File(s"$gen2/streamed").exists(), "streamed must fold away")
@@ -844,7 +864,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(new java.io.File(gen1).exists(), "grace generation must survive the flip")
     assert(probe() == before, "compaction must never change answers")
     // idempotent: nothing left to compact
-    assert(!Similarity.compactIndex(spark, path, Seq("bucket")))
+    assert(!Similarity.compactIndex(spark, path, floatIvf))
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     // one more arrival — the ANTI-query vector (cosine −1), so top-k
@@ -856,15 +876,15 @@ class SimilaritySpec extends SparkTestBase {
     val input2 = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark) // new source position too
     input2.addData(Seq((999999L, qVec.map(-_))))
-    val q2 = Similarity.ingestIvfIndexStream(
-      input2.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt2)
+    val q2 = Similarity.ingestIndexStream(
+      input2.toDF().toDF("vec_id", "embedding"), floatIvf, path, ckpt2)
     try q2.processAllAvailable() finally q2.stop()
     // a crashed rebuild's partial generation (no _GEN_DONE): probes never
     // resolve it, and the next compaction sweeps it before proceeding
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/gen-9/base/bucket=0"))
     assert(genDir(path) == gen2, "an uncommitted partial must not win resolution")
     assert(probe() == before, "a partial generation must not disturb probes")
-    assert(Similarity.compactIndex(spark, path, Seq("bucket")))
+    assert(Similarity.compactIndex(spark, path, floatIvf))
     assert(!new java.io.File(s"$path/gen-9").exists(), "partials must be swept")
     assert(!new java.io.File(gen1).exists(), "the old grace generation must be swept")
     assert(probe() == before, "compaction after a crash must still be duplicate-free")
@@ -874,7 +894,7 @@ class SimilaritySpec extends SparkTestBase {
     // generation stays for in-flight probes
     val liveGen = genDir(path)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/gen-20/base/bucket=0"))
-    assert(!Similarity.compactIndex(spark, path, Seq("bucket")), "nothing to compact")
+    assert(!Similarity.compactIndex(spark, path, floatIvf), "nothing to compact")
     assert(!new java.io.File(s"$path/gen-20").exists(),
       "the no-op path must retire done-less partials")
     assert(genDir(path) == liveGen && probe() == before)
@@ -884,38 +904,41 @@ class SimilaritySpec extends SparkTestBase {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val floatIvf = Similarity.IvfFloat("vec_id", "embedding", centroids)
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-lock").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-lock-ck").toString
     val (baseVecs, lateVecs) = vecs.sortBy(_._1).splitAt(vecs.length / 2)
-    Similarity.writeIvfIndex(
-      baseVecs.toSeq.toDF("vec_id", "embedding"), "embedding", centroids, path)
+    Similarity.writeIndex(baseVecs.toSeq.toDF("vec_id", "embedding"), floatIvf, path)
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
-    val q = Similarity.ingestIvfIndexStream(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt)
+    val q = Similarity.ingestIndexStream(
+      input.toDF().toDF("vec_id", "embedding"), floatIvf, path, ckpt)
     try {
       input.addData(lateVecs.toSeq); q.processAllAvailable()
       // while the ingester lives, every other producer fails fast at the
       // lock instead of flipping the generation under its appends
       val e = intercept[IllegalStateException](
-        Similarity.compactIndex(spark, path, Seq("bucket")))
+        Similarity.compactIndex(spark, path, floatIvf))
       assert(e.getMessage.contains("_GEN_LOCK"), e.getMessage)
-      assert(e.getMessage.contains("ingestIvfIndexStream"),
+      assert(e.getMessage.contains("ingestIndexStream"),
         "the holder tag must name the live ingester")
-      intercept[IllegalStateException](Similarity.writeIvfIndex(
-        baseVecs.toSeq.toDF("vec_id", "embedding"), "embedding", centroids, path))
+      intercept[IllegalStateException](Similarity.writeIndex(
+        baseVecs.toSeq.toDF("vec_id", "embedding"), floatIvf,
+        path))
       val ckptB = java.nio.file.Files.createTempDirectory("graft-ivf-lock-ckB").toString
-      intercept[IllegalStateException](Similarity.ingestIvfIndexStream(
-        input.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckptB))
+      intercept[IllegalStateException](Similarity.ingestIndexStream(
+        input.toDF().toDF("vec_id", "embedding"), floatIvf,
+        path, ckptB))
     } finally q.stop()
     // stop() releases SYNCHRONOUSLY (not via the async listener bus):
     // the operational stop-then-compact sequence works back-to-back
-    assert(Similarity.compactIndex(spark, path, Seq("bucket")))
+    assert(Similarity.compactIndex(spark, path, floatIvf))
     // the pre-compaction checkpoint has committed batches but its sink
     // log died with the folded streamed/ — resuming it is refused at
     // stream start (compactIndex's documented recovery contract)...
-    val e2 = intercept[IllegalStateException](Similarity.ingestIvfIndexStream(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt))
+    val e2 = intercept[IllegalStateException](Similarity.ingestIndexStream(
+      input.toDF().toDF("vec_id", "embedding"),
+      floatIvf, path, ckpt))
     assert(e2.getMessage.contains("FRESH checkpoint"), e2.getMessage)
     // ...and the refusal released the lock (nothing wedged): a fresh
     // checkpoint starts, ingests, and a plain same-checkpoint RESTART
@@ -923,12 +946,12 @@ class SimilaritySpec extends SparkTestBase {
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft-ivf-lock-ck2").toString
     val input2 = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
-    val q2 = Similarity.ingestIvfIndexStream(
-      input2.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt2)
+    val q2 = Similarity.ingestIndexStream(
+      input2.toDF().toDF("vec_id", "embedding"), floatIvf, path, ckpt2)
     try { input2.addData(Seq((777777L, vecs.head._2))); q2.processAllAvailable() }
     finally q2.stop()
-    val q3 = Similarity.ingestIvfIndexStream(
-      input2.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt2)
+    val q3 = Similarity.ingestIndexStream(
+      input2.toDF().toDF("vec_id", "embedding"), floatIvf, path, ckpt2)
     try { input2.addData(Seq((777778L, vecs.head._2))); q3.processAllAvailable() }
     finally q3.stop()
     val ids = spark.read.parquet(s"${genDir(path)}/streamed")
@@ -939,23 +962,25 @@ class SimilaritySpec extends SparkTestBase {
     // sink log, so the PRE-compaction checkpoint's batch ids are already
     // "recorded" — FileStreamSink would silently skip them. The identity
     // pairing refuses what a sink-log-existence check would wave through
-    val e3 = intercept[IllegalStateException](Similarity.ingestIvfIndexStream(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt))
+    val e3 = intercept[IllegalStateException](Similarity.ingestIndexStream(
+      input.toDF().toDF("vec_id", "embedding"),
+      floatIvf, path, ckpt))
     assert(e3.getMessage.contains("does not belong"), e3.getMessage)
     // and a NEVER-used checkpoint against a generation that already has
     // another's appends is refused too (its from-zero batch counter would
     // collide with the existing sink log): compact first
     val ckpt3 = java.nio.file.Files.createTempDirectory("graft-ivf-lock-ck3").toString
-    val e4 = intercept[IllegalStateException](Similarity.ingestIvfIndexStream(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt3))
+    val e4 = intercept[IllegalStateException](Similarity.ingestIndexStream(
+      input.toDF().toDF("vec_id", "embedding"),
+      floatIvf, path, ckpt3))
     assert(e4.getMessage.contains("Compact the index first"), e4.getMessage)
     // both refusals released the lock: compaction proceeds, after which
     // the never-used checkpoint pairs with the clean generation
-    assert(Similarity.compactIndex(spark, path, Seq("bucket")))
+    assert(Similarity.compactIndex(spark, path, floatIvf))
     val input3 = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
-    val q4 = Similarity.ingestIvfIndexStream(
-      input3.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt3)
+    val q4 = Similarity.ingestIndexStream(
+      input3.toDF().toDF("vec_id", "embedding"), floatIvf, path, ckpt3)
     try { input3.addData(Seq((777779L, vecs.head._2))); q4.processAllAvailable() }
     finally q4.stop()
     val ids2 = spark.read.parquet(s"${genDir(path)}/streamed")
@@ -965,18 +990,19 @@ class SimilaritySpec extends SparkTestBase {
     // (mid-pairing crash, or an abandoned checkpoint) refuses a fresh
     // checkpoint — the claim may still be resumable — and the refusal
     // names the documented heal, after which the start proceeds
-    assert(Similarity.compactIndex(spark, path, Seq("bucket"))) // clean gen, no id
+    assert(Similarity.compactIndex(spark, path, floatIvf)) // clean gen, no id
     val orphanId = new java.io.File(s"${genDir(path)}/_INGEST_ID")
     java.nio.file.Files.writeString(orphanId.toPath, "crashed-pairing-claim")
     val ckpt4 = java.nio.file.Files.createTempDirectory("graft-ivf-lock-ck4").toString
     val input4 = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
-    val e5 = intercept[IllegalStateException](Similarity.ingestIvfIndexStream(
-      input4.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt4))
+    val e5 = intercept[IllegalStateException](Similarity.ingestIndexStream(
+      input4.toDF().toDF("vec_id", "embedding"),
+      floatIvf, path, ckpt4))
     assert(e5.getMessage.contains("claimed by ingest id crashed-pairing-claim"), e5.getMessage)
     assert(orphanId.delete(), "heal: drop the never-committed claim")
-    val q5 = Similarity.ingestIvfIndexStream(
-      input4.toDF().toDF("vec_id", "embedding"), "embedding", centroids, path, ckpt4)
+    val q5 = Similarity.ingestIndexStream(
+      input4.toDF().toDF("vec_id", "embedding"), floatIvf, path, ckpt4)
     try { input4.addData(Seq((777780L, vecs.head._2))); q5.processAllAvailable() }
     finally q5.stop()
     val ids3 = spark.read.parquet(s"${genDir(path)}/streamed")
@@ -988,16 +1014,16 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, sf001)
     val (bands, bits) = (24, 3) // the fixture-tuned q_sim_topk_lsh regime
     val path = java.nio.file.Files.createTempDirectory("graft-lsh-index").toString
-    Similarity.writeLshIndex(emb, "embedding", path, bands, bits)
+    Similarity.writeIndex(emb, Similarity.Lsh("vec_id", "embedding", bands, bits), path)
     // band-partitioned directories on disk, one sig sub-dir per bucket hit
     val bandDirs =
       new java.io.File(s"${genDir(path)}/base").listFiles()
         .filter(_.getName.startsWith("band="))
     assert(bandDirs.length == bands)
     val qVec = vecs.find(_._1 == queryId).get._2
-    val probed = Similarity.probeLshIndex(
-      spark, path, "vec_id", "embedding", qVec, k, bands, bits,
-      excludeId = Some(queryId))
+    val probed = Similarity.probeIndex(
+      spark, path, Similarity.Lsh("vec_id", "embedding", bands, bits), qVec, k,
+      nProbe = bands, excludeId = Some(queryId))
     // the scan carries partition filters on (band, sig) — directory-level
     // pruning, not a post-scan filter
     val plan = probed.queryExecution.executedPlan.toString
@@ -1028,19 +1054,21 @@ class SimilaritySpec extends SparkTestBase {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-lsh-stream-ck").toString
     val half = vecs.length / 2
     val (baseVecs, lateVecs) = vecs.sortBy(_._1).splitAt(half)
-    Similarity.writeLshIndex(
-      baseVecs.toSeq.toDF("vec_id", "embedding"), "embedding", path, bands, bits)
+    Similarity.writeIndex(
+      baseVecs.toSeq.toDF("vec_id", "embedding"),
+      Similarity.Lsh("vec_id", "embedding", bands, bits), path)
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])](spark)
-    val q = Similarity.ingestLshIndexStream(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", dim, path, ckpt, bands, bits)
+    val q = Similarity.ingestIndexStream(
+      input.toDF().toDF("vec_id", "embedding"),
+      Similarity.Lsh("vec_id", "embedding", bands, bits, dim = dim), path, ckpt)
     try {
       input.addData(lateVecs.toSeq); q.processAllAvailable()
     } finally q.stop()
     val qVec = vecs.find(_._1 == queryId).get._2
-    val probed = Similarity.probeLshIndex(
-      spark, path, "vec_id", "embedding", qVec, k, bands, bits,
-      excludeId = Some(queryId))
+    val probed = Similarity.probeIndex(
+      spark, path, Similarity.Lsh("vec_id", "embedding", bands, bits), qVec, k,
+      nProbe = bands, excludeId = Some(queryId))
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("band"), plan)
     val got = probed.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -1062,10 +1090,10 @@ class SimilaritySpec extends SparkTestBase {
     // pre-filtered corpus (same seed/planes → identical candidates)
     val (bands, bits) = (24, 3)
     val lshDir = java.nio.file.Files.createTempDirectory("graft-lsh-filt").toString
-    Similarity.writeLshIndex(emb, "embedding", lshDir, bands, bits)
-    val lshProbed = Similarity.probeLshIndex(
-      spark, lshDir, "vec_id", "embedding", qVec, k, bands, bits,
-      excludeId = Some(queryId), predicate = Some(pred))
+    Similarity.writeIndex(emb, Similarity.Lsh("vec_id", "embedding", bands, bits), lshDir)
+    val lshProbed = Similarity.probeIndex(
+      spark, lshDir, Similarity.Lsh("vec_id", "embedding", bands, bits), qVec, k,
+      nProbe = bands, excludeId = Some(queryId), predicate = Some(pred))
     val lshPlan = lshProbed.queryExecution.executedPlan.toString
     assert(lshPlan.contains("PartitionFilters") && lshPlan.contains("band"), lshPlan)
     // the payload predicate reaches the parquet scan, it is not post-hoc
@@ -1080,16 +1108,16 @@ class SimilaritySpec extends SparkTestBase {
     // unfiltered probe of an index built from the pre-filtered corpus
     // with the SAME centroids (identical routing)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
+    val floatIvf = Similarity.IvfFloat("vec_id", "embedding", centroids)
     val fullF = java.nio.file.Files.createTempDirectory("graft-ivf-filt-a").toString
     val filtF = java.nio.file.Files.createTempDirectory("graft-ivf-filt-b").toString
-    Similarity.writeIvfIndex(emb, "embedding", centroids, fullF)
-    Similarity.writeIvfIndex(emb.filter(pred), "embedding", centroids, filtF)
-    val ivfGot = Similarity.probeIvfIndex(
-      spark, fullF, "vec_id", "embedding", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId), predicate = Some(pred))
-    val ivfWant = Similarity.probeIvfIndex(
-      spark, filtF, "vec_id", "embedding", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId))
+    Similarity.writeIndex(emb, floatIvf, fullF)
+    Similarity.writeIndex(emb.filter(pred), floatIvf, filtF)
+    val ivfGot = Similarity.probeIndex(
+      spark, fullF, floatIvf, qVec, k, nProbe = 6, excludeId = Some(queryId),
+      predicate = Some(pred))
+    val ivfWant = Similarity.probeIndex(
+      spark, filtF, floatIvf, qVec, k, nProbe = 6, excludeId = Some(queryId))
     assert(ivfGot.queryExecution.executedPlan.toString.contains("PartitionFilters"))
     assert(rows(ivfGot) == rows(ivfWant))
 
@@ -1097,24 +1125,27 @@ class SimilaritySpec extends SparkTestBase {
     val filtQ = java.nio.file.Files.createTempDirectory("graft-ivfq-filt-b").toString
     // the filtered probe needs `label` in the index payload — opt in
     // (the default payload is the bare id/scale/codes/bucket shape)
-    Similarity.writeIvfIndexQuantized(
-      emb, "vec_id", "embedding", centroids, fullQ, payloadCols = Seq("label"))
-    Similarity.writeIvfIndexQuantized(
-      emb.filter(pred), "vec_id", "embedding", centroids, filtQ, payloadCols = Seq("label"))
-    val qGot = Similarity.probeIvfIndexQuantized(
-      spark, fullQ, "vec_id", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId), predicate = Some(pred))
-    val qWant = Similarity.probeIvfIndexQuantized(
-      spark, filtQ, "vec_id", qVec, centroids, k, nProbe = 6,
-      excludeId = Some(queryId))
+    Similarity.writeIndex(
+      emb, Similarity.IvfInt8("vec_id", "embedding", centroids, payloadCols = Seq("label")),
+      fullQ)
+    Similarity.writeIndex(
+      emb.filter(pred),
+      Similarity.IvfInt8("vec_id", "embedding", centroids, payloadCols = Seq("label")), filtQ)
+    val qGot = Similarity.probeIndex(
+      spark, fullQ, Similarity.IvfInt8("vec_id", "embedding", centroids), qVec, k,
+      nProbe = 6, excludeId = Some(queryId), predicate = Some(pred))
+    val qWant = Similarity.probeIndex(
+      spark, filtQ, Similarity.IvfInt8("vec_id", "embedding", centroids), qVec, k,
+      nProbe = 6, excludeId = Some(queryId))
     assert(rows(qGot) == rows(qWant))
 
     // index-column names are reserved: a payload named 'codes' (or
     // 'scale'/'bucket') would collide with the index's own columns and
     // leave the written index unprobeable — the writer must refuse
-    intercept[IllegalArgumentException](Similarity.writeIvfIndexQuantized(
-      emb.withColumnRenamed("label", "codes"), "vec_id", "embedding",
-      centroids, fullQ, payloadCols = Seq("codes")))
+    intercept[IllegalArgumentException](Similarity.writeIndex(
+      emb.withColumnRenamed("label", "codes"),
+      Similarity.IvfInt8("vec_id", "embedding", centroids, payloadCols = Seq("codes")),
+      fullQ))
   }
 
   test("assignBuckets: NULL vectors get a NULL bucket; assignment is deterministic") {
@@ -1322,12 +1353,13 @@ class SimilaritySpec extends SparkTestBase {
     // probes >= cells: the hier build IS the flat build over model.fine
     val flatDir = java.nio.file.Files.createTempDirectory("graft-ivf-hflat").toString
     val hierDir = java.nio.file.Files.createTempDirectory("graft-ivf-hier").toString
-    Similarity.writeIvfIndex(emb, "embedding", model.fine, flatDir)
-    Similarity.writeIvfIndexHier(emb, "embedding", model, hierDir,
-      probes = model.coarse.length)
-    def probe(dir: String) = Similarity.probeIvfIndex(
-      spark, dir, "vec_id", "embedding", qVec, model.fine, k, nProbe = 3,
-      excludeId = Some(queryId))
+    Similarity.writeIndex(emb, Similarity.IvfFloat("vec_id", "embedding", model.fine), flatDir)
+    Similarity.writeIndex(
+      emb, Similarity.IvfFloatHier("vec_id", "embedding", model, probes = model.coarse.length),
+      hierDir)
+    def probe(dir: String) = Similarity.probeIndex(
+      spark, dir, Similarity.IvfFloat("vec_id", "embedding", model.fine),
+      qVec, k, nProbe = 3, excludeId = Some(queryId))
     val flatGot = probe(flatDir).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val hierGot = probe(hierDir).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(hierGot == flatGot, "probes-all hier build must equal the flat build")
@@ -1337,7 +1369,8 @@ class SimilaritySpec extends SparkTestBase {
     // the approximation (probes=2 of 4 cells): same layout id space,
     // high top-k overlap with the exact flat build on the fixture
     val hier2Dir = java.nio.file.Files.createTempDirectory("graft-ivf-hier2").toString
-    Similarity.writeIvfIndexHier(emb, "embedding", model, hier2Dir, probes = 2)
+    Similarity.writeIndex(
+      emb, Similarity.IvfFloatHier("vec_id", "embedding", model, probes = 2), hier2Dir)
     val approx = probe(hier2Dir).collect().map(_.getLong(0)).toSet
     val exact = flatGot.map(_._1).toSet
     assert((approx & exact).size >= k - 2,
