@@ -43,7 +43,9 @@ object GraftSession {
     // every object aggregate shares this ceiling, so it is sized to
     // executor memory, not to ambition.
     spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-    spark
+    // local-disk checkpoint and state files without a forked chmod /
+    // readlink per file (see LocalFs)
+    LocalFs.install(spark)
   }
 
   /** The driver entry points' session: core count from SPARK_GRAFT_CPUS
@@ -56,8 +58,12 @@ object GraftSession {
 
   /** Local session for tests / ad-hoc runs. */
   def local(appName: String = "graft", cores: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    // also as SparkContext Hadoop confs: FileSystem instances are cached
+    // per JVM by scheme, so the first `file:` instance must be graft's
+    val builder = LocalFs.confs.foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(s"spark.hadoop.$k", v)
+    }
+    val spark = builder
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)

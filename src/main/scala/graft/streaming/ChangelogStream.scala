@@ -34,14 +34,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object ChangelogStream {
 
   /** Reference-protocol runtime defaults: RocksDB-backed state (the
-    * engine the reference's TABLE state lives in) — call once before
-    * starting changelog queries. Partition/thread sizing is left to the
-    * session (GraftSession pins shuffle partitions). */
+    * engine the reference's TABLE state lives in) and graft's fork-free
+    * local filesystem for its checkpoint files ([[graft.LocalFs]]; a
+    * `file` implementation the session already names is kept) — call
+    * once before starting changelog queries. Partition/thread sizing is
+    * left to the session (GraftSession pins shuffle partitions). */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark
+    graft.LocalFs.install(spark, keepSet = true)
   }
 
   /** The reference's 2 s commit cadence (docker-compose.yaml:273). */

@@ -22,16 +22,25 @@ class GraftSessionSpec extends SparkTestBase {
     assert(
       c.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "262144",
       "the changelog aggregate's hash-map ceiling (the 128 default re-introduces the per-partition sort)")
+    assert(c.get("fs.AbstractFileSystem.file.impl") == classOf[LocalFs.Fs].getName,
+      "checkpoint files (FileContext) go through the fork-free local filesystem")
+    assert(c.get("fs.file.impl") == classOf[LocalFs.FileSystem].getName)
   }
 
   test("configure is idempotent and re-asserts over a drifted session") {
-    val key = "spark.sql.ansi.enabled"
-    val prior = spark.conf.get(key)
+    val pinned = Seq(
+      "spark.sql.ansi.enabled" -> ("false", "true"),
+      "fs.AbstractFileSystem.file.impl" -> ("org.apache.hadoop.fs.local.LocalFs", classOf[LocalFs.Fs].getName),
+      "fs.file.impl" -> ("org.apache.hadoop.fs.LocalFileSystem", classOf[LocalFs.FileSystem].getName))
+    val prior = pinned.map { case (key, _) => key -> spark.conf.get(key) }
     try {
-      spark.conf.set(key, "false") // a cluster profile or test flipped it
+      // a cluster profile or test flipped them
+      pinned.foreach { case (key, (drifted, _)) => spark.conf.set(key, drifted) }
       GraftSession.configure(spark)
-      assert(spark.conf.get(key) == "true",
-        "configure must re-pin semantics over a drifted session")
-    } finally spark.conf.set(key, prior)
+      pinned.foreach { case (key, (_, expected)) =>
+        assert(spark.conf.get(key) == expected,
+          s"configure must re-pin $key over a drifted session")
+      }
+    } finally prior.foreach { case (key, v) => spark.conf.set(key, v) }
   }
 }
