@@ -181,7 +181,7 @@ object SparkEntry {
       // events, same semantics, different wire representation.
       val env = graft.sources.Cdc.envelopeFromEvents(
         Tables.withTsMicros(Tables.events(s, dir)))
-      graft.sources.Cdc.applyEnvelope(env, "user_id").orderBy(col("user_id").asc_nulls_last)
+      graft.sources.Cdc.applyEnvelope(env, Seq("user_id")).orderBy(col("user_id").asc_nulls_last)
     }),
 
     "q_live_count" -> ((s, dir) =>

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * `latest_row` aggregate), so every literal-parameterized kernel is
   * first-class in `spark.sql(...)` exactly like a built-in. Kernels
   * whose parameters are driver-computed runtime objects (centroid
-  * tables, PQ codebooks, vocab maps, bloom payloads, `mg_sketch`'s
-  * typed aggregator) stay Column-API-only — SQL has no literal syntax
-  * for them:
+  * tables, the int8 probe's query vector, vocab maps, bloom payloads,
+  * `mg_sketch`'s typed aggregator) stay Column-API-only — SQL has no
+  * literal syntax for them:
   *
   * {{{
   *   SELECT simhash64(text), cosine_sim(a, b), latest_row(struct(*), seq)

@@ -1022,57 +1022,6 @@ object VectorKernels {
     else new GenericArrayData(java.util.Arrays.copyOf(topIdx, filled))
   }
 
-  /** Product-quantization encode (Jégou et al., TPAMI 2011): the vector
-    * is unit-normalized (cosine is scale-invariant, so ranks are
-    * unchanged and every codebook sees the same distribution), split
-    * into `m` contiguous subspaces of `dsub` dims, and each subspace is
-    * replaced by the index of its nearest codebook entry (L2, the PQ
-    * training objective) — `m` BYTES per vector instead of `dim` floats.
-    * Ties keep the first (lowest) code: strict `<` over the
-    * code-ascending scan, the same first-index-wins convention as
-    * [[nearestCentroids]]. NULL for a ragged vector or one with
-    * zero/non-finite norm (no direction to encode — the
-    * NULL-not-garbage posture of [[quantizeInt8]]). Cost O(dim·ksub)
-    * per row, paid ONCE at index-write time; the probe side
-    * ([[pqAdcScore]]) is what this buys: O(m) per row. */
-  def pqEncode(
-      vec: ArrayData,
-      books: Array[Array[Array[Float]]],
-      dim: Int,
-      dsub: Int): Array[Byte] = {
-    if (vec.numElements() != dim) return null
-    var na = 0.0
-    var i = 0
-    while (i < dim) { val x = vec.getFloat(i).toDouble; na += x * x; i += 1 }
-    val norm = math.sqrt(na)
-    if (!java.lang.Double.isFinite(norm) || norm == 0.0) return null
-    val m = books.length
-    val out = new Array[Byte](m)
-    var s = 0
-    while (s < m) {
-      val book = books(s)
-      val off = s * dsub
-      var best = 0
-      var bestDist = Double.PositiveInfinity
-      var c = 0
-      while (c < book.length) {
-        val ct = book(c)
-        var dist = 0.0
-        var j = 0
-        while (j < dsub) {
-          val d = vec.getFloat(off + j).toDouble / norm - ct(j).toDouble
-          dist += d * d
-          j += 1
-        }
-        if (java.lang.Double.compare(dist, bestDist) < 0) { bestDist = dist; best = c }
-        c += 1
-      }
-      out(s) = best.toByte
-      s += 1
-    }
-    out
-  }
-
   /** Cosine of an int8-quantized row against one float query, dequantized
     * INSIDE the accumulation loop — the compiled replacement for the
     * quantized probe's `transform` HOF (interpreted per element in the
@@ -1107,37 +1056,6 @@ object VectorKernels {
     if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
 
-  /** Asymmetric-distance cosine score of one PQ code array against a
-    * query whose per-(subspace, code) partial dot products and
-    * reconstruction norms² were precomputed driver-side
-    * (`tables` = m·ksub dot entries then m·ksub norm² entries, flattened
-    * subspace-major): score = Σ dot[s][code_s] / √(Σ norm2[s][code_s]) —
-    * the cosine between the unit query and the RECONSTRUCTION the codes
-    * name. O(m) array reads per row, no per-dimension work: this lookup
-    * loop is the entire per-row probe cost, the reason a PQ index scans
-    * 8 bytes + 16 adds where the float path does `dim` multiplies. NULL
-    * for a code array of the wrong length or a reconstruction with zero
-    * norm (all-zero codebook entries), same contract as [[cosine]]. */
-  def pqAdcScore(
-      codes: Array[Byte],
-      tables: Array[Double],
-      m: Int,
-      ksub: Int): java.lang.Double = {
-    if (codes.length != m) return null
-    val normOff = m * ksub
-    var dot = 0.0
-    var n2 = 0.0
-    var s = 0
-    while (s < m) {
-      val c = codes(s) & 0xFF
-      if (c >= ksub) return null // corrupt code: NULL, not garbage reads
-      dot += tables(s * ksub + c)
-      n2 += tables(normOff + s * ksub + c)
-      s += 1
-    }
-    if (n2 == 0.0) null else java.lang.Double.valueOf(dot / math.sqrt(n2))
-  }
-
   /** True iff every element of the float vector is present and finite —
     * the trainer-sample gate ([[graft.ops.Similarity]]'s
     * `normalizedSample`): one compiled pass with early exit, replacing
@@ -1154,116 +1072,6 @@ object VectorKernels {
       i += 1
     }
     true
-  }
-
-  /** RESIDUAL product-quantization encode (the FAISS IVF-PQ
-    * construction, Jégou et al. TPAMI 2011 §IV): unit-normalize, assign
-    * to the nearest coarse centroid with EXACTLY [[nearestCentroid]]'s
-    * semantics (Double.compare, strict >, ragged/zero-norm centroids
-    * skipped, first index wins), then PQ-encode the RESIDUAL
-    * `v̂ − centroid[bucket]` — bucket and codes come from ONE pass, so a
-    * row's codes can never name a different centroid than its partition.
-    * Residuals are far smaller than raw vectors on clustered corpora, so
-    * the same codebook budget spends its ksub^m reconstructions on a
-    * tighter ball — the recall gain over raw-vector PQ that makes this
-    * the standard construction. Returns struct(bucket, codes); NULL row
-    * for ragged/zero-norm vectors or when no centroid is assignable
-    * (the [[nearestCentroid]] NULL contract). */
-  def pqEncodeResidual(
-      vec: ArrayData,
-      centroids: Array[Array[Float]],
-      books: Array[Array[Array[Float]]],
-      dim: Int,
-      dsub: Int): org.apache.spark.sql.catalyst.InternalRow = {
-    if (vec.numElements() != dim) return null
-    var na = 0.0
-    var i = 0
-    while (i < dim) { val x = vec.getFloat(i).toDouble; na += x * x; i += 1 }
-    val norm = math.sqrt(na)
-    // the norm guard runs BEFORE assignment: this struct's fields are
-    // non-nullable, so a NaN/zero-norm vector NULLs the whole row here
-    // where the raw flavor gives it a real bucket with NULL codes — both
-    // probe to NULL, neither is scanned meaningfully
-    if (!java.lang.Double.isFinite(norm) || norm == 0.0) return null
-    // assignment IS nearestCentroid — one shared definition, so the two
-    // PQ flavors (and assignBuckets) can never drift; the extra O(dim)
-    // norm pass inside is noise next to the O(dim·ksub) encode below
-    val bestI = nearestCentroid(vec, centroids, dim)
-    if (bestI == null) return null
-    val best = bestI.intValue()
-    val cent = centroids(best)
-    val m = books.length
-    val codes = new Array[Byte](m)
-    var s = 0
-    while (s < m) {
-      val book = books(s)
-      val off = s * dsub
-      var bc = 0
-      var bestDist = Double.PositiveInfinity
-      var k = 0
-      while (k < book.length) {
-        val ct = book(k)
-        var dist = 0.0
-        var j = 0
-        while (j < dsub) {
-          val r = vec.getFloat(off + j).toDouble / norm - cent(off + j).toDouble
-          val d = r - ct(j).toDouble
-          dist += d * d
-          j += 1
-        }
-        if (java.lang.Double.compare(dist, bestDist) < 0) { bestDist = dist; bc = k }
-        k += 1
-      }
-      codes(s) = bc.toByte
-      s += 1
-    }
-    val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-    out.setInt(0, best)
-    out.update(1, codes)
-    out
-  }
-
-  /** ADC score for RESIDUAL PQ codes: score = (q̂·cent_b + Σ dot[s][c]) /
-    * √(|cent_b|² + 2·Σ cross_b[s][c] + Σ norm²[s][c]) — the cosine
-    * between the unit query and `cent_b + recon(codes)`. `probeBuckets`
-    * holds the nProbe bucket ids the scan was pruned to; `tables` is the
-    * driver-flattened [dot m·ksub | norm² m·ksub | per-probe: centNorm²,
-    * q̂·cent, cross m·ksub] layout of [[graft.functions.PqAdcScoreResidual]].
-    * O(m) table reads per row plus one ≤nProbe bucket lookup. NULL for a
-    * wrong-length code array, an out-of-table code, a bucket outside the
-    * probed set (cannot happen after pruning — defensive), or a
-    * non-positive denominator. */
-  def pqAdcScoreResidual(
-      codes: Array[Byte],
-      bucket: Int,
-      probeBuckets: Array[Int],
-      tables: Array[Double],
-      m: Int,
-      ksub: Int): java.lang.Double = {
-    if (codes.length != m) return null
-    var p = -1
-    var i = 0
-    while (i < probeBuckets.length && p < 0) {
-      if (probeBuckets(i) == bucket) p = i
-      i += 1
-    }
-    if (p < 0) return null
-    val mk = m * ksub
-    val probeOff = 2 * mk + p * (2 + mk)
-    var dot = tables(probeOff + 1) // q̂·cent_b
-    var cross = 0.0
-    var n2 = 0.0
-    var s = 0
-    while (s < m) {
-      val c = codes(s) & 0xFF
-      if (c >= ksub) return null // corrupt code: NULL, not garbage reads
-      dot += tables(s * ksub + c)
-      n2 += tables(mk + s * ksub + c)
-      cross += tables(probeOff + 2 + s * ksub + c)
-      s += 1
-    }
-    val den2 = tables(probeOff) + 2.0 * cross + n2
-    if (den2 <= 0.0) null else java.lang.Double.valueOf(dot / math.sqrt(den2))
   }
 
   /** All band signatures of one float vector in a single pass:

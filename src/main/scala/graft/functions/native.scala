@@ -417,78 +417,6 @@ case class NearestCentroidsHier(
     copy(child = newChild)
 }
 
-/** Product-quantization encode: unit-normalize, split into `m = books`
-  * subspaces, emit the nearest codebook entry's index per subspace — `m`
-  * BYTES per vector (see [[VectorKernels.pqEncode]]). The codebook
-  * tensor ships as one codegen reference object; the `Seq` field keeps
-  * plan canonicalization structural, like every centroid kernel here.
-  * NULL for ragged or zero/non-finite-norm vectors. */
-case class PqEncode(child: Expression, books: Seq[Seq[Seq[Float]]]) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  require(books.nonEmpty, "need at least one codebook")
-  require(books.forall(_.nonEmpty), "every subspace codebook needs at least one entry")
-  require(books.forall(_.length <= 256),
-    s"codebook sizes ${books.map(_.length).max} must fit one byte (<= 256)")
-  private val dsub: Int = books.head.head.length
-  require(dsub >= 1 && books.forall(_.forall(_.length == dsub)),
-    s"every codebook entry must have the same sub-dimension (head has $dsub)")
-  private val dim: Int = books.length * dsub
-  @transient private lazy val table: Array[Array[Array[Float]]] =
-    books.map(_.map(_.toArray).toArray).toArray
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pq_encode"
-  protected override def nullSafeEval(input: Any): Any =
-    VectorKernels.pqEncode(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], table, dim, dsub)
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("books", table, "float[][][]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("codes")
-      s"""
-         |byte[] $tmp = graft.functions.VectorKernels.pqEncode($c, $ref, $dim, $dsub);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-  }
-  protected override def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
-}
-
-/** Asymmetric-distance cosine of a PQ code column against ONE query,
-  * via the query's precomputed per-(subspace, code) lookup tables — the
-  * probe-side half of [[PqEncode]]: O(m) table reads per row where the
-  * float kernels do O(dim) multiplies (see [[VectorKernels.pqAdcScore]]).
-  * `tables` is the driver-flattened [dot | norm²] pair of m·ksub blocks;
-  * the `Seq` field keeps canonicalization structural. NULL for a code
-  * array of the wrong length, an out-of-table code, or a zero-norm
-  * reconstruction — same contract as [[CosineSim]]. */
-case class PqAdcScore(child: Expression, tables: Seq[Double], m: Int, ksub: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  require(m >= 1 && ksub >= 1 && ksub <= 256, s"m=$m, ksub=$ksub out of range")
-  require(tables.length == 2 * m * ksub,
-    s"tables.length=${tables.length} must be 2*m*ksub=${2 * m * ksub} (dot block then norm² block)")
-  @transient private lazy val table: Array[Double] = tables.toArray
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pq_adc_score"
-  protected override def nullSafeEval(input: Any): Any =
-    VectorKernels.pqAdcScore(input.asInstanceOf[Array[Byte]], table, m, ksub)
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tables", table, "double[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("adc")
-      s"""
-         |java.lang.Double $tmp = graft.functions.VectorKernels.pqAdcScore($c, $ref, $m, $ksub);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
-  }
-  protected override def withNewChildInternal(newChild: Expression): PqAdcScore =
-    copy(child = newChild)
-}
-
 /** Cosine similarity over float vectors — the exact re-rank/verify kernel
   * of the similarity and embedding-dedup operators. NULL when either norm
   * is zero (same contract as the HOF formulation in VectorOps, and the
@@ -530,99 +458,6 @@ case class IsFiniteVec(child: Expression) extends UnaryExpression with ExpectsIn
       s"${ev.value} = graft.functions.VectorKernels.isFiniteVec($c);")
   protected override def withNewChildInternal(newChild: Expression): IsFiniteVec =
     copy(child = newChild)
-}
-
-/** Residual product-quantization encode (FAISS IVF-PQ construction):
-  * nearest-coarse-centroid assignment and residual PQ codes from ONE
-  * compiled pass — struct(bucket, codes), so a row's codes can never
-  * name a different centroid than its partition (see
-  * [[VectorKernels.pqEncodeResidual]]). Centroid table and codebook
-  * tensor ride as codegen reference objects; the `Seq` fields keep plan
-  * canonicalization structural. NULL for ragged/zero-norm vectors. */
-case class PqEncodeResidual(
-    child: Expression,
-    centroids: Seq[Seq[Float]],
-    books: Seq[Seq[Seq[Float]]]) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  require(books.nonEmpty, "need at least one codebook")
-  require(books.forall(b => b.nonEmpty && b.length <= 256),
-    "every subspace codebook needs 1..256 entries")
-  private val dsub: Int = books.head.head.length
-  require(dsub >= 1 && books.forall(_.forall(_.length == dsub)),
-    s"every codebook entry must have the same sub-dimension (head has $dsub)")
-  private val dim: Int = books.length * dsub
-  require(centroids.nonEmpty && centroids.forall(_.length == dim),
-    s"centroids must be non-empty and $dim-dimensional")
-  @transient private lazy val centTable: Array[Array[Float]] =
-    centroids.map(_.toArray).toArray
-  @transient private lazy val bookTable: Array[Array[Array[Float]]] =
-    books.map(_.map(_.toArray).toArray).toArray
-  override def dataType: DataType = StructType(Seq(
-    StructField("bucket", IntegerType, nullable = false),
-    StructField("codes", BinaryType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "pq_encode_residual"
-  protected override def nullSafeEval(input: Any): Any =
-    VectorKernels.pqEncodeResidual(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      centTable, bookTable, dim, dsub)
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centTable, "float[][]")
-    val bRef = ctx.addReferenceObj("books", bookTable, "float[][][]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("pqr")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $tmp =
-         |  graft.functions.VectorKernels.pqEncodeResidual($c, $cRef, $bRef, $dim, $dsub);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-  }
-  protected override def withNewChildInternal(newChild: Expression): PqEncodeResidual =
-    copy(child = newChild)
-}
-
-/** ADC score of residual-PQ codes against ONE query via driver-built
-  * per-probe tables — the probe-side half of [[PqEncodeResidual]]
-  * (see [[VectorKernels.pqAdcScoreResidual]]): O(m) reads per row.
-  * `left` = codes (binary), `right` = bucket (int). NULL for wrong-length
-  * codes, out-of-table codes, an unprobed bucket, or a non-positive
-  * reconstruction norm. */
-case class PqAdcScoreResidual(
-    left: Expression,
-    right: Expression,
-    probeBuckets: Seq[Int],
-    tables: Seq[Double],
-    m: Int,
-    ksub: Int) extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  require(m >= 1 && ksub >= 1 && ksub <= 256, s"m=$m, ksub=$ksub out of range")
-  require(probeBuckets.nonEmpty, "need at least one probed bucket")
-  require(tables.length == 2 * m * ksub + probeBuckets.length * (2 + m * ksub),
-    s"tables.length=${tables.length} does not fit the [dot|norm²|per-probe] layout")
-  @transient private lazy val probes: Array[Int] = probeBuckets.toArray
-  @transient private lazy val table: Array[Double] = tables.toArray
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pq_adc_score_residual"
-  protected override def nullSafeEval(codes: Any, bucket: Any): Any =
-    VectorKernels.pqAdcScoreResidual(
-      codes.asInstanceOf[Array[Byte]], bucket.asInstanceOf[Int], probes, table, m, ksub)
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("probes", probes, "int[]")
-    val tRef = ctx.addReferenceObj("tables", table, "double[]")
-    nullSafeCodeGen(ctx, ev, (c, b) => {
-      val tmp = ctx.freshName("adcr")
-      s"""
-         |java.lang.Double $tmp = graft.functions.VectorKernels.pqAdcScoreResidual(
-         |  $c, $b, $pRef, $tRef, $m, $ksub);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
-  }
-  protected override def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdcScoreResidual =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Cosine of an int8-quantized row (codes + per-row scale) against ONE
@@ -1142,34 +977,6 @@ object native {
 
   def isFiniteVec(vec: Column): Column =
     ColumnBridge.column(IsFiniteVec(ColumnBridge.expression(vec)))
-
-  def pqEncodeResidual(
-      vec: Column,
-      centroids: Array[Array[Float]],
-      books: Array[Array[Array[Float]]]): Column =
-    ColumnBridge.column(PqEncodeResidual(
-      ColumnBridge.expression(vec),
-      centroids.toSeq.map(_.toSeq),
-      books.toSeq.map(_.toSeq.map(_.toSeq))))
-
-  def pqAdcScoreResidual(
-      codes: Column,
-      bucket: Column,
-      probeBuckets: Array[Int],
-      tables: Array[Double],
-      m: Int,
-      ksub: Int): Column =
-    ColumnBridge.column(PqAdcScoreResidual(
-      ColumnBridge.expression(codes), ColumnBridge.expression(bucket),
-      probeBuckets.toSeq, tables.toSeq, m, ksub))
-
-  def pqEncode(vec: Column, books: Array[Array[Array[Float]]]): Column =
-    ColumnBridge.column(
-      PqEncode(ColumnBridge.expression(vec), books.toSeq.map(_.toSeq.map(_.toSeq))))
-
-  def pqAdcScore(codes: Column, tables: Array[Double], m: Int, ksub: Int): Column =
-    ColumnBridge.column(
-      PqAdcScore(ColumnBridge.expression(codes), tables.toSeq, m, ksub))
 
   def unigramNll(text: Column, vocab: Seq[(String, Long)], total: Double, vsize: Double): Column =
     ColumnBridge.column(UnigramNll(ColumnBridge.expression(text), vocab, total, vsize))

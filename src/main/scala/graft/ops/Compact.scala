@@ -542,12 +542,13 @@ object Generations {
   }
 
   /** Name of the generation's FLAVOR marker: a one-line tag written by
-    * index producers whose layouts can share a SCHEMA while their bytes
-    * mean different things (raw-PQ vs residual-PQ codes) — a schema
-    * guard cannot see tensor provenance, so ingesters and ambiguous
-    * probes check this instead. Lives in [[Generations]] so every
-    * producer family (Similarity's vector indexes, NearDup's signature
-    * index) shares one read/write/carry-forward discipline. */
+    * index producers naming the layout that wrote the generation. A
+    * root read back from disk must match the layout that reads it, and
+    * a schema guard cannot see which layout wrote the bytes, so
+    * ingesters, probes and compactions check this instead. Lives in
+    * [[Generations]] so every producer family (Similarity's vector
+    * indexes, NearDup's signature index) shares one
+    * read/write/carry-forward discipline. */
   private val Flavor = "_GRAFT_FLAVOR"
 
   /** Stamp `genDir`'s flavor — call INSIDE the rebuild body, before the

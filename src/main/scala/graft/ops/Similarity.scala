@@ -21,47 +21,28 @@ import org.apache.spark.sql.functions._
   * Every persisted index is an [[IndexLayout]] value driven through one
   * seam: [[writeIndex]], [[ingestIndexStream]], [[probeIndex]] and
   * [[compactIndex]], all under the same generation-pointer root
-  * discipline. Four IVF layouts trade index bytes (and probe
-  * arithmetic) for score fidelity — all bucket-routed on the ORIGINAL
-  * float vector, so routing recall is identical across rungs and the
-  * ladder only moves the re-rank:
+  * discipline. The IVF layouts trade index bytes for score fidelity —
+  * all bucket-routed on the ORIGINAL float vector, so routing recall is
+  * identical across rungs and the ladder only moves the re-rank:
   *
   *  1. FLOAT ([[IvfFloat]]) — 4·dim bytes/vector, exact cosine
   *     re-rank: recall at a given nProbe is the IVF routing itself.
-  *     Build this when the index fits your page-cache budget.
+  *     Build this when the index fits your page-cache budget. At
+  *     corpus-proportional bucket counts use the hierarchical build
+  *     ([[IvfFloatHier]]) so assignment stays ~√k per row.
   *  2. INT8 ([[IvfInt8]]) — dim bytes (~4× smaller,
   *     spec-pinned < 0.6× float on disk), ≤ half-step/dimension error.
   *     The default rung: on the near-random fixture its recall curve
   *     tracks float EXACTLY through nProbe=8 and gives up 0.012 at
   *     nProbe=16 (RecallProbe r16) for ~3× fewer bytes on disk.
-  *  3. PQ ([[IvfPq]]) — m bytes (32× vs float at dim=64,
-  *     m=8; spec-pinned < 0.6× int8 on disk) and the first rung whose
-  *     PROBE cost drops too: O(m) ADC table reads per row instead of
-  *     dim multiplies. Costs real recall on near-random corpora
-  *     (neighbor gaps ~0.01 cosine): measured 0.64-0.69 @10 at m=16
-  *     (the spec's k−3 point as a curve), 0.43-0.49 at m=8 — size m
-  *     by the neighbor-gap scale, not by bytes alone. HARD FLOOR:
-  *     when the true top-k are intra-cluster near-duplicates (cosine
-  *     ≳ 0.95, gaps ~1e-3) no m ≤ 16 rung can rank them (measured
-  *     0.13-0.21 at EVERY nProbe while float reaches 1.0) — PQ cannot
-  *     rank WITHIN near-dup neighborhoods; keep float/int8 there, or
-  *     semantic-dedup first so the neighborhoods collapse.
-  *  4. RESIDUAL PQ ([[IvfPqResidual]], the FAISS IVF-PQ
-  *     construction) — same bytes as raw PQ, codebooks trained on
-  *     v̂ − centroid: on CLUSTERED corpora (residual ball ≪ unit
-  *     shell) the same m/ksub budget cut mean |adc − cosine| 6.7×
-  *     (0.0656 → 0.0098) and lifted top-k recall 0.4 → 0.7 on the
-  *     32-clusters-at-ksub=16 regime (SimilaritySpec), and lifts the
-  *     clustered m=8 curve +38% relative over raw (RecallProbe). On
-  *     near-random data it measures AT OR BELOW raw PQ (meaningless
-  *     centroids make residuals noisier than the vectors) — pay its
-  *     extra driver tables only when the corpus actually clusters.
   *
-  * Raising nProbe buys recall on the float/int8 rungs (routing is
-  * their only loss) but saturates the PQ rungs almost immediately —
-  * their loss is quantization, which probed volume cannot recover. At
-  * corpus-proportional bucket counts use the hierarchical build
-  * ([[IvfFloatHier]]) so assignment stays ~√k per row.
+  * Raising nProbe buys back routing loss only: quantization loss is in
+  * the stored bytes, and no probed volume recovers it. Near-duplicate
+  * neighbourhoods (true top-k at cosine ≳ 0.95, gaps ~1e-3) need float,
+  * int8 or LSH: product-quantized codes at m ≤ 16 bytes measured
+  * recall@10 0.13-0.22 there at EVERY nProbe while float reached 1.0
+  * (PLANS.md "ANN payload-ladder recall surface"), which is why the
+  * ladder has no PQ rung.
   *
   * The LSH index ([[Lsh]]) sits BESIDE the IVF ladder, not
   * on it: its loss is CANDIDATE-SET (a true neighbor must collide with
@@ -205,9 +186,9 @@ object Similarity {
     * trainable corpus. Why dropped at all: a single NaN/Inf element
     * would normalize to an all-NaN point, and NaN ranks above any number
     * in the assignment kernels — one poisoned sample point would turn
-    * every trained centroid (spherical, hier, PQ, residual-PQ) into NaN
-    * silently. The scorers already NULL such rows; the trainers must not
-    * learn from them. (The gate is one compiled early-exit pass per
+    * every trained centroid (spherical, hier) into NaN silently. The
+    * scorers already NULL such rows; the trainers must not learn from
+    * them. (The gate is one compiled early-exit pass per
     * row — `is_finite_vec` — NOT a `forall` HOF, which evaluates
     * interpreted per element on a scan that touches the whole corpus; a
     * null element counts as non-finite, since it would unbox to a fake
@@ -217,16 +198,15 @@ object Similarity {
     * way, and for the same one-bad-row-poisons-the-model reason: the
     * executor kernels NULL a mismatched row per row, but the trainers
     * index every sampled point up to `pts.head.length` — a short row in
-    * the sample would throw (kmeans) or read past a subspace boundary
-    * (trainPq's copyOfRange zero-pads the tail subspace silently). The
-    * corpus dimension comes from [[detectDim]] (corpus-modal, NOT a
+    * the sample would throw (kmeans). The corpus dimension comes from
+    * [[detectDim]] (corpus-modal, NOT a
     * prefix probe — a prefix-bounded probe would re-open the
     * poisoned-prefix hole one level up, a ragged low-id run poisoning
     * the detected dim itself), then is enforced as a `size(vec) === dim`
     * predicate BEFORE the limit. `knownDim > 0` skips the detection
     * pass — the trainers expose it so a multi-trainer build pipeline
-    * (centroids + PQ + residual over one corpus) detects once instead
-    * of re-running the identical aggregate per trainer. */
+    * (flat and hierarchical centroids over one corpus) detects once
+    * instead of re-running the identical aggregate per trainer. */
   private def normalizedSample(
       emb: DataFrame, idCol: String, vecCol: String, sampleSize: Int,
       knownDim: Int = 0): Array[Array[Float]] = {
@@ -356,119 +336,6 @@ object Similarity {
           }
     }
     HierCentroids(coarse, fine.toArray, cell.toArray)
-  }
-
-  /** Product-quantization codebooks ([[trainPq]]): `books(s)` holds the
-    * `ksub` sub-centroids of contiguous subspace `s`; every subspace
-    * trains the same count, so `m`/`ksub`/`dsub` describe the whole
-    * tensor — and the constructor ENFORCES that uniformity (plus the
-    * one-byte code range), because [[adcTables]]' flattened layout and
-    * [[graft.functions.PqAdcScore]]'s block arithmetic index by
-    * `head.length`: a ragged hand-built tensor would silently corrupt
-    * neighboring blocks instead of failing here. */
-  final case class PqCodebooks(books: Array[Array[Array[Float]]]) {
-    require(books.forall(b => b.nonEmpty && b.length == books.head.length),
-      "every subspace codebook must be non-empty and the same size")
-    require(books.isEmpty || books.head.length <= 256,
-      s"ksub=${books.head.length} must fit one byte (<= 256)")
-    require(books.forall(_.forall(e =>
-        e.length == books.head.head.length && e.nonEmpty)),
-      "every codebook entry must share one non-zero sub-dimension")
-    def m: Int = books.length
-    def ksub: Int = if (books.isEmpty) 0 else books.head.length
-    def dsub: Int = if (books.isEmpty) 0 else books.head.head.length
-    def isEmpty: Boolean = books.isEmpty
-  }
-
-  /** Train product-quantization codebooks (Jégou, Douze, Schmid:
-    * "Product Quantization for Nearest Neighbor Search", TPAMI 2011) on
-    * the bounded driver sample: unit-normalize, split each vector into
-    * `m` contiguous `dim/m`-sized subspaces, and run an independent L2
-    * k-means per subspace — `m` codebooks of `ksub ≤ 256` entries, so a
-    * vector compresses to `m` BYTES ([[graft.functions.native.pqEncode]])
-    * against [[quantizeInt8]]'s `dim` bytes and the float store's
-    * `4·dim`: at dim=64, m=8 that is 32× on the vector payload, the
-    * difference between an index that fits executor page cache at 100 TB
-    * and one that does not. The effective codebook space is ksub^m
-    * distinct reconstructions from m·ksub·dsub stored floats — why PQ
-    * beats per-dimension quantization at equal bytes. L2 (not cosine) is
-    * the per-subspace objective: sub-vectors are fragments, not
-    * directions, and ADC's Σ-of-partial-dots needs centroids placed in
-    * the fragment SPACE, the standard construction. Training is
-    * O(iters·sample·ksub·dim) driver work on the SAME bounded sample as
-    * every trainer here — corpus-size-independent. Deterministic:
-    * stride-spaced init per subspace, fixed iterations, first-index-wins
-    * assignment ties, empty clusters keep their centroid. Requires
-    * `dim % m == 0` (equal contiguous subspaces — the FAISS posture;
-    * pad or re-project upstream for indivisible dims). */
-  def trainPq(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int = 8,
-      ksub: Int = 256,
-      sampleSize: Int = 2048,
-      iters: Int = 10,
-      knownDim: Int = 0): PqCodebooks = {
-    require(m >= 1, s"m=$m must be >= 1")
-    require(ksub >= 1 && ksub <= 256, s"ksub=$ksub must be in [1, 256] (codes are one byte)")
-    // same zero-norm drop as the hier trainer: a direction-free point
-    // would train codebooks toward the origin and pqEncode NULLs it out
-    // of the index anyway
-    val pts = normalizedSample(emb, idCol, vecCol, sampleSize, knownDim)
-      .filter(_.exists(_ != 0f))
-    if (pts.isEmpty) return PqCodebooks(Array.empty)
-    val dim = pts.head.length
-    require(dim % m == 0, s"dim=$dim must divide evenly into m=$m subspaces")
-    val dsub = dim / m
-    val books = Array.tabulate(m) { s =>
-      kmeansL2(pts.map(p => java.util.Arrays.copyOfRange(p, s * dsub, (s + 1) * dsub)),
-        ksub, iters)
-    }
-    PqCodebooks(books)
-  }
-
-  /** The driver-side L2 Lloyd loop [[trainPq]] runs per subspace — the
-    * Euclidean sibling of [[kmeansSpherical]] (means are NOT
-    * re-normalized: sub-vectors are fragments and the reconstruction
-    * must land at their actual location). Same determinism conventions:
-    * stride-spaced init, fixed iterations, strict-< first-index-wins
-    * assignment, empty clusters keep their centroid. */
-  private def kmeansL2(
-      pts: Array[Array[Float]], k: Int, iters: Int): Array[Array[Float]] = {
-    val kk = math.min(k, pts.length)
-    var centroids = Array.tabulate(kk)(i => pts((i.toLong * pts.length / kk).toInt).clone())
-    val dim = pts.head.length
-    for (_ <- 1 to iters) {
-      val sums = Array.fill(kk)(new Array[Double](dim))
-      val counts = new Array[Int](kk)
-      pts.foreach { p =>
-        var best = 0
-        var bestDist = Double.PositiveInfinity
-        var c = 0
-        while (c < kk) {
-          var dist = 0.0
-          var i = 0
-          while (i < dim) {
-            val d = p(i).toDouble - centroids(c)(i)
-            dist += d * d
-            i += 1
-          }
-          if (java.lang.Double.compare(dist, bestDist) < 0) { bestDist = dist; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        var i = 0
-        while (i < dim) { sums(best)(i) += p(i); i += 1 }
-      }
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old
-        // the MEAN, not the sum — kmeansSpherical can skip the division
-        // because normUnit erases magnitude; here magnitude IS the answer
-        else sums(c).map(x => (x / counts(c)).toFloat)
-      }
-    }
-    centroids
   }
 
   /** The `nProbe` bucket ids nearest to `queryVec` by centroid dot
@@ -807,8 +674,8 @@ object Similarity {
     val gen = Generations.currentDir(fs, root)
     // flavor checked against the SAME resolve the scan reads — a
     // separate check-then-read would let a rebuild commit in between
-    // and pass a 'pq-raw' check on a generation the scan then reads as
-    // 'pq-residual' (the exact poison the marker exists to stop)
+    // and pass an 'ivf-float' check on a generation the scan then reads
+    // as 'ivf-int8' (the exact poison the marker exists to stop)
     expectFlavor.foreach { case (flavor, who) =>
       Generations.readFlavorMarker(fs, gen).foreach(f =>
         require(f == flavor,
@@ -831,13 +698,13 @@ object Similarity {
     * full REBUILD through this is atomic to concurrent probes, same as
     * a compaction.
     *
-    * The flavor marker exists because two layouts can share a SCHEMA
-    * while their bytes mean different things (raw-PQ vs residual-PQ
-    * codes): [[requireLayoutMatch]] cannot see tensor provenance, so
-    * ingesters, probes and compactions check the marker — a
-    * wrong-flavor append would decode as plausible-looking garbage
-    * forever, silently. Written INSIDE the generation before its done
-    * flip, so it is exactly as atomic as the data. */
+    * The flavor marker exists because a root read back from disk must
+    * match the layout that reads it, and [[requireLayoutMatch]] sees
+    * only the schema, not which layout wrote the bytes; so ingesters,
+    * probes and compactions check the marker — a wrong-flavor append
+    * would decode as plausible-looking garbage forever, silently.
+    * Written INSIDE the generation before its done flip, so it is
+    * exactly as atomic as the data. */
   /** Shared batch-producer front: run `body` as a locked
     * [[Generations.rebuild]] and stamp the generation's flavor marker
     * inside the same pre-flip window. FS CONTRACT (applies to every
@@ -970,7 +837,7 @@ object Similarity {
     * documented stale-lock heal. */
   /** Refuse an ingest whose appended rows would not union cleanly with
     * the live generation's `base` layout — wrong ingester flavor (float
-    * vs quantized vs PQ) or `payloadCols` that don't repeat the base
+    * vs int8) or `payloadCols` that don't repeat the base
     * build's. One schema read of `base` at stream START (a directory
     * listing plus a parquet footer — the same cost every probe already
     * pays), instead of a bricked read path: a mismatched `streamed/`
@@ -1051,10 +918,10 @@ object Similarity {
         // strand every append in the generation it just retired
         val gen = Generations.currentDir(fs, root)
         requireLayoutMatch(spark, gen, streamedSchema, partitionCols, who)
-        // flavor check AFTER the schema check: two layouts can share a
-        // schema (raw vs residual PQ) while their bytes mean different
-        // things — a marker-less legacy generation falls back to the
-        // schema guard alone
+        // flavor check AFTER the schema check: the schema guard cannot
+        // tell which layout wrote a root's bytes, the marker can — a
+        // marker-less legacy generation falls back to the schema guard
+        // alone
         Generations.readFlavorMarker(fs, gen).foreach(f =>
           require(f == flavor,
             s"$who: index root flavor '$f' does not match this ingester's '$flavor' — " +
@@ -1091,9 +958,9 @@ object Similarity {
     * query's partitions, re-rank the survivors. A layout holds:
     *  - `flavor`: the tag [[newGeneration]] stamps into every generation
     *    the layout writes, checked by every ingest, probe and compaction
-    *    — two layouts can share a schema while their bytes mean
-    *    different things (raw vs residual PQ codes), and a wrong-flavor
-    *    reader would decode plausible-looking garbage;
+    *    — a root read back from disk must match the layout that reads
+    *    it, and a wrong-flavor reader would decode plausible-looking
+    *    garbage;
     *  - `partitionCols` and `partValues`: the directory partitioning and
     *    its value count ([[spreadForWrite]]'s file-count target,
     *    [[prunedPartitionRead]]'s dense-probe threshold);
@@ -1124,11 +991,11 @@ object Similarity {
     * the same selection [[ivfTopK]] makes). */
   sealed abstract class IvfLayout(flavor: String, centroids: Array[Array[Float]])
       extends IndexLayout(flavor, Seq("bucket"), centroids.length) {
-    protected def score(queryVec: Array[Float], buckets: Array[Int]): Column
+    protected def score(queryVec: Array[Float]): Column
     private[ops] def probe(queryVec: Array[Float], nProbe: Int): IndexProbe = {
       val buckets = nearestBuckets(queryVec, centroids, nProbe)
       IndexProbe(buckets.toSeq.map(b => s"bucket=$b"), col("bucket").isin(buckets.toSeq: _*),
-        score(queryVec, buckets))
+        score(queryVec))
     }
   }
 
@@ -1140,7 +1007,7 @@ object Similarity {
   final case class IvfFloat(idCol: String, vecCol: String, centroids: Array[Array[Float]])
       extends IvfLayout("ivf-float", centroids) {
     def rows(emb: DataFrame): DataFrame = assignBuckets(emb, vecCol, centroids)
-    protected def score(q: Array[Float], buckets: Array[Int]): Column = exactCosine(vecCol, q)
+    protected def score(q: Array[Float]): Column = exactCosine(vecCol, q)
   }
 
   /** [[IvfFloat]] built through a two-level model: √k assignment cost per
@@ -1152,7 +1019,7 @@ object Similarity {
       idCol: String, vecCol: String, model: HierCentroids, probes: Int = 2)
       extends IvfLayout("ivf-float", model.fine) {
     def rows(emb: DataFrame): DataFrame = assignBucketsHier(emb, vecCol, model, probes)
-    protected def score(q: Array[Float], buckets: Array[Int]): Column = exactCosine(vecCol, q)
+    protected def score(q: Array[Float]): Column = exactCosine(vecCol, q)
   }
 
   /** INT8 rung: `(id[, payloadCols], bucket, scale, codes)`, about 4×
@@ -1176,64 +1043,9 @@ object Similarity {
         .select(keep.map(col) :+
           col("_graft_q.scale").as("scale") :+ col("_graft_q.codes").as("codes"): _*)
     }
-    protected def score(q: Array[Float], buckets: Array[Int]): Column =
+    protected def score(q: Array[Float]): Column =
       if (q.isEmpty) lit(null).cast("double")
       else graft.functions.native.int8Cosine(col("codes"), col("scale"), q)
-  }
-
-  /** PQ rung: `(id[, payloadCols], bucket, codes: m bytes)` — the first
-    * rung whose probe cost drops too: asymmetric distance computation
-    * tabulates the query's per-(subspace, code) partials once
-    * driver-side ([[adcTables]]), then each row costs `m` table reads
-    * ([[graft.functions.native.pqAdcScore]]). `cos_sim` is the cosine
-    * between the query and the reconstruction the codes name. Codebooks
-    * are frozen at build time: streamed rows encode against exactly the
-    * tensor the probe's tables come from; retrain and rebuild when drift
-    * costs recall. Rows whose vector cannot encode (NULL, ragged,
-    * zero-norm) and zero/ragged queries score NULL. */
-  final case class IvfPq(
-      idCol: String, vecCol: String, centroids: Array[Array[Float]], pq: PqCodebooks,
-      payloadCols: Seq[String] = Nil)
-      extends IvfLayout("pq-raw", centroids) {
-    require(!pq.isEmpty, "a PQ index layout needs trained (non-empty) codebooks")
-    def rows(emb: DataFrame): DataFrame = {
-      val keep = compressedKeep(emb, idCol, vecCol, payloadCols, Set("codes"))
-      assignBuckets(emb, vecCol, centroids).select(keep.map(col) :+
-        graft.functions.native.pqEncode(col(vecCol), pq.books).as("codes"): _*)
-    }
-    protected def score(q: Array[Float], buckets: Array[Int]): Column =
-      adcTables(q, pq).fold(lit(null).cast("double"))(
-        graft.functions.native.pqAdcScore(col("codes"), _, pq.m, pq.ksub))
-  }
-
-  /** RESIDUAL-PQ rung (the FAISS IVF-PQ construction): the same on-disk
-    * columns as [[IvfPq]], but the codes name the row's offset from its
-    * OWN centroid, with bucket and codes from one compiled pass
-    * ([[graft.functions.native.pqEncodeResidual]]) so they cannot
-    * disagree. Train its codebooks with [[trainPqResidual]]. The score
-    * is the ADC cosine against `cent_b + recon(codes)`, with per-probe
-    * tables ([[adcTablesResidual]]) keeping the per-row cost at `m`
-    * reads. Same schema as raw PQ, so only the flavor marker tells the
-    * two roots apart. */
-  final case class IvfPqResidual(
-      idCol: String, vecCol: String, centroids: Array[Array[Float]], pq: PqCodebooks,
-      payloadCols: Seq[String] = Nil)
-      extends IvfLayout("pq-residual", centroids) {
-    require(!pq.isEmpty, "a PQ index layout needs trained (non-empty) codebooks")
-    require(centroids.forall(_.length == pq.m * pq.dsub),
-      s"centroids must be ${pq.m * pq.dsub}-dimensional to match the codebooks")
-    def rows(emb: DataFrame): DataFrame = {
-      val payload = compressedKeep(emb, idCol, vecCol, payloadCols, Set("codes", "_graft_pqr"))
-        .filterNot(_ == "bucket")
-      val enc = graft.functions.native.pqEncodeResidual(col(vecCol), centroids, pq.books)
-      emb.select(payload.map(col) :+ enc.as("_graft_pqr"): _*)
-        .select(payload.map(col) :+
-          col("_graft_pqr.bucket").as("bucket") :+ col("_graft_pqr.codes").as("codes"): _*)
-    }
-    protected def score(q: Array[Float], buckets: Array[Int]): Column =
-      adcTablesResidual(q, centroids, buckets, pq).fold(lit(null).cast("double"))(
-        graft.functions.native.pqAdcScoreResidual(
-          col("codes"), col("bucket").cast("int"), buckets, _, pq.m, pq.ksub))
   }
 
   /** The LSH index, beside the IVF ladder rather than on it: one row per
@@ -1388,8 +1200,8 @@ object Similarity {
       .limit(k)
   }
 
-  /** Shared payload validation for the compressed index writers and
-    * their streaming ingesters: unknown columns, the vector column, and
+  /** Payload validation for the int8 layout's writer and streaming
+    * ingester: unknown columns, the vector column, and
     * collisions with the layout's own columns (callers include their
     * staging names, e.g. the quantized pass's `_graft_q`) all refuse
     * up-front with the actual offenders named. */
@@ -1407,161 +1219,6 @@ object Similarity {
     require(reserved.isEmpty,
       s"payloadCols collide with index or staging columns: $reserved")
     (idCol +: payloadCols.filterNot(_ == idCol)) :+ "bucket"
-  }
-
-  /** The ADC lookup tables of ONE query against the codebooks — the
-    * flattened [dot | norm²] layout [[graft.functions.PqAdcScore]]
-    * expects: dot(s,c) = q̂_s · books(s)(c) with q̂ the unit query, and
-    * norm²(s,c) = |books(s)(c)|², both in DOUBLE in dimension order (the
-    * kernel convention everywhere). None when the query has zero /
-    * non-finite norm or the wrong dimensionality. */
-  private def adcTables(queryVec: Array[Float], pq: PqCodebooks): Option[Array[Double]] =
-    adcQueryNorm(queryVec, pq).map { norm =>
-      val tables = new Array[Double](2 * pq.m * pq.ksub)
-      fillAdcFront(queryVec, norm, pq, tables)
-      tables
-    }
-
-  /** The query's norm for ADC table construction, None for a ragged /
-    * zero / non-finite query — the shared guard of both table builders. */
-  private def adcQueryNorm(queryVec: Array[Float], pq: PqCodebooks): Option[Double] = {
-    if (queryVec.length != pq.m * pq.dsub) return None
-    var na = 0.0
-    queryVec.foreach(x => na += x.toDouble * x)
-    val norm = math.sqrt(na)
-    if (!java.lang.Double.isFinite(norm) || norm == 0.0) None else Some(norm)
-  }
-
-  /** Fill `tables(0 until 2·m·ksub)` with the shared [dot | norm²]
-    * blocks — ONE definition feeding both the raw and the residual
-    * probe, so the layouts can never drift. */
-  private def fillAdcFront(
-      queryVec: Array[Float], norm: Double, pq: PqCodebooks, tables: Array[Double]): Unit = {
-    val normOff = pq.m * pq.ksub
-    var s = 0
-    while (s < pq.m) {
-      val book = pq.books(s)
-      val off = s * pq.dsub
-      var c = 0
-      while (c < book.length) {
-        var dot = 0.0
-        var n2 = 0.0
-        var j = 0
-        while (j < pq.dsub) {
-          val y = book(c)(j).toDouble
-          dot += queryVec(off + j).toDouble / norm * y
-          n2 += y * y
-          j += 1
-        }
-        tables(s * pq.ksub + c) = dot
-        tables(normOff + s * pq.ksub + c) = n2
-        c += 1
-      }
-      s += 1
-    }
-  }
-
-  /** Train RESIDUAL product-quantization codebooks — the FAISS IVF-PQ
-    * construction (Jégou et al. TPAMI 2011 §IV): the bounded sample is
-    * unit-normalized, assigned to its nearest coarse centroid, and the
-    * per-subspace L2 k-means runs on the RESIDUALS `v̂ − centroid`. On
-    * clustered corpora the residual ball is far tighter than the raw
-    * unit shell, so the same m/ksub budget reconstructs with less
-    * error — the recall gain over raw-vector PQ that SimilaritySpec
-    * pins on the clustered fixture. Same determinism conventions and
-    * corpus-size-independent driver cost as [[trainPq]]. */
-  def trainPqResidual(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      m: Int = 8,
-      ksub: Int = 256,
-      sampleSize: Int = 2048,
-      iters: Int = 10,
-      knownDim: Int = 0): PqCodebooks = {
-    require(m >= 1, s"m=$m must be >= 1")
-    require(ksub >= 1 && ksub <= 256, s"ksub=$ksub must be in [1, 256] (codes are one byte)")
-    require(centroids.nonEmpty, "need trained coarse centroids")
-    val pts = normalizedSample(emb, idCol, vecCol, sampleSize, knownDim)
-      .filter(_.exists(_ != 0f))
-    if (pts.isEmpty) return PqCodebooks(Array.empty)
-    val dim = pts.head.length
-    require(dim % m == 0, s"dim=$dim must divide evenly into m=$m subspaces")
-    require(centroids.forall(_.length == dim), s"centroids must be $dim-dimensional")
-    val dsub = dim / m
-    // assign through the SAME kernel the encoder runs — a raw-dot argmax
-    // would diverge from the kernel's cosine ranking on non-unit
-    // centroids, training codebooks on residuals of the WRONG centroid
-    val residuals = pts.flatMap { p =>
-      val b = graft.functions.VectorKernels.nearestCentroid(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          p.map(_.asInstanceOf[Any])),
-        centroids, dim)
-      // a point no centroid can claim (all ragged/zero-norm) trains nothing
-      Option(b).map { bi =>
-        val cent = centroids(bi.intValue())
-        Array.tabulate(dim)(i => p(i) - cent(i))
-      }
-    }
-    if (residuals.isEmpty) return PqCodebooks(Array.empty)
-    PqCodebooks(Array.tabulate(m) { s =>
-      kmeansL2(residuals.map(r => java.util.Arrays.copyOfRange(r, s * dsub, (s + 1) * dsub)),
-        ksub, iters)
-    })
-  }
-
-  /** The residual-ADC lookup tables of ONE query: the shared
-    * [dot | norm²] blocks of [[adcTables]] followed by one per-probe
-    * block (|cent_b|², q̂·cent_b, then cent_b·book cross terms in
-    * dimension order) — the flattened layout
-    * [[graft.functions.PqAdcScoreResidual]] expects. None for a
-    * zero/ragged query. */
-  private def adcTablesResidual(
-      queryVec: Array[Float],
-      centroids: Array[Array[Float]],
-      probes: Array[Int],
-      pq: PqCodebooks): Option[Array[Double]] = {
-    val dim = pq.m * pq.dsub
-    if (probes.isEmpty) return None
-    val norm = adcQueryNorm(queryVec, pq).getOrElse(return None)
-    val mk = pq.m * pq.ksub
-    val tables = new Array[Double](2 * mk + probes.length * (2 + mk))
-    // the [dot | norm²] front is EXACTLY the raw-PQ table — one filler,
-    // writing straight into the larger residual buffer
-    fillAdcFront(queryVec, norm, pq, tables)
-    var p = 0
-    while (p < probes.length) {
-      val cent = centroids(probes(p))
-      val off = 2 * mk + p * (2 + mk)
-      var cn = 0.0
-      var qc = 0.0
-      var i = 0
-      while (i < dim) {
-        val y = cent(i).toDouble
-        cn += y * y
-        qc += queryVec(i).toDouble / norm * y
-        i += 1
-      }
-      tables(off) = cn
-      tables(off + 1) = qc
-      var s2 = 0
-      while (s2 < pq.m) {
-        val book = pq.books(s2)
-        val so = s2 * pq.dsub
-        var c = 0
-        while (c < book.length) {
-          var cr = 0.0
-          var j = 0
-          while (j < pq.dsub) { cr += cent(so + j).toDouble * book(c)(j); j += 1 }
-          tables(off + 2 + s2 * pq.ksub + c) = cr
-          c += 1
-        }
-        s2 += 1
-      }
-      p += 1
-    }
-    Some(tables)
   }
 
   /** All band signatures of one vector, driver-side, through the SAME

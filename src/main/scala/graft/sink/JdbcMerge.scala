@@ -456,7 +456,15 @@ object JdbcMerge {
       sleep: Long => Unit = Thread.sleep): Unit = {
     val keySchema = StructType(schema.fields.filter(f => cfg.keyCols.contains(f.name)))
     val keyIdx = cfg.keyCols.map(schema.fieldIndex)
-    val merge = conn.prepareStatement(mergeSql(cfg, schema))
+    // Derby keeps MERGE execution state in the compiled plan, and its
+    // statement cache shares one plan between connections that prepare
+    // the same text: concurrent partitions then fail inside Derby
+    // (NullPointerException in MatchingClauseConstantAction) or leave
+    // wrong rows. A comment naming the task's partition gives each
+    // concurrent partition its own plan; later batches still reuse it.
+    val partitionTag =
+      Option(org.apache.spark.TaskContext.get()).fold("")(t => s" /* partition ${t.partitionId} */")
+    val merge = conn.prepareStatement(mergeSql(cfg, schema) + partitionTag)
     val delete = conn.prepareStatement(deleteSql(cfg))
     val mergeBind = cfg.dialect.mergeBindIndices(cfg, schema)
     // tombstone rows are re-packed to key-only Rows; DELETE's `?`s are

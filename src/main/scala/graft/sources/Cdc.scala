@@ -156,8 +156,4 @@ object Cdc {
         .filterNot(f => f == "__deleted" || keyFields.exists(_.equalsIgnoreCase(f)))
         .map(f => col(s"record.$f")).toSeq: _*)
   }
-
-  /** Single-key [[applyEnvelope]] (source-compat with the original API). */
-  def applyEnvelope(envelope: DataFrame, keyField: String): DataFrame =
-    applyEnvelope(envelope, Seq(keyField))
 }

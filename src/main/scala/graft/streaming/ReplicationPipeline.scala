@@ -72,28 +72,6 @@ object ReplicationPipeline {
       s"Config.keyFields repeats a field (key columns are uppercased on output): $keyFields")
   }
 
-  object Config {
-    /** Single-key CONSTRUCTOR forms of the pre-composite API, kept
-      * compiling: `Config(keyField = "id", sink, checkpointDir)` (with
-      * optional projectCols and/or trigger) and the positional
-      * equivalents. NOT carried — deliberately, since the member is now
-      * the list: the `keyField` accessor and `copy(keyField = …)`; use
-      * `keyFields` for both. Overloads instead of a defaulted duplicate
-      * field: a second key knob next to `keyFields` would be exactly
-      * the two-places mismatch `derivedSink` exists to prevent. */
-    def apply(keyField: String, sink: JdbcMerge.Config, checkpointDir: String): Config =
-      Config(Seq(keyField), sink, checkpointDir)
-    def apply(keyField: String, sink: JdbcMerge.Config, checkpointDir: String,
-        projectCols: Seq[String]): Config =
-      Config(Seq(keyField), sink, checkpointDir, projectCols)
-    def apply(keyField: String, sink: JdbcMerge.Config, checkpointDir: String,
-        trigger: Trigger): Config =
-      Config(Seq(keyField), sink, checkpointDir, trigger = trigger)
-    def apply(keyField: String, sink: JdbcMerge.Config, checkpointDir: String,
-        projectCols: Seq[String], trigger: Trigger): Config =
-      Config(Seq(keyField), sink, checkpointDir, projectCols, trigger)
-  }
-
   /** Unwrap + key-preserving uppercase projection of one micro-batch of
     * envelope rows: KEY column first (always from `kafka_key` — a record
     * field with the key's name, the normal Debezium shape where the
@@ -118,13 +96,6 @@ object ReplicationPipeline {
       keyFields.map(k => col(s"kafka_key.$k").as(k.toUpperCase(Locale.ROOT))) ++
         cols.map(c => col(s"record.$c").as(c.toUpperCase(Locale.ROOT))): _*)
   }
-
-  /** Single-key [[flatten]] (source-compat with the pre-composite API). */
-  def flatten(batch: DataFrame, keyField: String): DataFrame =
-    flatten(batch, Seq(keyField))
-
-  def flatten(batch: DataFrame, keyField: String, projectCols: Seq[String]): DataFrame =
-    flatten(batch, Seq(keyField), projectCols)
 
   /** The sink-side deletion predicate over a flattened row: raw
     * tombstone (NULL `__DELETED` — the whole record was NULL) or a

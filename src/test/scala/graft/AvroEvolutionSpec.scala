@@ -98,7 +98,7 @@ class AvroEvolutionSpec extends SparkTestBase {
     assert(decoded.schema("kafka_value").dataType == envV2)
     assert(decoded.filter(col("kafka_value").isNull).count() == 1)
 
-    val state = Cdc.applyEnvelope(decoded, "id")
+    val state = Cdc.applyEnvelope(decoded, Seq("id"))
       .select(col("id"), col("TITLE"), col("GENRE"))
     val got = state.collect().map(r =>
       (r.getInt(0), r.getString(1), Option(r.getString(2)))).sortBy(_._1).toSeq

@@ -118,7 +118,7 @@ class CdcSpec extends SparkTestBase {
 
   test("applyEnvelope state equals the plain changelog apply") {
     val viaEnvelope = Cdc
-      .applyEnvelope(Cdc.envelopeFromEvents(events), "user_id")
+      .applyEnvelope(Cdc.envelopeFromEvents(events), Seq("user_id"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toSet
@@ -167,7 +167,7 @@ class CdcSpec extends SparkTestBase {
     ).toDF()
       .withColumn("ts_us", col("event_id") * 1000)
       .withColumn("props", lit("p"))
-    val state = Cdc.applyEnvelope(Cdc.envelopeFromEvents(evs), "user_id")
+    val state = Cdc.applyEnvelope(Cdc.envelopeFromEvents(evs), Seq("user_id"))
       .collect().map(_.getLong(0)).toSet
     assert(state == Set(2L))
   }

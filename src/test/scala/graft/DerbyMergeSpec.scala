@@ -168,6 +168,42 @@ class DerbyMergeSpec extends SparkTestBase {
     }
   }
 
+  test("concurrent sink partitions survive Derby's shared MERGE plan cache") {
+    import spark.implicits._
+    // Derby's statement cache is ON here (its default) and shares one
+    // compiled plan between connections that prepare the same text;
+    // MERGE keeps execution state in that plan. Partitions executing a
+    // shared MERGE failed inside Derby with a NullPointerException
+    // (or left a duplicate key row), most often in a fresh JVM's first
+    // iterations: on the CREATE batch of a fresh table and on the
+    // widening batch after the ALTER. Each iteration is a fresh table.
+    val parts = 4
+    val iterations = 40
+    val keys = 1L to 2000L
+    // every fifth key a tombstone, so MERGE and DELETE flushes alternate
+    def title(k: Long, v: String): Option[String] = Option(s"$v-$k").filter(_ => k % 5 != 0)
+    val failed = (1 to iterations).flatMap { i =>
+      val table = s"widen_race_$i"
+      val c = Config(table, keyCols = Seq("ID"), dialect = JdbcMerge.Derby, retryBackoffMs = 0L)
+      val write = JdbcMerge.sink(c, _.isNullAt(1), () => DerbyDb.connect("d_widen_race"))
+      val v1 = spark.sparkContext
+        .parallelize(keys.map(k => (k, title(k, "v1"))), parts).toDF("ID", "TITLE")
+      val v2 = spark.sparkContext
+        .parallelize(keys.map(k => (k, title(k, "v2"), Option(k.toInt))), parts)
+        .toDF("ID", "TITLE", "EXTRA")
+      def attempt(df: org.apache.spark.sql.DataFrame, batch: Long): Option[String] =
+        try { write(df, batch); None }
+        catch { case e: Exception => Some(s"$table batch $batch: $e") }
+      attempt(v1, 0L).orElse(attempt(v2, 1L)).orElse {
+        val got = withConn("d_widen_race")(selectAll(_, table))
+        val want = keys.filter(_ % 5 != 0).map(k => Seq(k, s"v2-$k", k.toInt))
+        if (got == want) None else Some(s"$table: wrong rows ${got.diff(want)}")
+      }
+    }
+    if (failed.nonEmpty)
+      fail(s"${failed.size} of $iterations iterations failed: ${failed.take(3)}")
+  }
+
   test("hostile identifiers (reserved words, spaces) survive a real parser") {
     val hostile = StructType(Seq(
       StructField("ORDER", LongType, nullable = false), // reserved word
@@ -292,7 +328,7 @@ class DerbyMergeSpec extends SparkTestBase {
     def start(input: MemoryStream[RWire]) = ReplicationPipeline.start(
       cdcEnvelope(input),
       ReplicationPipeline.Config(
-        keyField = "user_id",
+        keyFields = Seq("user_id"),
         sink = Config("repl_restart", keyCols = Nil, dialect = JdbcMerge.Derby),
         checkpointDir = ckpt),
       () => DerbyDb.connect("d_repl_restart"))
@@ -338,7 +374,7 @@ class DerbyMergeSpec extends SparkTestBase {
     val q = ReplicationPipeline.start(
       cdcEnvelope(input),
       ReplicationPipeline.Config(
-        keyField = "user_id",
+        keyFields = Seq("user_id"),
         sink = Config("events_sink", keyCols = Nil, dialect = JdbcMerge.Derby),
         checkpointDir = ckpt),
       () => DerbyDb.connect("d_repl"))

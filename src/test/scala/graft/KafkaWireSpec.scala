@@ -133,9 +133,9 @@ class KafkaWireSpec extends SparkTestBase {
     val want = env.orderBy(col("offset")).collect().toSeq
     assert(got == want)
     // and the decoded envelope feeds the standard pipeline identically
-    val viaWire = Cdc.applyEnvelope(decoded, "user_id")
+    val viaWire = Cdc.applyEnvelope(decoded, Seq("user_id"))
       .orderBy(col("user_id")).collect().toSeq
-    val direct = Cdc.applyEnvelope(env, "user_id")
+    val direct = Cdc.applyEnvelope(env, Seq("user_id"))
       .orderBy(col("user_id")).collect().toSeq
     assert(viaWire == direct)
   }

@@ -4,15 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.{Generations, Similarity}
 
-/** Standing recall-curve probe for the ANN payload ladder (round-16,
-  * verdict ask #3): sweeps nProbe × m over the two fixture regimes the
+/** Standing recall-curve probe for the ANN payload ladder: sweeps
+  * nProbe (IVF) and banding (LSH) over the two fixture regimes the
   * specs pin single operating points on — CLUSTERED (IVF's home:
   * synthetic 32 tight clusters, the SimilaritySpec construction) and
   * NEAR-RANDOM (the `embeddings` table: top-10 cosine ≈ 0.27-0.33,
   * neighbor gaps ~0.01 — the adversarial regime for any quantizer) —
-  * for all five persisted rungs (float → int8 → PQ → residual PQ,
-  * nProbe-swept; LSH, banding-swept — its recall axis is candidate-set
-  * collision, not routing, see the in-loop note), emitting one
+  * for the persisted rungs (float and int8, nProbe-swept; LSH,
+  * banding-swept — its recall axis is candidate-set collision, not
+  * routing, see the in-loop note), emitting one
   * markdown row per (fixture, layout, nProbe):
   * recall@10 vs driver-side exact cosine truth, on-disk index bytes,
   * and warm per-query probe latency. The table lands in PLANS.md and
@@ -132,20 +132,10 @@ object RecallProbe {
 
       val cents = Similarity.trainCentroids(df, "vec_id", "embedding", k = nCells,
         knownDim = dim)
-      val pq8 = Similarity.trainPq(df, "vec_id", "embedding", m = 8, knownDim = dim)
-      val pq16 = Similarity.trainPq(df, "vec_id", "embedding", m = 16, knownDim = dim)
-      val pqr8 = Similarity.trainPqResidual(df, "vec_id", "embedding", cents, m = 8,
-        knownDim = dim)
-      val pqr16 = Similarity.trainPqResidual(df, "vec_id", "embedding", cents, m = 16,
-        knownDim = dim)
 
       val layouts: Seq[(String, Similarity.IndexLayout)] = Seq(
         "float" -> Similarity.IvfFloat("vec_id", "embedding", cents),
-        "int8" -> Similarity.IvfInt8("vec_id", "embedding", cents),
-        "pq-m8" -> Similarity.IvfPq("vec_id", "embedding", cents, pq8),
-        "pq-m16" -> Similarity.IvfPq("vec_id", "embedding", cents, pq16),
-        "pqr-m8" -> Similarity.IvfPqResidual("vec_id", "embedding", cents, pqr8),
-        "pqr-m16" -> Similarity.IvfPqResidual("vec_id", "embedding", cents, pqr16))
+        "int8" -> Similarity.IvfInt8("vec_id", "embedding", cents))
 
       layouts.foreach { case (lname, layout) =>
         val path = s"$outRoot/$fname/$lname"

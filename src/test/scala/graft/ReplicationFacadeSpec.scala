@@ -60,16 +60,8 @@ class ReplicationFacadeSpec extends SparkTestBase {
     }
   }
 
-  test("the pre-composite Config constructor forms still compile; hostile keyFields reject") {
+  test("Config refuses hostile keyFields (empty, case-colliding)") {
     val s = JdbcMerge.Config("t", keyCols = Nil)
-    val a = ReplicationPipeline.Config("id", s, "/chk")
-    val b = ReplicationPipeline.Config("id", s, "/chk", Seq("x"))
-    val c = ReplicationPipeline.Config("id", s, "/chk",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val d = ReplicationPipeline.Config(keyField = "id", sink = s, checkpointDir = "/chk")
-    val e = ReplicationPipeline.Config("id", s, "/chk", Seq("x"),
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    assert(Seq(a, b, c, d, e).forall(_.keyFields == Seq("id")))
     // empty and case-colliding key lists are contradictions, not configs
     intercept[IllegalArgumentException](ReplicationPipeline.Config(Nil, s, "/chk"))
     intercept[IllegalArgumentException](
@@ -90,7 +82,7 @@ class ReplicationFacadeSpec extends SparkTestBase {
         registry = registry,
         keySchema = keySt)
       val cfg = ReplicationPipeline.Config(
-        keyField = "id",
+        keyFields = Seq("id"),
         sink = JdbcMerge.Config("movies_first", keyCols = Nil, dialect = JdbcMerge.Derby),
         checkpointDir = ckpt)
       val input = MemoryStream[(Array[Byte], Array[Byte], Long)](spark)
@@ -453,7 +445,7 @@ class ReplicationFacadeSpec extends SparkTestBase {
         registry = registry,
         keySchema = keySt)
       val cfg = ReplicationPipeline.Config(
-        keyField = "id",
+        keyFields = Seq("id"),
         sink = JdbcMerge.Config("movies_nullkey", keyCols = Nil, dialect = JdbcMerge.Derby),
         checkpointDir =
           java.nio.file.Files.createTempDirectory("graft-repl-nullkey").toString)
@@ -499,7 +491,7 @@ class ReplicationFacadeSpec extends SparkTestBase {
         registry = registry,
         keySchema = keySt)
       val cfg = ReplicationPipeline.Config(
-        keyField = "id",
+        keyFields = Seq("id"),
         sink = JdbcMerge.Config("movies_nullfield", keyCols = Nil, dialect = JdbcMerge.Derby),
         checkpointDir =
           java.nio.file.Files.createTempDirectory("graft-repl-nullfield").toString)
@@ -547,7 +539,7 @@ class ReplicationFacadeSpec extends SparkTestBase {
         registry = registry,
         keySchema = keySt)
       def cfgFor(table: String) = ReplicationPipeline.Config(
-        keyField = "id",
+        keyFields = Seq("id"),
         sink = JdbcMerge.Config(table, keyCols = Nil, dialect = JdbcMerge.Derby),
         checkpointDir =
           java.nio.file.Files.createTempDirectory(s"graft-repl-bf-$table").toString)

@@ -144,15 +144,4 @@ object ReplicationFlattenProps extends Properties("ReplicationFlatten") {
       Prop(viaFacade.sortBy(_.mkString("|")) == viaOp.sortBy(_.mkString("|"))) :|
         s"keys=$keys rec=$rec project=$project facade=$viaFacade op=$viaOp"
     }
-
-  property("single-key overloads produce the identical schema") =
-    Prop.forAll(fixture) { case (keys, rec, project) =>
-      val k = keys.head
-      val df = envelopeFrame(Seq(k), rec)
-      val viaSeq = ReplicationPipeline.flatten(df, Seq(k), project).schema
-      val viaStr =
-        if (project.isEmpty) ReplicationPipeline.flatten(df, k).schema
-        else ReplicationPipeline.flatten(df, k, project).schema
-      viaSeq == viaStr
-    }
 }

@@ -65,8 +65,8 @@ class ReplicationPipelineSpec extends SparkTestBase {
     val q = ReplicationPipeline.start(
       envelope,
       ReplicationPipeline.Config(
-        keyField = "user_id",
-        sink = graft.sink.JdbcMerge.Config("events_sink", keyCols = Nil), // derived from keyField
+        keyFields = Seq("user_id"),
+        sink = graft.sink.JdbcMerge.Config("events_sink", keyCols = Nil), // derived from keyFields
         checkpointDir = ckpt),
       () => ReplDb.connect())
     try {
@@ -128,8 +128,8 @@ class ReplicationPipelineSpec extends SparkTestBase {
     val q = ReplicationPipeline.start(
       envelope,
       ReplicationPipeline.Config(
-        keyField = "user_id",
-        sink = graft.sink.JdbcMerge.Config("events_sink", keyCols = Nil), // derived from keyField
+        keyFields = Seq("user_id"),
+        sink = graft.sink.JdbcMerge.Config("events_sink", keyCols = Nil), // derived from keyFields
         checkpointDir = ckpt),
       () => ReplDb.connect())
     try {
@@ -151,7 +151,7 @@ class ReplicationPipelineSpec extends SparkTestBase {
       // the facade's own pull query: flattened sink-row shape, served
       // partition-pruned from the pipeline's state (string-keyed routing)
       val cfg = ReplicationPipeline.Config(
-        keyField = "user_id",
+        keyFields = Seq("user_id"),
         sink = graft.sink.JdbcMerge.Config("events_sink", keyCols = Nil),
         checkpointDir = ckpt)
       val live = ReplicationPipeline.pullQuery(spark, cfg, 1L)

@@ -84,7 +84,7 @@ class ReplicationRegistrySpec extends SparkTestBase {
       assert(wire.subject == "movies.cdc-value",
         "TopicNameStrategy default must derive <topic>-value")
       val cfg = ReplicationPipeline.Config(
-        keyField = "id",
+        keyFields = Seq("id"),
         sink = JdbcMerge.Config("movies_repl", keyCols = Nil, dialect = JdbcMerge.Derby),
         checkpointDir = ckpt)
       def connect(): Connection = DerbyDb.connect("d_repl_registry")

@@ -546,41 +546,40 @@ object ScaleProbe {
         failures ::= f"colocated scaled-bucket ratio $cjRatio%.1f > ${copies * 2.0} " +
           "(bucket scaling did not flatten the per-bucket sort)"
 
-      // ---- adjudication 2e (r15): PQ probe volume-insensitivity. The
-      // PQ index rides the IVF layout; its ADC probe cost must track the
-      // probed buckets' VOLUME, not the corpus. Same lever as 2d: x1 at
-      // 8 buckets, x8 at 8×copies (per-bucket volume constant — buckets
-      // ∝ corpus is the production sizing), nProbe fixed, index build
-      // NOT timed (the amortized one-off) — probe wall should stay ~flat.
-      def pqProbe(dir: String, kBuckets: Int, tag: String): Double = {
+      // ---- adjudication 2e: compressed-rung probe volume-insensitivity.
+      // The int8 index rides the IVF layout; its pruned probe cost must
+      // track the probed buckets' VOLUME, not the corpus. Same lever as
+      // 2d: x1 at 8 buckets, x8 at 8×copies (per-bucket volume constant —
+      // buckets ∝ corpus is the production sizing), nProbe fixed, index
+      // build NOT timed (the amortized one-off) — probe wall should stay
+      // ~flat.
+      def int8Probe(dir: String, kBuckets: Int, tag: String): Double = {
         val emb = Tables.embeddings(spark, dir)
         val cents = graft.ops.Similarity.trainCentroids(
           emb, "vec_id", "embedding", k = kBuckets)
-        val pq = graft.ops.Similarity.trainPq(emb, "vec_id", "embedding", m = 8)
-        val root = s"$work/pq_$tag"
-        graft.ops.Similarity.writeIndex(
-          emb, graft.ops.Similarity.IvfPq("vec_id", "embedding", cents, pq), root)
+        val layout = graft.ops.Similarity.IvfInt8("vec_id", "embedding", cents)
+        val root = s"$work/int8_$tag"
+        graft.ops.Similarity.writeIndex(emb, layout, root)
         val qv = emb.filter(col("vec_id") === 0L)
           .select(col("embedding")).head.getSeq[Float](0).toArray
         def once(): Double = {
           val t0 = System.nanoTime()
           graft.ops.Similarity.probeIndex(
-            spark, root, graft.ops.Similarity.IvfPq("vec_id", "embedding", cents, pq), qv, 10,
-            nProbe = 6, excludeId = Some(0L))
+            spark, root, layout, qv, 10, nProbe = 6, excludeId = Some(0L))
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }
         once() // warm
         (1 to 2).map(_ => once()).min
       }
-      val pq1 = pqProbe(oneDir, 8, "x1")
-      val pqBig = pqProbe(bigDir, 8 * copies, "xbig")
-      val pqRatio = pqBig / pq1
-      println(f"SCALEPROBE pq-probe-scaledbuckets x1(8)=$pq1%6.2f s " +
-        f"x$copies(${8 * copies})=$pqBig%6.2f s ratio=$pqRatio%5.2f (flat=1.0)")
-      if (pqRatio > 3.0)
-        failures ::= f"PQ probe ratio $pqRatio%.1f > 3.0 at constant probed volume " +
-          "(ADC probe cost is tracking the corpus, not the probed buckets)"
+      val i81 = int8Probe(oneDir, 8, "x1")
+      val i8Big = int8Probe(bigDir, 8 * copies, "xbig")
+      val i8Ratio = i8Big / i81
+      println(f"SCALEPROBE int8-probe-scaledbuckets x1(8)=$i81%6.2f s " +
+        f"x$copies(${8 * copies})=$i8Big%6.2f s ratio=$i8Ratio%5.2f (flat=1.0)")
+      if (i8Ratio > 3.0)
+        failures ::= f"int8 probe ratio $i8Ratio%.1f > 3.0 at constant probed volume " +
+          "(the pruned probe cost is tracking the corpus, not the probed buckets)"
 
       // ---- adjudication 2f (r16): the HIER build as the probed flavor
       // (r15 verdict ask #7 — 2e and the q_sim_topk_ivf row ride flat

@@ -398,149 +398,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(top == Set(777777L, 777778L), s"resumed appends must serve: $top")
   }
 
-  test("PQ IVF ingest: typed appends visible, equal to a rebuild, folded by compaction") {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sf001)
-    val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
-    val pq = Similarity.trainPq(emb, "vec_id", "embedding", m = 8)
-    val pqIvf = Similarity.IvfPq("vec_id", "embedding", centroids, pq)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-pqi").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-pqi-ck").toString
-    Similarity.writeIndex(emb, pqIvf, dir)
-    val qVec = vecs.find(_._1 == queryId).get._2
-    def probe(d: String): Seq[(Long, Double)] =
-      Similarity.probeIndex(spark, d, pqIvf, qVec, k, nProbe = 8, excludeId = Some(queryId))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val s = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Float])](spark)
-    s.addData(Seq((888888L, qVec)))
-    val q = Similarity.ingestIndexStream(s.toDF().toDF("vec_id", "embedding"), pqIvf, dir, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    val after = probe(dir)
-    // the appended row carries the query's own codes, so ADC scores it at
-    // the reconstruction's self-cosine — the maximum any row can reach
-    assert(after.head._1 == 888888L, s"appended near-dup must rank first: $after")
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-ivf-pqi2").toString
-    Similarity.writeIndex(
-      emb.select(col("vec_id"), col("embedding"))
-        .union(Seq((888888L, qVec)).toDF("vec_id", "embedding")),
-      pqIvf, dir2)
-    assert(probe(dir2) == after, "append == rebuild for the PQ layout")
-    assert(Similarity.compactIndex(spark, dir, pqIvf))
-    assert(probe(dir) == after, "compaction must preserve probe answers")
-    assert(!Similarity.compactIndex(spark, dir, pqIvf),
-      "second compaction must be a no-op (streamed/ was folded)")
-  }
-
-  test("PQ index: smaller than int8 on disk, pruned ADC probe, high top-k overlap") {
-    val emb = Tables.embeddings(spark, sf001)
-    val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
-    // m=16 (16 bytes/vector): the fixture embeddings are near-random —
-    // neighbor cosines sit ~0.01 apart — so this is PQ's HARDEST regime;
-    // 4-dim fragments keep the ADC rank within the int8 probe's k-2
-    // posture even here, and the index still undercuts int8 by > 40%
-    val pq = Similarity.trainPq(emb, "vec_id", "embedding", m = 16)
-    val fDir = java.nio.file.Files.createTempDirectory("graft-ivf-pq-f").toString
-    val qDir = java.nio.file.Files.createTempDirectory("graft-ivf-pq-q").toString
-    val pDir = java.nio.file.Files.createTempDirectory("graft-ivf-pq-p").toString
-    Similarity.writeIndex(emb, Similarity.IvfFloat("vec_id", "embedding", centroids), fDir)
-    Similarity.writeIndex(emb, Similarity.IvfInt8("vec_id", "embedding", centroids), qDir)
-    Similarity.writeIndex(emb, Similarity.IvfPq("vec_id", "embedding", centroids, pq), pDir)
-    def bytes(dir: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) f.length() else 0L
-      walk(new java.io.File(dir))
-    }
-    // the payload ladder holds on disk: PQ (m=16 bytes/vector) beats the
-    // int8 index (dim=64 bytes + scale), which beats float
-    assert(bytes(pDir) < bytes(qDir) * 0.6,
-      s"pq ${bytes(pDir)} vs int8 ${bytes(qDir)}")
-    assert(bytes(qDir) < bytes(fDir) * 0.6,
-      s"int8 ${bytes(qDir)} vs float ${bytes(fDir)}")
-    val qVec = vecs.find(_._1 == queryId).get._2
-    val probed = Similarity.probeIndex(
-      spark, pDir, Similarity.IvfPq("vec_id", "embedding", centroids, pq), qVec, k,
-      nProbe = 6, excludeId = Some(queryId))
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
-    val approx = probed.collect().map(_.getLong(0)).toSet
-    val exact = Similarity.probeIndex(
-      spark, fDir, Similarity.IvfFloat("vec_id", "embedding", centroids), qVec, k,
-      nProbe = 6, excludeId = Some(queryId)).collect().map(_.getLong(0)).toSet
-    // k-3 (measured: exactly 7 — training is deterministic, so this is
-    // a stable figure, not flake): one notch below the int8 probe's k-2
-    // at 4× fewer payload bytes, on a fixture whose neighbor gaps
-    // (~0.01 cosine) are the adversarial case for any reconstruction
-    // rank. Clustered corpora — the regime IVF is FOR — sit well above
-    // this floor.
-    assert((approx & exact).size >= k - 3,
-      s"overlap ${(approx & exact).size}/$k too low")
-    // reserved index-column names refuse, same contract as the int8 writer
-    intercept[IllegalArgumentException](Similarity.writeIndex(
-      emb.withColumn("codes", col("vec_id")),
-      Similarity.IvfPq("vec_id", "embedding", centroids, pq, payloadCols = Seq("codes")),
-      pDir))
-  }
-
-  test("residual PQ: tighter reconstructions beat raw PQ on clustered data") {
-    import spark.implicits._
-    // the regime residual coding is FOR: MORE clusters than codebook
-    // entries (32 clusters, ksub=16), where raw PQ cannot even give each
-    // cluster's fragment its own entry per subspace, while the residual
-    // coder spends the whole budget on the cluster-INDEPENDENT noise
-    // ball — the construction, not the budget, decides.
-    val rnd = new scala.util.Random(7)
-    val dim = 64
-    val data = (0 until 32).flatMap { c =>
-      val center = Array.fill(dim)(rnd.nextGaussian())
-      (0 until 20).map { i =>
-        (c * 20L + i, center.map(x => (x + 0.15 * rnd.nextGaussian()).toFloat))
-      }
-    }
-    val df = data.toDF("vec_id", "embedding")
-    val q = data.find(_._1 == 0L).get._2
-    val truth = data.filter(_._1 != 0L).map { case (id, v) => (id, cosine(v, q)) }
-      .sortBy { case (id, c) => (-c, id) }.take(k).map(_._1).toSet
-    val centroids = Similarity.trainCentroids(df, "vec_id", "embedding", k = 32)
-    val raw = Similarity.trainPq(df, "vec_id", "embedding", m = 8, ksub = 16)
-    val res = Similarity.trainPqResidual(df, "vec_id", "embedding", centroids, m = 8, ksub = 16)
-    val rawDir = java.nio.file.Files.createTempDirectory("graft-pq-raw").toString
-    val resDir = java.nio.file.Files.createTempDirectory("graft-pq-res").toString
-    Similarity.writeIndex(df, Similarity.IvfPq("vec_id", "embedding", centroids, raw), rawDir)
-    Similarity.writeIndex(
-      df, Similarity.IvfPqResidual("vec_id", "embedding", centroids, res), resDir)
-    def recall(ids: Set[Long]): Double = truth.count(ids.contains).toDouble / k
-    // score ERROR is the honest measurement here: the true within-cluster
-    // ranking is noise-vs-noise (every member sits the same distance from
-    // the center), so absolute rank recall is adversarial for ANY m-byte
-    // coder — what residual coding buys is reconstruction accuracy, and
-    // the rank quality follows it
-    val trueCos = data.filterNot(_._1 == 0L)
-      .map { case (id, v) => id -> cosine(v, q) }.toMap
-    def meanErr(rows: Array[(Long, Double)]): Double =
-      rows.map { case (id, s) => math.abs(s - trueCos(id)) }.sum / rows.length
-    val rawRows = Similarity.probeIndex(
-      spark, rawDir, Similarity.IvfPq("vec_id", "embedding", centroids, raw), q,
-      399, nProbe = 8, excludeId = Some(0L))
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val resProbed = Similarity.probeIndex(
-      spark, resDir,
-      Similarity.IvfPqResidual("vec_id", "embedding", centroids, res), q, 399,
-      nProbe = 8, excludeId = Some(0L))
-    val plan = resProbed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
-    val resRows = resProbed.collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val (rawErr, resErr) = (meanErr(rawRows), meanErr(resRows))
-    assert(resErr < rawErr / 2,
-      s"residual mean |adc-cos| $resErr must halve raw $rawErr on clustered data")
-    // and the rank quality follows: top-k recall at the probe defaults
-    val rawR = recall(rawRows.sortBy { case (id, s) => (-s, id) }.take(k).map(_._1).toSet)
-    val resR = recall(resRows.sortBy { case (id, s) => (-s, id) }.take(k).map(_._1).toSet)
-    assert(resR >= rawR, s"residual recall $resR must not trail raw $rawR")
-    info(f"clustered: rawErr=$rawErr%.4f resErr=$resErr%.4f rawRecall=$rawR resRecall=$resR")
-  }
-
   test("trainers survive poisoned sample vectors: non-finite rows neither train nor starve") {
     import spark.implicits._
     // a poisoned LOW-ID PREFIX is the adversarial shape: the sample is
@@ -562,13 +419,6 @@ class SimilaritySpec extends SparkTestBase {
     val cents = Similarity.trainCentroids(df, "vec_id", "embedding", k = 2, sampleSize = 6)
     assert(cents.nonEmpty && cents.forall(_.forall(java.lang.Float.isFinite)),
       "poisoned prefix must neither starve nor contaminate the centroids")
-    val pq = Similarity.trainPq(df, "vec_id", "embedding", m = 2, ksub = 4, sampleSize = 6)
-    assert(!pq.isEmpty && pq.books.forall(_.forall(_.forall(java.lang.Float.isFinite))),
-      "PQ codebooks must be finite")
-    val res = Similarity.trainPqResidual(
-      df, "vec_id", "embedding", cents, m = 2, ksub = 4, sampleSize = 6)
-    assert(!res.isEmpty && res.books.forall(_.forall(_.forall(java.lang.Float.isFinite))),
-      "residual codebooks must be finite")
   }
 
   test("trainers survive RAGGED sample vectors: off-dimension rows neither train nor starve") {
@@ -576,8 +426,7 @@ class SimilaritySpec extends SparkTestBase {
     // the ragged sibling of the poisoned-prefix test: the executor
     // kernels NULL a mismatched row per row, but the trainers index
     // every sampled point up to pts.head.length — before the dim gate, a
-    // length-2 row in the sample threw AIOOBE in kmeans, and a
-    // one-short row silently ZERO-PADDED trainPq's tail subspace. The
+    // length-2 row in the sample threw AIOOBE in kmeans. The
     // adversarial shape is again a LOW-ID PREFIX: ragged rows dominate
     // the first ids, so a prefix-bounded dim probe would detect the
     // WRONG dim and a post-limit drop would starve the sample.
@@ -593,110 +442,16 @@ class SimilaritySpec extends SparkTestBase {
     assert(cents.nonEmpty && cents.forall(_.length == dim),
       "ragged prefix must neither starve training nor skew the detected dimension")
     assert(cents.forall(_.forall(java.lang.Float.isFinite)))
-    val pq = Similarity.trainPq(df, "vec_id", "embedding", m = 2, ksub = 4, sampleSize = 6)
-    assert(!pq.isEmpty && pq.dsub == dim / 2,
-      "PQ subspaces must split the modal dim, not a ragged head row's")
-    val res = Similarity.trainPqResidual(
-      df, "vec_id", "embedding", cents, m = 2, ksub = 4, sampleSize = 6)
-    assert(!res.isEmpty && res.dsub == dim / 2)
     val hier = Similarity.trainCentroidsHier(
       df, "vec_id", "embedding", coarseCells = 2, finePerCell = 2, sampleSize = 6)
     assert(!hier.isEmpty && hier.coarse.forall(_.length == dim)
       && hier.fine.forall(_.length == dim))
   }
 
-  test("residual ADC equals the driver reconstruction model; encode null contract") {
+  test("every probe refuses a wrong-flavor root with the flavor message") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf001)
     val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
-    val pq = Similarity.trainPqResidual(emb, "vec_id", "embedding", centroids, m = 8)
-    val residualIvf = Similarity.IvfPqResidual("vec_id", "embedding", centroids, pq)
-    val pqIvf = Similarity.IvfPq("vec_id", "embedding", centroids, pq)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-res-model").toString
-    Similarity.writeIndex(emb, residualIvf, dir)
-    val qVec = vecs.find(_._1 == queryId).get._2
-    val got = Similarity.probeIndex(
-      spark, dir, residualIvf, qVec, k, nProbe = 8, excludeId = Some(queryId))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val qn = math.sqrt(qVec.foldLeft(0.0)((a, x) => a + x.toDouble * x))
-    val byId = vecs.toMap
-    var maxErr = 0.0
-    got.foreach { case (id, score) =>
-      // encode through the kernel entry point, then replicate the ADC
-      // table construction + kernel accumulation order in plain Scala:
-      // q̂·cent first, per-subspace (dot, cross, norm²) partials in
-      // dimension order, den = |cent|² + 2·cross + norm². Bit-for-bit.
-      val row = graft.functions.VectorKernels.pqEncodeResidual(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          byId(id).map(_.asInstanceOf[Any])),
-        centroids, pq.books, qVec.length, pq.dsub)
-      val cent = centroids(row.getInt(0))
-      val codes = row.getBinary(1)
-      var qc = 0.0
-      var cn = 0.0
-      for (i <- qVec.indices) {
-        qc += qVec(i).toDouble / qn * cent(i)
-        cn += cent(i).toDouble * cent(i)
-      }
-      var dot = qc
-      var cross = 0.0
-      var n2 = 0.0
-      for (s <- 0 until pq.m) {
-        val e = pq.books(s)(codes(s) & 0xFF)
-        var d = 0.0; var x = 0.0; var nn = 0.0
-        for (j <- e.indices) {
-          d += qVec(s * pq.dsub + j).toDouble / qn * e(j)
-          nn += e(j).toDouble * e(j)
-          x += cent(s * pq.dsub + j).toDouble * e(j)
-        }
-        dot += d; n2 += nn; cross += x
-      }
-      val model = dot / math.sqrt(cn + 2.0 * cross + n2)
-      assert(model == score, s"id=$id driver ADC model diverged: $model vs $score")
-      maxErr = math.max(maxErr, math.abs(score - cosine(byId(id), qVec)))
-    }
-    // near-random fixture: residual ≈ raw regime, the loose quality floor
-    assert(maxErr < 0.2, s"max |adc - cosine| = $maxErr")
-    // NULL contract: zero-norm and ragged vectors encode to a NULL struct
-    val enc = Seq((1L, Array.fill(64)(0f)), (2L, qVec.take(5)))
-      .toDF("id", "vec")
-      .select(col("id"),
-        graft.functions.native.pqEncodeResidual(col("vec"), centroids, pq.books).as("e"))
-      .collect()
-    assert(enc.forall(_.isNullAt(1)), "zero-norm/ragged must encode NULL")
-    // FLAVOR guard: raw-PQ and residual-PQ share a schema, so the
-    // generation's flavor marker is what refuses the cross-flavor
-    // probe and ingester — plausible-looking garbage scores otherwise
-    val crossProbe = intercept[IllegalArgumentException] {
-      Similarity.probeIndex(spark, dir, pqIvf, qVec, k, nProbe = 2)
-    }
-    assert(crossProbe.getMessage.contains("flavor"), crossProbe.getMessage)
-    val ck = java.nio.file.Files.createTempDirectory("graft-pq-flavor-ck").toString
-    val stray = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Float])](spark)
-    val crossIngest = intercept[IllegalArgumentException] {
-      Similarity.ingestIndexStream(stray.toDF().toDF("vec_id", "embedding"), pqIvf, dir, ck)
-    }
-    assert(crossIngest.getMessage.contains("flavor"), crossIngest.getMessage)
-    // ...and compaction carries the marker: after folding a legitimate
-    // residual append, the cross-flavor probe is STILL refused
-    val rck = java.nio.file.Files.createTempDirectory("graft-pq-res-ck").toString
-    val in2 = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Float])](spark)
-    in2.addData(Seq((888888L, qVec)))
-    val rq = Similarity.ingestIndexStream(
-      in2.toDF().toDF("vec_id", "embedding"), residualIvf, dir, rck)
-    try rq.processAllAvailable() finally rq.stop()
-    assert(Similarity.compactIndex(spark, dir, residualIvf))
-    intercept[IllegalArgumentException] {
-      Similarity.probeIndex(spark, dir, pqIvf, qVec, k, nProbe = 2)
-    }
-  }
-
-  test("every probe refuses a wrong-flavor root with the flavor message") {
-    val emb = Tables.embeddings(spark, sf001)
-    val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
-    val pq = Similarity.trainPqResidual(emb, "vec_id", "embedding", centroids, m = 8)
     val qVec = vecs.find(_._1 == queryId).get._2
     def root(layout: Similarity.IndexLayout): String = {
       val dir = java.nio.file.Files.createTempDirectory("graft-flavor").toString
@@ -704,94 +459,36 @@ class SimilaritySpec extends SparkTestBase {
       dir
     }
     val float = Similarity.IvfFloat("vec_id", "embedding", centroids)
-    // (root written by one layout, probe layout of another flavor)
-    val mismatches = Seq(
-      root(Similarity.IvfInt8("vec_id", "embedding", centroids)) -> float,
-      root(float) -> Similarity.Lsh("vec_id", "embedding", 24, 3),
-      root(Similarity.IvfPqResidual("vec_id", "embedding", centroids, pq)) ->
-        Similarity.IvfPq("vec_id", "embedding", centroids, pq))
-    mismatches.foreach { case (dir, wrong) =>
+    val int8 = Similarity.IvfInt8("vec_id", "embedding", centroids)
+    val int8Dir = root(int8)
+    val floatDir = root(float)
+    def refusedProbe(dir: String, wrong: Similarity.IndexLayout): Unit = {
       val e = intercept[IllegalArgumentException](
         Similarity.probeIndex(spark, dir, wrong, qVec, k, nProbe = 2).collect())
       assert(e.getMessage.contains("flavor"), e.getMessage)
     }
-  }
-
-  test("PQ ADC scores equal the driver reconstruction model; error band vs true cosine") {
-    val emb = Tables.embeddings(spark, sf001)
-    val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
-    val pq = Similarity.trainPq(emb, "vec_id", "embedding", m = 8)
-    // determinism: re-training on the same fixture reproduces the tensor
-    val pq2 = Similarity.trainPq(emb, "vec_id", "embedding", m = 8)
-    assert(pq.books.flatten.flatten.toSeq == pq2.books.flatten.flatten.toSeq)
-    val pDir = java.nio.file.Files.createTempDirectory("graft-pq-model").toString
-    Similarity.writeIndex(emb, Similarity.IvfPq("vec_id", "embedding", centroids, pq), pDir)
-    val qVec = vecs.find(_._1 == queryId).get._2
-    val got = Similarity.probeIndex(
-      spark, pDir, Similarity.IvfPq("vec_id", "embedding", centroids, pq), qVec, k,
-      nProbe = 8, excludeId = Some(queryId))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    // independent driver model: encode through the kernel entry point
-    // (the same one the executors compile against), then replicate the
-    // ADC table construction in plain Scala — per-(subspace, code)
-    // partials in dimension order, summed in subspace order. Scores
-    // must agree BIT-FOR-BIT: same doubles, same order.
-    val qn = math.sqrt(qVec.foldLeft(0.0)((a, x) => a + x.toDouble * x))
-    def adc(codes: Array[Byte]): Double = {
-      var dot = 0.0; var n2 = 0.0
-      for (s <- codes.indices) {
-        val book = pq.books(s)(codes(s) & 0xFF)
-        var d = 0.0; var n = 0.0
-        for (j <- book.indices) {
-          d += qVec(s * pq.dsub + j).toDouble / qn * book(j)
-          n += book(j).toDouble * book(j)
-        }
-        dot += d; n2 += n
-      }
-      dot / math.sqrt(n2)
+    // (root written by one layout, probe layout of another flavor)
+    refusedProbe(int8Dir, float)
+    refusedProbe(floatDir, Similarity.Lsh("vec_id", "embedding", 24, 3))
+    def stream() = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Array[Float])](spark)
+    def ckpt(): String = java.nio.file.Files.createTempDirectory("graft-flavor-ck").toString
+    // a wrong-flavor INGEST is refused before it appends a row
+    val crossIngest = intercept[IllegalArgumentException] {
+      Similarity.ingestIndexStream(stream().toDF().toDF("vec_id", "embedding"), int8,
+        floatDir, ckpt())
     }
-    val byId = vecs.toMap
-    var maxErr = 0.0
-    got.foreach { case (id, score) =>
-      val codes = graft.functions.VectorKernels.pqEncode(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          byId(id).map(_.asInstanceOf[Any])),
-        pq.books, qVec.length, pq.dsub)
-      assert(adc(codes) == score, s"id=$id driver ADC model diverged")
-      maxErr = math.max(maxErr, math.abs(score - cosine(byId(id), qVec)))
-    }
-    // the reconstruction cosine tracks the true cosine within the
-    // codebook error band on the fixture — the quality floor that makes
-    // the ADC rank usable
-    assert(maxErr < 0.15, s"max |adc - cosine| = $maxErr")
-  }
-
-  test("PQ encode: scale invariance, null contract, ladder byte width") {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sf001)
-    val pq = Similarity.trainPq(emb, "vec_id", "embedding", m = 8)
-    assert(pq.m == 8 && pq.dsub == 8 && pq.ksub <= 256)
-    val v = vecs.find(_._1 == queryId).get._2
-    val frame = Seq(
-      (1L, v),                      // encodes
-      (2L, v.map(_ * 2f)),          // same DIRECTION: identical codes
-      (3L, Array.fill(64)(0f)),     // zero norm: NULL
-      (4L, v.take(10))              // ragged: NULL
-    ).toDF("id", "vec")
-    val enc = frame
-      .select(col("id"), graft.functions.native.pqEncode(col("vec"), pq.books).as("codes"))
-      .collect().map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Array[Byte]])))
-      .toMap
-    assert(enc(1L).get.length == 8, "m bytes per vector")
-    assert(enc(1L).get.toSeq == enc(2L).get.toSeq,
-      "cosine is scale-invariant, so encode must be")
-    assert(enc(3L).isEmpty && enc(4L).isEmpty, "zero-norm and ragged vectors carry NULL codes")
-    // a ragged hand-built tensor would corrupt the ADC tables' block
-    // arithmetic (ksub comes from books.head) — the constructor refuses
-    intercept[IllegalArgumentException](Similarity.PqCodebooks(
-      Array(Array(Array(1f, 2f)), Array(Array(1f, 2f), Array(3f, 4f)))))
-    intercept[IllegalArgumentException](Similarity.PqCodebooks(
-      Array(Array(Array.empty[Float]))))
+    assert(crossIngest.getMessage.contains("flavor"), crossIngest.getMessage)
+    // a same-flavor append, then its compaction, keep the marker: the
+    // cross-flavor probe is still refused at both steps
+    val in = stream()
+    in.addData(Seq((888888L, qVec)))
+    val q = Similarity.ingestIndexStream(in.toDF().toDF("vec_id", "embedding"), int8,
+      int8Dir, ckpt())
+    try q.processAllAvailable() finally q.stop()
+    refusedProbe(int8Dir, float)
+    assert(Similarity.compactIndex(spark, int8Dir, int8))
+    refusedProbe(int8Dir, float)
   }
 
   test("streamed IVF ingestion: probes see appended vectors, pruning intact") {
