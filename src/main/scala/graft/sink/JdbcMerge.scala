@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.sql.{Connection, PreparedStatement}
+import java.sql.{Connection, SQLNonTransientConnectionException}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -14,13 +14,16 @@ import org.apache.spark.sql.types._
   * 10 retries × 3 s backoff (:79-80).
   *
   * Spark has no built-in JDBC upsert, so this is a `foreachBatch` helper:
-  * split the micro-batch on the tombstone predicate, DELETE the tombstoned
-  * keys, MERGE the rest — per partition, in prepared-statement batches.
+  * per partition, ONE prepared MERGE whose bound deletion flag picks the
+  * action — DELETE a matched key when the row is a tombstone, UPDATE or
+  * INSERT it otherwise — run in prepared-statement batches. A JDBC batch
+  * executes its rows in order, so same-key operations (a tombstone then
+  * a re-insert) apply in row order inside one batch.
   *
   * Delivery semantics: at-least-once per micro-batch, the same contract as
-  * the Connect sink (a retried batch re-applies MERGE/DELETE, both
-  * idempotent by key), NOT exactly-once — a failure between partitions
-  * leaves a partially-applied batch that the retry re-covers.
+  * the Connect sink (a retried batch re-applies the MERGE, idempotent by
+  * key), NOT exactly-once — a failure between partitions leaves a
+  * partially-applied batch that the retry re-covers.
   *
   * Scale notes: work is executor-side (`foreachPartition`) — the driver
   * never collects rows; each partition holds one connection and flushes
@@ -49,9 +52,9 @@ object JdbcMerge {
 
   /** The dialect seam: everything engine-specific about the generated
     * SQL lives behind this trait — identifier quoting, the type map,
-    * whether CREATE carries its own existence guard, the MERGE shape
-    * (and, because shapes differ, the parameter bind order), and the
-    * ADD-COLUMN syntax. Two implementations: [[TSql]] mirrors the
+    * whether CREATE carries its own existence guard, the upsert-or-delete
+    * MERGE shape (and, because shapes differ, the parameter bind order),
+    * and the ADD-COLUMN syntax. Two implementations: [[TSql]] mirrors the
     * reference's kafka-connect-jdbc → MSSQL sink; [[Derby]] exists so
     * the generated statements are parsed AND EXECUTED by a real SQL
     * engine in the test suite (embedded Derby 10.16 supports MERGE) —
@@ -73,13 +76,17 @@ object JdbcMerge {
       * guard; false makes [[ensureTable]] consult live metadata first. */
     def guardedCreate: Boolean
     def createTableSql(cfg: Config, schema: StructType): String
+    /** One-row MERGE that deletes a matched key when its deletion flag
+      * is bound true and upserts otherwise. Two flag parameters: one
+      * guards the WHEN MATCHED … DELETE clause, one the INSERT. */
     def mergeSql(cfg: Config, schema: StructType): String
-    /** Field indices (into `schema`) in [[mergeSql]]'s `?` order — the
-      * T-SQL VALUES row binds each column once in schema order, the
-      * Derby SYSDUMMY1 idiom binds keys (ON), non-keys (SET), then the
-      * full row (INSERT). */
+    /** Field indices (into `schema`) in [[mergeSql]]'s `?` order, with
+      * [[DeletionFlag]] at the flag slots — the T-SQL VALUES row binds
+      * each column once in schema order, then the two flags; the Derby
+      * SYSDUMMY1 idiom binds keys (ON), flag, non-keys (SET), flag, then
+      * the full row (INSERT). The key stays parameter 1 and the INSERT
+      * values stay last on both. */
     def mergeBindIndices(cfg: Config, schema: StructType): Seq[Int]
-    def deleteSql(cfg: Config): String
     def alterAddSql(cfg: Config, f: StructField): String
   }
 
@@ -151,19 +158,18 @@ object JdbcMerge {
       val set = nonKey.map(c => s"$c = s.$c").mkString(", ")
       val insertCols = cols.mkString(", ")
       val insertVals = cols.map(c => s"s.$c").mkString(", ")
+      // a second WHEN MATCHED clause is legal because the first has an
+      // AND condition
       s"MERGE INTO ${quoteTable(cfg.table)} AS t " +
         s"USING (VALUES ($src)) AS s (${cols.mkString(", ")}) " +
         s"ON $on " +
+        "WHEN MATCHED AND ? = 1 THEN DELETE " +
         (if (nonKey.nonEmpty) s"WHEN MATCHED THEN UPDATE SET $set " else "") +
-        s"WHEN NOT MATCHED THEN INSERT ($insertCols) VALUES ($insertVals);"
+        s"WHEN NOT MATCHED AND ? = 0 THEN INSERT ($insertCols) VALUES ($insertVals);"
     }
 
     def mergeBindIndices(cfg: Config, schema: StructType): Seq[Int] =
-      schema.fields.indices
-
-    def deleteSql(cfg: Config): String =
-      s"DELETE FROM ${quoteTable(cfg.table)} WHERE " +
-        cfg.keyCols.map(k => s"${quoteId(k)} = ?").mkString(" AND ")
+      schema.fields.indices ++ Seq(DeletionFlag, DeletionFlag)
 
     def alterAddSql(cfg: Config, f: StructField): String =
       s"ALTER TABLE ${quoteTable(cfg.table)} ADD " +
@@ -180,8 +186,11 @@ object JdbcMerge {
     *    live metadata first ([[guardedCreate]] = false);
     *  - MERGE's source must be a base table or table function — the
     *    `USING SYSIBM.SYSDUMMY1 ON t.k = ?` one-row idiom replaces the
-    *    VALUES row, which changes the bind order (keys, non-keys, full
-    *    row) and drops the statement terminator (Derby rejects `;`). */
+    *    VALUES row, which changes the bind order (keys, flag, non-keys,
+    *    flag, full row) and drops the statement terminator (Derby
+    *    rejects `;`);
+    *  - the deletion flag is bound through `CAST(? AS BOOLEAN)`, which
+    *    gives the parameter its type. */
   case object Derby extends Dialect {
     def quoteId(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""
 
@@ -227,20 +236,18 @@ object JdbcMerge {
       val set = nonKey.map(c => s"$c = ?").mkString(", ")
       s"MERGE INTO ${quoteTable(cfg.table)} AS t USING SYSIBM.SYSDUMMY1 " +
         s"ON $on " +
+        "WHEN MATCHED AND CAST(? AS BOOLEAN) THEN DELETE " +
         (if (nonKey.nonEmpty) s"WHEN MATCHED THEN UPDATE SET $set " else "") +
-        s"WHEN NOT MATCHED THEN INSERT (${cols.mkString(", ")}) " +
+        "WHEN NOT MATCHED AND NOT CAST(? AS BOOLEAN) " +
+        s"THEN INSERT (${cols.mkString(", ")}) " +
         s"VALUES (${cols.map(_ => "?").mkString(", ")})"
     }
 
     def mergeBindIndices(cfg: Config, schema: StructType): Seq[Int] = {
       val keyIdx = cfg.keyCols.map(schema.fieldIndex)
       val nonKeyIdx = schema.fields.indices.filterNot(keyIdx.contains)
-      keyIdx ++ nonKeyIdx ++ schema.fields.indices
+      (keyIdx :+ DeletionFlag) ++ (nonKeyIdx :+ DeletionFlag) ++ schema.fields.indices
     }
-
-    def deleteSql(cfg: Config): String =
-      s"DELETE FROM ${quoteTable(cfg.table)} WHERE " +
-        cfg.keyCols.map(k => s"${quoteId(k)} = ?").mkString(" AND ")
 
     def alterAddSql(cfg: Config, f: StructField): String =
       s"ALTER TABLE ${quoteTable(cfg.table)} ADD COLUMN " +
@@ -385,15 +392,17 @@ object JdbcMerge {
     }
   }
 
-  /** One-row MERGE upsert keyed on the record key
-    * (`insert.mode=upsert`, `pk.mode=record_key`); shape and bind order
-    * are the dialect's ([[Dialect.mergeSql]] / [[Dialect.mergeBindIndices]]). */
+  /** One-row MERGE keyed on the record key: upsert
+    * (`insert.mode=upsert`, `pk.mode=record_key`), or the tombstone
+    * handler's key-only delete when the row's deletion flag is bound
+    * true (`delete.enabled=true`, TOMBSTONE_HANDLING_GUIDE.md:219-228);
+    * shape and bind order are the dialect's ([[Dialect.mergeSql]] /
+    * [[Dialect.mergeBindIndices]]). */
   def mergeSql(cfg: Config, schema: StructType): String =
     cfg.dialect.mergeSql(cfg, schema)
 
-  /** Tombstone handler: key-only DELETE (`delete.enabled=true`,
-    * TOMBSTONE_HANDLING_GUIDE.md:219-228). */
-  def deleteSql(cfg: Config): String = cfg.dialect.deleteSql(cfg)
+  /** The [[Dialect.mergeBindIndices]] entry of a deletion-flag slot. */
+  val DeletionFlag: Int = -1
 
   // ---- batch mechanics --------------------------------------------------
 
@@ -402,20 +411,34 @@ object JdbcMerge {
     * failure. `sleep` is injectable for tests; `onRetry` runs before each
     * backoff (the sink hooks a rollback here so servers that abort the
     * transaction after an error — e.g. an MSSQL deadlock victim — get a
-    * clean transaction for the retry attempt). */
+    * clean transaction for the retry attempt).
+    *
+    * A lost connection is not retried: once a failure is a
+    * `SQLNonTransientConnectionException` (SQLState class 08, e.g.
+    * Derby's 08003 "No current connection" after a session-severity
+    * error) or `connClosed` reports true, every further attempt would
+    * fail at once, so the failure is rethrown without backoff, carrying
+    * the previous attempt's failure as a suppressed exception. */
   def withRetries[T](
       maxRetries: Int,
       backoffMs: Long,
       sleep: Long => Unit = Thread.sleep,
-      onRetry: () => Unit = () => ())(
+      onRetry: () => Unit = () => (),
+      connClosed: () => Boolean = () => false)(
       op: => T): T = {
     var attempt = 0
+    var previous: Option[Exception] = None
     while (true) {
       try return op
       catch {
         case e: Exception =>
           attempt += 1
-          if (attempt > maxRetries) throw e
+          val lost = e.isInstanceOf[SQLNonTransientConnectionException] || connClosed()
+          if (attempt > maxRetries || lost) {
+            previous.filter(_ ne e).foreach(e.addSuppressed)
+            throw e
+          }
+          previous = Some(e)
           onRetry()
           sleep(backoffMs)
       }
@@ -423,29 +446,22 @@ object JdbcMerge {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Bind one row's values to a prepared statement, `indices` being the
-    * row field index for each successive `?` (schema order for T-SQL's
-    * VALUES row; keys++nonkeys++row for Derby's SYSDUMMY1 idiom). */
-  private def bindRow(ps: PreparedStatement, row: Row, indices: Seq[Int]): Unit =
-    indices.zipWithIndex.foreach { case (fieldIdx, pos) =>
-      val v = if (row.isNullAt(fieldIdx)) null else row.get(fieldIdx)
-      ps.setObject(pos + 1, v)
-    }
-
-  /** Apply one partition's rows through a live connection: tombstones to
-    * the DELETE statement, the rest to MERGE, flushing every `batchSize`
-    * with the retry policy, one transaction per flush. Driver- and
-    * executor-callable; the unit tests drive it with a proxy connection.
+  /** Apply one partition's rows through a live connection: every row
+    * to the one MERGE, its deletion flag bound from `isTombstone`,
+    * flushing every `batchSize` rows and at the end with the retry
+    * policy, one transaction per flush. Driver- and executor-callable;
+    * the unit tests drive it with a proxy connection.
     *
     * Correctness details:
     *  - rows are BUFFERED until flush and re-bound on every retry
     *    attempt — JDBC drivers clear a statement's batch once
     *    `executeBatch` is invoked, so retrying the bare call would
     *    silently execute an empty batch and drop rows;
-    *  - switching between upsert and delete flushes the other statement
-    *    first, so same-key operations within a partition apply in row
-    *    order (a tombstone followed by a re-insert must not resolve to
-    *    "deleted"). Runs of one kind still batch up to `batchSize`.
+    *  - a deletion row binds its key columns and the flag, every other
+    *    parameter NULL — the same values a key-only DELETE carries;
+    *  - with `deleteEnabled = false` tombstones are dropped before they
+    *    are buffered (`behavior.on.null.values=ignore`,
+    *    start-sink-connector.sh:81).
     */
   def applyPartition(
       rows: Iterator[Row],
@@ -454,8 +470,6 @@ object JdbcMerge {
       isTombstone: Row => Boolean,
       conn: Connection,
       sleep: Long => Unit = Thread.sleep): Unit = {
-    val keySchema = StructType(schema.fields.filter(f => cfg.keyCols.contains(f.name)))
-    val keyIdx = cfg.keyCols.map(schema.fieldIndex)
     // Derby keeps MERGE execution state in the compiled plan, and its
     // statement cache shares one plan between connections that prepare
     // the same text: concurrent partitions then fail inside Derby
@@ -465,51 +479,44 @@ object JdbcMerge {
     val partitionTag =
       Option(org.apache.spark.TaskContext.get()).fold("")(t => s" /* partition ${t.partitionId} */")
     val merge = conn.prepareStatement(mergeSql(cfg, schema) + partitionTag)
-    val delete = conn.prepareStatement(deleteSql(cfg))
-    val mergeBind = cfg.dialect.mergeBindIndices(cfg, schema)
-    // tombstone rows are re-packed to key-only Rows; DELETE's `?`s are
-    // the keys in cfg.keyCols order on every dialect
-    val deleteBind = keySchema.fields.indices
-    val pendingMerge = scala.collection.mutable.ArrayBuffer[Row]()
-    val pendingDelete = scala.collection.mutable.ArrayBuffer[Row]()
+    val slots = cfg.dialect.mergeBindIndices(cfg, schema).zipWithIndex
+    val isKey = schema.fields.map(f => cfg.keyCols.contains(f.name))
+    val pending = scala.collection.mutable.ArrayBuffer[(Row, Boolean)]()
+    def bind(row: Row, deletion: Boolean): Unit =
+      slots.foreach { case (fieldIdx, pos) =>
+        val v =
+          if (fieldIdx == DeletionFlag) java.lang.Boolean.valueOf(deletion)
+          else if ((deletion && !isKey(fieldIdx)) || row.isNullAt(fieldIdx)) null
+          else row.get(fieldIdx)
+        merge.setObject(pos + 1, v)
+      }
     // Roll back between attempts: servers that abort the transaction on
     // error (MSSQL deadlock victim) reject every statement until rollback,
     // so retrying on the dead transaction would exhaust retries pointlessly.
     val rollbackQuietly: () => Unit =
       () => try conn.rollback() catch { case _: Exception => () }
-    def flush(
-        ps: PreparedStatement,
-        pending: scala.collection.mutable.ArrayBuffer[Row],
-        bindIdx: Seq[Int]): Unit =
+    def flush(): Unit =
       if (pending.nonEmpty) {
         // commit is INSIDE the retried block — a transient commit failure
         // re-binds and re-applies the batch (idempotent by key) instead of
         // aborting the task unretried.
-        withRetries(cfg.maxRetries, cfg.retryBackoffMs, sleep, rollbackQuietly) {
-          ps.clearBatch() // drop any half-added batch from a failed attempt
-          pending.foreach { r => bindRow(ps, r, bindIdx); ps.addBatch() }
-          ps.executeBatch()
+        withRetries(cfg.maxRetries, cfg.retryBackoffMs, sleep, rollbackQuietly,
+            () => conn.isClosed) {
+          merge.clearBatch() // drop any half-added batch from a failed attempt
+          pending.foreach { case (r, d) => bind(r, d); merge.addBatch() }
+          merge.executeBatch()
           conn.commit()
         }
         pending.clear()
       }
-    def flushMerges(): Unit = flush(merge, pendingMerge, mergeBind)
-    def flushDeletes(): Unit = flush(delete, pendingDelete, deleteBind)
     rows.foreach { row =>
-      if (isTombstone(row)) {
-        if (cfg.deleteEnabled) {
-          flushMerges() // preserve same-key operation order across kinds
-          pendingDelete += Row.fromSeq(keyIdx.map(row.get))
-          if (pendingDelete.size >= cfg.batchSize) flushDeletes()
-        } // else: behavior.on.null.values=ignore (start-sink-connector.sh:81)
-      } else {
-        flushDeletes()
-        pendingMerge += row
-        if (pendingMerge.size >= cfg.batchSize) flushMerges()
+      val deletion = isTombstone(row)
+      if (cfg.deleteEnabled || !deletion) {
+        pending += ((row, deletion))
+        if (pending.size >= cfg.batchSize) flush()
       }
     }
-    flushMerges()
-    flushDeletes()
+    flush()
   }
 
   /** The driver-side DDL phase of one micro-batch: `auto.create` (C4/D9,

@@ -244,8 +244,8 @@ object ReplicationPipeline {
     * from the uppercased `keyFields` (restating them in `sink.keyCols`
     * was a mismatch-prone duplicate knob — wrong case meant a nullable
     * key plus a PRIMARY KEY on a non-existent column at runtime). The
-    * order carries through to the PRIMARY KEY and the MERGE/DELETE
-    * predicates ([[graft.sink.JdbcMerge]] keys are a Seq everywhere). */
+    * order carries through to the PRIMARY KEY and the MERGE's ON
+    * predicate ([[graft.sink.JdbcMerge]] keys are a Seq everywhere). */
   private def derivedSink(cfg: Config): JdbcMerge.Config =
     cfg.sink.copy(keyCols = cfg.keyFields.map(_.toUpperCase(Locale.ROOT)))
 
@@ -429,35 +429,15 @@ object ReplicationPipeline {
       wire: WireConfig,
       cfg: Config,
       connect: () => Connection): StreamingQuery = {
-    ChangelogStream.configure(frame.sparkSession)
     val (valueRegistry, latestId) = SchemaRegistry.resolveSubject(wire.registry, wire.subject)
     val keyed = frame.select(
       keyDecode(wire).as("kafka_key"),
       col("value"), col("offset"))
-    val schema = keyed.schema
-    // validate against the DECODED key type (the normalized form the
-    // rows actually carry), not the raw declaration
-    requireScalarKeyFields(
-      schema("kafka_key").dataType.asInstanceOf[StructType], cfg.keyFields)
-    val keyFieldIdxs = cfg.keyFields.map(wire.keySchema.fieldIndex)
-    val offsetIdx = schema.fieldIndex("offset")
-    implicit val rowEnc = Encoders.row(schema)
-    implicit val strEnc = Encoders.STRING
-    val sinkCfg = derivedSink(cfg)
-    val latest = ChangelogStream.latestByKey[String, Row](
-      keyed.as(rowEnc),
-      key = stateKeyExtractor(0, keyFieldIdxs, cfg.keyFields, offsetIdx),
-      seq = r => r.getLong(offsetIdx))
-    ChangelogStream.emitChanges(latest, cfg.checkpointDir, cfg.trigger) {
-      (batch, batchId) =>
-        val envelope = batch.toDF().select(
-          col("kafka_key"),
-          KafkaWire.avroDecodeRegistry(col("value"), valueRegistry, latestId)
-            .as("kafka_value"),
-          col("offset"))
-        JdbcMerge.sink(sinkCfg, isDeletion, connect)(
-          flatten(envelope, cfg.keyFields, cfg.projectCols), batchId)
-    }
+    run(keyed, cfg, connect)(_.select(
+      col("kafka_key"),
+      KafkaWire.avroDecodeRegistry(col("value"), valueRegistry, latestId)
+        .as("kafka_value"),
+      col("offset")))
   }
 
   /** Start the continuous replication: envelope stream in, target table
@@ -469,18 +449,29 @@ object ReplicationPipeline {
   def start(
       envelope: DataFrame,
       cfg: Config,
-      connect: () => Connection): StreamingQuery = {
+      connect: () => Connection): StreamingQuery =
+    run(envelope, cfg, connect)(identity)
+
+  /** The one body of both streaming entry points: `keyed` is a
+    * streaming (kafka_key struct, <value>, offset long) frame, keyed
+    * into the changelog state as it is; `toEnvelope` turns each emitted
+    * micro-batch into envelope rows (identity for [[start]], the
+    * registry value decode for [[startFromFrame]]) before flatten and
+    * the sink. */
+  private def run(keyed: DataFrame, cfg: Config, connect: () => Connection)(
+      toEnvelope: DataFrame => DataFrame): StreamingQuery = {
     // the one-call facade owns its own runtime setup: RocksDB-backed
     // state (the documented scale contract — heap-backed default state
     // would grow memory ∝ distinct keys)
-    ChangelogStream.configure(envelope.sparkSession)
+    ChangelogStream.configure(keyed.sparkSession)
     val sinkCfg = derivedSink(cfg)
-    val schema = envelope.schema
+    val schema = keyed.schema
     val keyIdx = schema.fieldIndex("kafka_key")
-    requireScalarKeyFields(
-      schema("kafka_key").dataType.asInstanceOf[StructType], cfg.keyFields)
-    val keyFieldIdxs = cfg.keyFields.map(schema("kafka_key").dataType
-      .asInstanceOf[StructType].fieldIndex)
+    // validate against the DECODED key type (the normalized form the
+    // rows actually carry), not a raw declaration
+    val keyType = schema(keyIdx).dataType.asInstanceOf[StructType]
+    requireScalarKeyFields(keyType, cfg.keyFields)
+    val keyFieldIdxs = cfg.keyFields.map(keyType.fieldIndex)
     val offsetIdx = schema.fieldIndex("offset")
     implicit val rowEnc = Encoders.row(schema)
     implicit val strEnc = Encoders.STRING
@@ -488,13 +479,13 @@ object ReplicationPipeline {
     // the scalar key types the reference uses (int identity),
     // encoder-friendly for any
     val latest = ChangelogStream.latestByKey[String, Row](
-      envelope.as(rowEnc),
+      keyed.as(rowEnc),
       key = stateKeyExtractor(keyIdx, keyFieldIdxs, cfg.keyFields, offsetIdx),
       seq = r => r.getLong(offsetIdx))
     ChangelogStream.emitChanges(latest, cfg.checkpointDir, cfg.trigger) {
       (batch, batchId) =>
         JdbcMerge.sink(sinkCfg, isDeletion, connect)(
-          flatten(batch.toDF(), cfg.keyFields, cfg.projectCols), batchId)
+          flatten(toEnvelope(batch.toDF()), cfg.keyFields, cfg.projectCols), batchId)
     }
   }
 }

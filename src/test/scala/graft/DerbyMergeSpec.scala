@@ -3,6 +3,7 @@ package graft
 import java.sql.{Connection, DriverManager, Timestamp}
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -104,8 +105,8 @@ class DerbyMergeSpec extends SparkTestBase {
     withConn("d_roundtrip") { conn =>
       JdbcMerge.ensureTable(c, schema, conn)
       // insert 3, update key 1 in the same partition, delete key 2,
-      // delete-then-reinsert key 3 — same-key order must hold across the
-      // MERGE/DELETE statement switch, through real batches of 2
+      // delete-then-reinsert key 3 — same-key order must hold across
+      // real batches of 2 of the one MERGE
       val rows = Iterator(
         row(1L, "v1", 0.1), row(2L, "two", 0.2), row(3L, "three", 0.3),
         row(1L, "v2", 0.9), tomb(2L), tomb(3L), row(3L, "reborn", 0.33))
@@ -118,6 +119,32 @@ class DerbyMergeSpec extends SparkTestBase {
       assert(r1(3) == true && r1(4) == ts)
       assert(r1(5) == Seq[Byte](1, 2, 3))
       assert(got(1)(1) == "reborn")
+    }
+    // same-key order inside ONE flush, and both deletion forms: a raw
+    // tombstone (__DELETED NULL) binds its key only; an op=d rewrite row
+    // (__DELETED='true') carries non-key values, which must neither
+    // survive nor be inserted for an absent key
+    val flagged = StructType(Seq(
+      StructField("ID", LongType, nullable = false),
+      StructField("TITLE", StringType),
+      StructField("__DELETED", StringType)))
+    def frow(id: Long, title: String, deleted: String): Row =
+      new GenericRowWithSchema(Array[Any](id, title, deleted), flagged)
+    val one = cfg("order_sink").copy(batchSize = 100)
+    withConn("d_roundtrip") { conn =>
+      JdbcMerge.ensureTable(one, flagged, conn)
+      JdbcMerge.applyPartition(
+        Iterator(frow(1L, "v1", "false"), frow(4L, "four", "false"), frow(5L, "five", "false")),
+        flagged, one, ReplicationPipeline.isDeletion, conn)
+      JdbcMerge.applyPartition(Iterator(
+        frow(1L, null, null), frow(1L, "reborn", "false"), // delete, then re-insert
+        frow(2L, "two", "false"), frow(2L, null, null),    // insert, then delete
+        frow(3L, null, null),                              // delete of an absent key
+        frow(4L, "four", "true"),                          // op=d row of a live key
+        frow(6L, "six", "true")),                          // op=d row of an absent key
+        flagged, one, ReplicationPipeline.isDeletion, conn)
+      assert(selectAll(conn, "order_sink") ==
+        Seq(Seq(1L, "reborn", "false"), Seq(5L, "five", "false")))
     }
   }
 
@@ -180,8 +207,11 @@ class DerbyMergeSpec extends SparkTestBase {
     val parts = 4
     val iterations = 40
     val keys = 1L to 2000L
-    // every fifth key a tombstone, so MERGE and DELETE flushes alternate
-    def title(k: Long, v: String): Option[String] = Option(s"$v-$k").filter(_ => k % 5 != 0)
+    // a fifth of each batch are tombstones, so the MERGE's DELETE clause
+    // runs concurrently too: v1's delete absent keys, v2's delete keys
+    // v1 inserted (and v2 inserts the keys v1 tombstoned)
+    def title(k: Long, v: String): Option[String] =
+      Option(s"$v-$k").filter(_ => k % 5 != (if (v == "v1") 0 else 1))
     val failed = (1 to iterations).flatMap { i =>
       val table = s"widen_race_$i"
       val c = Config(table, keyCols = Seq("ID"), dialect = JdbcMerge.Derby, retryBackoffMs = 0L)
@@ -196,7 +226,7 @@ class DerbyMergeSpec extends SparkTestBase {
         catch { case e: Exception => Some(s"$table batch $batch: $e") }
       attempt(v1, 0L).orElse(attempt(v2, 1L)).orElse {
         val got = withConn("d_widen_race")(selectAll(_, table))
-        val want = keys.filter(_ % 5 != 0).map(k => Seq(k, s"v2-$k", k.toInt))
+        val want = keys.filter(_ % 5 != 1).map(k => Seq(k, s"v2-$k", k.toInt))
         if (got == want) None else Some(s"$table: wrong rows ${got.diff(want)}")
       }
     }
@@ -231,11 +261,12 @@ class DerbyMergeSpec extends SparkTestBase {
   test("at-least-once replay converges: crash after a partial commit, replay with evolve widening equals single-shot") {
     // The sink's delivery contract (JdbcMerge scaladoc): a failure
     // mid-batch leaves a partially-applied table; replaying the SAME
-    // micro-batch converges to the single-shot result because MERGE and
-    // DELETE are idempotent by key. Injected here against the real
-    // engine: the crash lands at the SECOND commit of a partition — the
-    // first flush (a MERGE) is durably committed, the tombstone-DELETE
-    // flush dies — and the replay additionally carries a WIDER schema
+    // micro-batch converges to the single-shot result because the
+    // upsert-or-delete MERGE is idempotent by key. Injected here against
+    // the real engine: the crash lands at the SECOND commit of a
+    // partition — the first flush (inserts of keys 3 and 4) is durably
+    // committed, the second (key 3's tombstone and re-insert) dies — and
+    // the replay additionally carries a WIDER schema
     // (auto.evolve fires mid-replay), mirroring the reference sink's
     // retry posture (start-sink-connector.sh:79-80) plus a schema change
     // racing the retry.
@@ -249,7 +280,7 @@ class DerbyMergeSpec extends SparkTestBase {
     // pipeline feeds the sink, so parallel replay tasks cannot interleave
     // on a key
     val p1 = Seq(Row(1L, "v1"), Row(2L, "two"), Row(1L, "v2"), Row(2L, null))
-    val p2 = Seq(Row(3L, "three"), Row(3L, null), Row(3L, "reborn"), Row(4L, "four"))
+    val p2 = Seq(Row(3L, "three"), Row(4L, "four"), Row(3L, null), Row(3L, "reborn"))
     def widen(r: Row): Row =
       if (isTomb(r)) Row(r.get(0), null, null) else Row(r.get(0), r.get(1), 7)
 
@@ -258,8 +289,8 @@ class DerbyMergeSpec extends SparkTestBase {
       JdbcMerge.ensureTable(c, base, conn)
       JdbcMerge.applyPartition(p1.iterator, base, c, isTomb, conn)
     }
-    // partition 2 crashes at its second commit: flush #1 (MERGE of key 3)
-    // is durable, flush #2 (the DELETE of key 3) never lands
+    // partition 2 crashes at its second commit: flush #1 (keys 3 and 4)
+    // is durable, flush #2 (key 3's delete and re-insert) never lands
     val real = DerbyDb.connect("d_replay")
     real.setAutoCommit(false)
     var commits = 0
@@ -284,7 +315,8 @@ class DerbyMergeSpec extends SparkTestBase {
     } finally { try real.rollback() catch { case _: Exception => () }; real.close() }
     // the table is genuinely partial — not empty, not final
     withConn("d_replay") { conn =>
-      assert(selectAll(conn, "d_replay") == Seq(Seq(1L, "v2"), Seq(3L, "three")),
+      assert(selectAll(conn, "d_replay") ==
+        Seq(Seq(1L, "v2"), Seq(3L, "three"), Seq(4L, "four")),
         "injection must leave the documented partial state")
     }
 
@@ -395,7 +427,7 @@ class DerbyMergeSpec extends SparkTestBase {
     // the auto-created table exists in Derby with the pipeline's
     // projected schema and holds exactly the replicated live state —
     // BOTH deletion forms (rewrite record flagged __deleted='true' and
-    // the raw tombstone) resolve to real SQL DELETEs (delete.enabled),
+    // the raw tombstone) resolve to the MERGE's DELETE (delete.enabled),
     // so key 3 is gone despite its rewrite record carrying a full image
     withConn("d_repl") { conn =>
       val st = conn.createStatement()

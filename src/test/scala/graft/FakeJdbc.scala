@@ -14,7 +14,7 @@ object FakeJdbc {
     * pending command list whether it succeeds or throws (JDBC spec), so a
     * caller that naively retries the bare call re-executes an empty
     * batch — `batches` records only successfully executed binds. */
-  class FakeStatement(val sql: String) {
+  class FakeStatement(val sql: String, lost: () => Boolean = () => false) {
     val current = mutable.Map[Int, Any]()
     val pending = mutable.ArrayBuffer[Seq[Any]]()
     val batches = mutable.ArrayBuffer[Seq[Any]]() // successfully executed binds
@@ -38,6 +38,7 @@ object FakeJdbc {
               failuresToInject -= 1
               throw new RuntimeException("injected executeBatch failure")
             }
+            if (lost()) throw noConnection()
             batches ++= snapshot
             executions += snapshot.size
             Array.fill(snapshot.size)(1)
@@ -47,7 +48,20 @@ object FakeJdbc {
       }).asInstanceOf[PreparedStatement]
   }
 
-  class FakeConnection(failuresPerStatement: Int = 0) {
+  /** Derby's failure once a session-severity error has closed the
+    * connection. */
+  def noConnection(): java.sql.SQLNonTransientConnectionException =
+    new java.sql.SQLNonTransientConnectionException("No current connection.", "08003")
+
+  /** `loseAfterFailures`: once a statement's injected failures are used
+    * up, the connection is gone — every later executeBatch, commit and
+    * rollback fails with [[noConnection]], as on Derby after a
+    * session-severity error. `reportsClosed` makes `isClosed` say so
+    * too; left false, only the exception type tells. */
+  class FakeConnection(
+      failuresPerStatement: Int = 0,
+      loseAfterFailures: Boolean = false,
+      reportsClosed: Boolean = false) {
     val statements = mutable.ArrayBuffer[FakeStatement]()
     val ddl = mutable.ArrayBuffer[String]()
     var commits = 0
@@ -61,6 +75,9 @@ object FakeJdbc {
     var currentSchema: String = "dbo"
     /** Recorded (schemaPattern, tablePattern) of each getColumns call. */
     val metaQueries = mutable.ArrayBuffer[(String, String)]()
+
+    private def lost: Boolean =
+      loseAfterFailures && statements.exists(_.failuresToInject < failuresPerStatement)
 
     private def resultSetFor(rows: Seq[(String, String)]): java.sql.ResultSet = {
       var idx = -1
@@ -100,7 +117,7 @@ object FakeJdbc {
       new InvocationHandler {
         def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
           case "prepareStatement" =>
-            val st = new FakeStatement(args(0).asInstanceOf[String])
+            val st = new FakeStatement(args(0).asInstanceOf[String], () => lost)
             st.failuresToInject = failuresPerStatement
             statements += st
             st.proxy
@@ -115,6 +132,8 @@ object FakeJdbc {
                   case other => throw new UnsupportedOperationException(other)
                 }
               })
+          case "commit" | "rollback" if lost => throw noConnection()
+          case "isClosed" => java.lang.Boolean.valueOf(reportsClosed && lost)
           case "commit" =>
             if (commitFailuresToInject > 0) {
               commitFailuresToInject -= 1

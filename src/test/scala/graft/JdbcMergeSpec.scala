@@ -27,8 +27,9 @@ class JdbcMergeSpec extends SparkTestBase {
     assert(JdbcMerge.mergeSql(cfg, schema) ==
       "MERGE INTO [movies_sink] AS t USING (VALUES (?, ?, ?)) AS s ([ID], [TITLE], [RATING]) " +
         "ON t.[ID] = s.[ID] " +
+        "WHEN MATCHED AND ? = 1 THEN DELETE " +
         "WHEN MATCHED THEN UPDATE SET [TITLE] = s.[TITLE], [RATING] = s.[RATING] " +
-        "WHEN NOT MATCHED THEN INSERT ([ID], [TITLE], [RATING]) " +
+        "WHEN NOT MATCHED AND ? = 0 THEN INSERT ([ID], [TITLE], [RATING]) " +
         "VALUES (s.[ID], s.[TITLE], s.[RATING]);")
   }
 
@@ -36,13 +37,30 @@ class JdbcMergeSpec extends SparkTestBase {
     val keyOnly = StructType(Seq(StructField("ID", IntegerType, nullable = false)))
     assert(JdbcMerge.mergeSql(cfg, keyOnly) ==
       "MERGE INTO [movies_sink] AS t USING (VALUES (?)) AS s ([ID]) ON t.[ID] = s.[ID] " +
-        "WHEN NOT MATCHED THEN INSERT ([ID]) VALUES (s.[ID]);")
+        "WHEN MATCHED AND ? = 1 THEN DELETE " +
+        "WHEN NOT MATCHED AND ? = 0 THEN INSERT ([ID]) VALUES (s.[ID]);")
   }
 
-  test("deleteSql deletes by the record key only") {
-    assert(JdbcMerge.deleteSql(cfg) == "DELETE FROM [movies_sink] WHERE [ID] = ?")
-    assert(JdbcMerge.deleteSql(cfg.copy(keyCols = Seq("A", "B"))) ==
-      "DELETE FROM [movies_sink] WHERE [A] = ? AND [B] = ?")
+  test("the MERGE's DELETE clause deletes by the record key only") {
+    // the tombstone handler is the MERGE's flag-guarded WHEN MATCHED …
+    // DELETE: the row is chosen by the ON predicate alone — the record
+    // key, every key column of a composite one — and nothing else
+    def deletePart(sql: String): String =
+      sql.substring(0, sql.indexOf(" THEN DELETE ") + " THEN DELETE".length)
+    assert(deletePart(JdbcMerge.mergeSql(cfg, schema)) ==
+      "MERGE INTO [movies_sink] AS t USING (VALUES (?, ?, ?)) AS s ([ID], [TITLE], [RATING]) " +
+        "ON t.[ID] = s.[ID] WHEN MATCHED AND ? = 1 THEN DELETE")
+    val ab = StructType(Seq(
+      StructField("A", IntegerType, nullable = false),
+      StructField("B", IntegerType, nullable = false),
+      StructField("TITLE", StringType)))
+    assert(deletePart(JdbcMerge.mergeSql(cfg.copy(keyCols = Seq("A", "B")), ab)) ==
+      "MERGE INTO [movies_sink] AS t USING (VALUES (?, ?, ?)) AS s ([A], [B], [TITLE]) " +
+        "ON t.[A] = s.[A] AND t.[B] = s.[B] WHEN MATCHED AND ? = 1 THEN DELETE")
+    val dcfg = cfg.copy(keyCols = Seq("A", "B"), dialect = JdbcMerge.Derby)
+    assert(deletePart(JdbcMerge.mergeSql(dcfg, ab)) ==
+      "MERGE INTO \"movies_sink\" AS t USING SYSIBM.SYSDUMMY1 " +
+        "ON t.\"A\" = ? AND t.\"B\" = ? WHEN MATCHED AND CAST(? AS BOOLEAN) THEN DELETE")
   }
 
   test("composite keyCols: MERGE joins on every key, UPDATE excludes them, PK spans them in order") {
@@ -58,8 +76,9 @@ class JdbcMergeSpec extends SparkTestBase {
     assert(JdbcMerge.mergeSql(ccfg, cSchema) ==
       "MERGE INTO [orders_sink] AS t USING (VALUES (?, ?, ?)) AS s ([TENANT], [ID], [TITLE]) " +
         "ON t.[TENANT] = s.[TENANT] AND t.[ID] = s.[ID] " +
+        "WHEN MATCHED AND ? = 1 THEN DELETE " +
         "WHEN MATCHED THEN UPDATE SET [TITLE] = s.[TITLE] " +
-        "WHEN NOT MATCHED THEN INSERT ([TENANT], [ID], [TITLE]) " +
+        "WHEN NOT MATCHED AND ? = 0 THEN INSERT ([TENANT], [ID], [TITLE]) " +
         "VALUES (s.[TENANT], s.[ID], s.[TITLE]);")
     // the string KEY column gets the largest INDEXABLE size — SQL
     // Server rejects MAX-typed columns in a PRIMARY KEY (900-byte index
@@ -68,11 +87,13 @@ class JdbcMergeSpec extends SparkTestBase {
     assert(JdbcMerge.createTableSql(ccfg, cSchema).endsWith(
       "([TENANT] NVARCHAR(450) NOT NULL, [ID] INT NOT NULL, [TITLE] NVARCHAR(MAX), " +
         "PRIMARY KEY ([TENANT], [ID]))"))
-    // bind orders: T-SQL's VALUES row binds schema order; Derby's
-    // SYSDUMMY1 idiom binds keys (ON), non-keys (SET), then the full row
-    assert(JdbcMerge.TSql.mergeBindIndices(ccfg, cSchema) == Seq(0, 1, 2))
+    // bind orders: T-SQL's VALUES row binds schema order, then the two
+    // deletion flags; Derby's SYSDUMMY1 idiom binds keys (ON), flag,
+    // non-keys (SET), flag, then the full row (INSERT)
+    val F = JdbcMerge.DeletionFlag
+    assert(JdbcMerge.TSql.mergeBindIndices(ccfg, cSchema) == Seq(0, 1, 2, F, F))
     val dcfg = ccfg.copy(dialect = JdbcMerge.Derby)
-    assert(JdbcMerge.Derby.mergeBindIndices(dcfg, cSchema) == Seq(0, 1, 2, 0, 1, 2))
+    assert(JdbcMerge.Derby.mergeBindIndices(dcfg, cSchema) == Seq(0, 1, F, 2, F, 0, 1, 2))
   }
 
   test("createTableSql is idempotent auto-create DDL with a primary key") {
@@ -99,9 +120,10 @@ class JdbcMergeSpec extends SparkTestBase {
     assert(ddl.contains("CREATE TABLE [cso].[movies_sink] ([ORDER] INT NOT NULL, " +
       "[movie title] NVARCHAR(MAX), [x]]; DROP TABLE t; --] NVARCHAR(MAX), " +
       "PRIMARY KEY ([ORDER]))"))
-    assert(JdbcMerge.mergeSql(hcfg, hostile).contains("ON t.[ORDER] = s.[ORDER]"))
-    assert(JdbcMerge.deleteSql(hcfg) ==
-      "DELETE FROM [cso].[movies_sink] WHERE [ORDER] = ?")
+    assert(JdbcMerge.mergeSql(hcfg, hostile).startsWith(
+      "MERGE INTO [cso].[movies_sink] AS t USING (VALUES (?, ?, ?)) " +
+        "AS s ([ORDER], [movie title], [x]]; DROP TABLE t; --]) " +
+        "ON t.[ORDER] = s.[ORDER] WHEN MATCHED AND ? = 1 THEN DELETE "))
   }
 
   test("sqlType covers the reference's type surface") {
@@ -223,7 +245,9 @@ class JdbcMergeSpec extends SparkTestBase {
       widened, cfg, (r: Row) => r.isNullAt(1), conn2.proxy, _ => ())
     val merge = conn2.statements.find(_.sql.startsWith("MERGE")).get
     assert(merge.sql.contains("[RELEASE_YEAR]"))
-    assert(merge.batches.toSeq == Seq(Seq(1, "a", 1.0, 2024)))
+    // the tombstone (TITLE null) rides the same MERGE: key + flag only
+    assert(merge.batches.toSeq == Seq(
+      Seq(1, "a", 1.0, 2024, false, false), Seq(2, null, null, null, true, true)))
 
     // batch 3 — schema and table in sync again
     val conn3 = new FakeJdbc.FakeConnection
@@ -272,40 +296,41 @@ class JdbcMergeSpec extends SparkTestBase {
 
   test("applyPartition routes, batches and commits per the reference protocol") {
     val conn = new FakeConnection
-    // batchSize=2; kind switches force a flush of the other statement to
-    // preserve same-key operation order, so the runs flush as:
-    // m[1] | d[2] | m[3,4] | d[5] | m[6,7] | d[8]
+    // one statement for upserts and tombstones alike: batchSize=2 flushes
+    // the 8 rows as [1,2] [3,4] [5,6] [7,8], one transaction per flush
     JdbcMerge.applyPartition(
       rows((1, "a", 1.0), (2, null, null), (3, "c", 3.0), (4, "d", 4.0),
            (5, null, null), (6, "f", 6.0), (7, "g", 7.0), (8, null, null)),
       schema, cfg.copy(batchSize = 2), isTombstone, conn.proxy, _ => ())
-    val Seq(merge, delete) = conn.statements.toSeq
+    val Seq(merge) = conn.statements.toSeq
     assert(merge.sql.startsWith("MERGE INTO [movies_sink]"))
-    assert(delete.sql == "DELETE FROM [movies_sink] WHERE [ID] = ?")
-    assert(merge.batches.toSeq ==
-      Seq(Seq(1, "a", 1.0), Seq(3, "c", 3.0), Seq(4, "d", 4.0), Seq(6, "f", 6.0), Seq(7, "g", 7.0)))
-    assert(delete.batches.toSeq == Seq(Seq(2), Seq(5), Seq(8))) // key-only binds
-    assert(merge.executions.toSeq == Seq(1, 2, 2))
-    assert(delete.executions.toSeq == Seq(1, 1, 1))
-    assert(conn.commits == 6) // one transaction per flush
+    // T-SQL binds (ID, TITLE, RATING, flag, flag); a tombstone binds its
+    // key and the flag, every other parameter NULL
+    assert(merge.batches.toSeq == Seq(
+      Seq(1, "a", 1.0, false, false), Seq(2, null, null, true, true),
+      Seq(3, "c", 3.0, false, false), Seq(4, "d", 4.0, false, false),
+      Seq(5, null, null, true, true), Seq(6, "f", 6.0, false, false),
+      Seq(7, "g", 7.0, false, false), Seq(8, null, null, true, true)))
+    assert(merge.executions.toSeq == Seq(2, 2, 2, 2))
+    assert(conn.commits == 4) // one transaction per flush
   }
 
   test("applyPartition keeps same-key operation order: delete then re-insert survives") {
     // A tombstone for key 1 followed by its re-insert in the SAME
-    // partition must apply in row order — flushing all merges after all
-    // deletes (or vice versa) would resolve key 1 to the wrong state.
+    // partition must apply in row order. All three go to ONE batch of
+    // the one MERGE, in row order — a JDBC batch executes in order, so
+    // key 1 resolves to the re-insert (DerbyMergeSpec executes it).
     val conn = new FakeConnection
     JdbcMerge.applyPartition(
       rows((1, "a", 1.0), (1, null, null), (1, "reborn", 2.0)),
       schema, cfg, isTombstone, conn.proxy, _ => ())
-    val ops = conn.statements.flatMap { st =>
-      st.batches.map(b => (if (st.sql.startsWith("MERGE")) "m" else "d", b.head))
-    }
-    // replay in recorded flush order via commits: merge[1], delete[1], merge[1]
-    val Seq(merge, delete) = conn.statements.toSeq
-    assert(merge.executions.toSeq == Seq(1, 1))
-    assert(delete.executions.toSeq == Seq(1))
-    assert(ops.count(_._1 == "m") == 2 && ops.count(_._1 == "d") == 1)
+    val Seq(merge) = conn.statements.toSeq
+    assert(merge.executions.toSeq == Seq(3))
+    assert(merge.batches.toSeq == Seq(
+      Seq(1, "a", 1.0, false, false),
+      Seq(1, null, null, true, true),
+      Seq(1, "reborn", 2.0, false, false)))
+    assert(conn.commits == 1)
   }
 
   test("applyPartition with delete.enabled=false ignores tombstones") {
@@ -313,9 +338,10 @@ class JdbcMergeSpec extends SparkTestBase {
     JdbcMerge.applyPartition(
       rows((1, "a", 1.0), (2, null, null)),
       schema, cfg.copy(deleteEnabled = false), isTombstone, conn.proxy, _ => ())
-    val Seq(merge, delete) = conn.statements.toSeq
-    assert(merge.batches.toSeq == Seq(Seq(1, "a", 1.0)))
-    assert(delete.batches.isEmpty && delete.executions.isEmpty)
+    val Seq(merge) = conn.statements.toSeq
+    // the tombstone is skipped before buffering: no row carries the flag
+    assert(merge.batches.toSeq == Seq(Seq(1, "a", 1.0, false, false)))
+    assert(merge.executions.toSeq == Seq(1))
   }
 
   test("applyPartition retries a failing flush with backoff, rolling back between attempts") {
@@ -344,7 +370,7 @@ class JdbcMergeSpec extends SparkTestBase {
     // the batch was re-bound and re-executed on the retry attempt
     assert(conn.statements.head.executions.toSeq == Seq(1, 1))
     assert(conn.statements.head.batches.toSeq ==
-      Seq(Seq(1, "a", 1.0), Seq(1, "a", 1.0)))
+      Seq(Seq(1, "a", 1.0, false, false), Seq(1, "a", 1.0, false, false)))
   }
 
   test("applyPartition exhausts retries and propagates the failure uncommitted") {
@@ -359,11 +385,37 @@ class JdbcMergeSpec extends SparkTestBase {
     assert(conn.rollbacks == 10) // one per retry attempt
   }
 
+  test("applyPartition does not retry on a lost connection") {
+    // one failure, then 08003 "No current connection" on every later
+    // call: at most one backoff, and the first failure — the cause — is
+    // carried by the thrown exception
+    val conn = new FakeConnection(failuresPerStatement = 1, loseAfterFailures = true)
+    val sleeps = mutable.ArrayBuffer[Long]()
+    val e = intercept[java.sql.SQLNonTransientConnectionException] {
+      JdbcMerge.applyPartition(
+        rows((1, "a", 1.0)), schema, cfg, isTombstone, conn.proxy, sleeps += _)
+    }
+    assert(sleeps.size <= 1, sleeps)
+    assert(e.getSQLState == "08003")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("injected executeBatch failure"))
+    assert(conn.commits == 0)
+    // a connection that reports isClosed after the failure: no backoff,
+    // the first failure itself is thrown
+    val closed = new FakeConnection(
+      failuresPerStatement = 1, loseAfterFailures = true, reportsClosed = true)
+    sleeps.clear()
+    val first = intercept[RuntimeException] {
+      JdbcMerge.applyPartition(
+        rows((1, "a", 1.0)), schema, cfg, isTombstone, closed.proxy, sleeps += _)
+    }
+    assert(first.getMessage == "injected executeBatch failure" && sleeps.isEmpty)
+  }
+
   test("null column values bind as SQL NULL in upserts") {
     val conn = new FakeConnection
     JdbcMerge.applyPartition(
       rows((1, "a", null)), // RATING null but TITLE present → still an upsert
       schema, cfg, isTombstone, conn.proxy, _ => ())
-    assert(conn.statements.head.batches.toSeq == Seq(Seq(1, "a", null)))
+    assert(conn.statements.head.batches.toSeq == Seq(Seq(1, "a", null, false, false)))
   }
 }

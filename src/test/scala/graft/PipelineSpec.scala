@@ -27,19 +27,18 @@ class PipelineSpec extends SparkTestBase {
     StructField("VALUE", DoubleType)))
   private val cfg = JdbcMerge.Config(table = "events_sink", keyCols = Seq("ID"))
 
-  /** Replay recorded MERGE/DELETE batches into a map — the "target DB". */
+  /** Replay recorded MERGE batches into a map — the "target DB". Each
+    * bound row is (ID, EVENT_ID, VALUE, flag, flag): a true deletion
+    * flag deletes the key, false upserts it. */
   private def replayDb(conn: FakeJdbc.FakeConnection): Map[Long, (Long, Double)] = {
     val db = scala.collection.mutable.Map[Long, (Long, Double)]()
-    // statements appear in prepare order per batch: merge, delete, merge, ...
-    // replay their batches in recorded order
+    // one MERGE per applied partition, in prepare order; replay their
+    // batches in recorded order
     conn.statements.foreach { st =>
       st.batches.foreach { row =>
-        if (st.sql.startsWith("MERGE")) {
-          db(row(0).asInstanceOf[Long]) =
-            (row(1).asInstanceOf[Long], row(2).asInstanceOf[Double])
-        } else if (st.sql.startsWith("DELETE")) {
-          db.remove(row(0).asInstanceOf[Long])
-        }
+        if (row.last == true) db.remove(row(0).asInstanceOf[Long])
+        else db(row(0).asInstanceOf[Long]) =
+          (row(1).asInstanceOf[Long], row(2).asInstanceOf[Double])
       }
     }
     db.toMap
@@ -66,7 +65,7 @@ class PipelineSpec extends SparkTestBase {
           col("user_id").as("ID"),
           when(!tomb, col("rec.event_id")).as("EVENT_ID"),
           when(!tomb, col("rec.value")).as("VALUE"))
-        // C1/C2: split + merge into the "database" (driver-side collect —
+        // C1/C2: upsert-or-delete merge into the "database" (driver-side collect —
         // the recording proxy is not serializable; the executor-side
         // path is covered by JdbcMergeSpec).
         JdbcMerge.applyPartition(

@@ -24,15 +24,18 @@ object ReplDb {
   }
   def reset(): Unit = synchronized(conns.clear())
 
-  /** Replay every connection's recorded MERGE/DELETE batches (creation
-    * order ≈ batch order; one row per key per batch) into target-DB
-    * state keyed by the first bind (USER_ID). */
+  /** Replay every connection's recorded MERGE batches (creation order ≈
+    * batch order; one row per key per batch) into target-DB state keyed
+    * by the first bind (USER_ID). A bound row is the sink row followed
+    * by the two deletion flags: true deletes the key, false upserts the
+    * row without them. */
   def state(): Map[Any, Seq[Any]] = synchronized {
     val db = scala.collection.mutable.Map[Any, Seq[Any]]()
     conns.foreach { conn =>
       conn.statements.foreach { st =>
-        if (st.sql.startsWith("MERGE")) st.batches.foreach(b => db(b.head) = b)
-        else st.batches.foreach(b => db.remove(b.head))
+        st.batches.foreach { b =>
+          if (b.last == true) db.remove(b.head) else db(b.head) = b.dropRight(2)
+        }
       }
     }
     db.toMap
